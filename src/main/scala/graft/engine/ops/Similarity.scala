@@ -462,7 +462,7 @@ object Similarity {
                       preGroups: Option[DataFrame] = None): DataFrame = {
     val spark = documents.sparkSession
     GraftFunctions.register(spark)
-    // preGroups (r18): the memoized [[sharedMinhashGroups]] collapse —
+    // preGroups (r18): the memoized [[Artifacts.minhashGroups]] collapse —
     // the estimator only reads (rep, hsh) of it (members unused)
     val groups = preGroups.map(_.select(col("rep"), col("hsh"))).getOrElse {
       documents.select(col(idCol).as("doc_id"),
@@ -680,17 +680,6 @@ object Similarity {
       .select("tj", "fj")
       .localCheckpoint()
   }
-
-  /** Session-memoized [[scoredEvalTable]] at the audit ladder's minimum:
-    * `q_dedup_eval` (the 0.9 point) and `q_dedup_eval_sweep` (the
-    * ladder) re-gate ONE materialization — the quadratic truth pass
-    * runs once per session, the shared-artifact discipline the pair
-    * graph and cluster table already follow. */
-  private[ops] def sharedEvalScores(s: SparkSession, d: String): DataFrame =
-    TextPipeline.memoizedPairs(s, d + "|evalscored") {
-      scoredEvalTable(Tables.documents(s, d), "doc_id", "text", 0.8,
-        preGroups = Some(sharedMinhashGroups(s, d)))
-    }
 
   /** One [[dedupEval]] confusion row derived from a scored pair table —
     * identical output contract to [[dedupEval]] at the same threshold
@@ -1112,69 +1101,21 @@ object Similarity {
       .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("dc"))
       .select(col("cell"), transform(col("dc"), x => x("c")).as("centroid"))
 
-  /** Session-memoized [[kmeansTrain]](embeddings, 3) final-round
-    * statistics — the ONE trained k-means model five declared queries
-    * consume (`q_kmeans_train` returns it; `q_ann_ivf_trained`,
-    * `q_cluster_prune`, `q_semantic_dedup_trained` and
-    * `q_cluster_balance` serve against its codebook fold). In
-    * production this is a versioned offline artifact trained once and
-    * served many times — each consumer re-running the 3-round Lloyd
-    * loop (3 eager checkpoints + 3 corpus passes each, ~8 near-empty
-    * AQE stage jobs per round at sf0.1) billed the train to every
-    * serve query. The r8 shared-artifact discipline applies verbatim:
-    * built once per session, forced by `graft.Bench` under its own
-    * `kmeans_stats` label, consumers measure pure serve cost. */
-  private[ops] def sharedKmeansStats(s: SparkSession, d: String): DataFrame =
-    TextPipeline.memoizedPairs(s, d + "|kmeans_stats3") {
-      kmeansTrain(Tables.embeddings(s, d), "vec_id", "embedding", 3)
-    }
-
   /** The broadcast-ready (cell, centroid) codebook over
-    * [[sharedKmeansStats]] — model-sized (≤ NCells rows), so the fold
+    * [[Artifacts.kmeansStats]] — model-sized (≤ NCells rows), so the fold
     * itself is trivial; memoization of the STATS is what removes the
     * repeated training loops. */
   private def sharedIvfCodebook(s: SparkSession, d: String): DataFrame =
-    statsToIvfCodebook(sharedKmeansStats(s, d))
+    statsToIvfCodebook(Artifacts.kmeansStats(s, d))
 
-  /** Session-memoized [[pqTrain]] statistics over the embeddings
-    * fixture — the single-round PQ model `q_pq_train` returns and
-    * `q_pq_encode` / `q_ann_ivfpq_trained` fold into sub-codebooks
-    * (same shared-model discipline as [[sharedKmeansStats]]). */
-  private[ops] def sharedPqStats(s: SparkSession, d: String): DataFrame =
-    TextPipeline.memoizedPairs(s, d + "|pq_stats1") {
-      pqTrain(Tables.embeddings(s, d), "vec_id", "embedding")
-    }
-
-  /** The trained PQ sub-codebooks folded from [[sharedPqStats]] — the
+  /** The trained PQ sub-codebooks folded from [[Artifacts.pqStats]] — the
     * ≤128-row (subspace, code, centroid) model every PQ consumer shares
     * (value-identical to `trainedPqCodebook(embeddings)`: [[pqTrain]]
     * IS [[pqStats]] plus a presentation sort the fold's groupBy
     * ignores). The fold itself is model-sized; memoizing the STATS is
     * what removes the repeated corpus training passes. */
   private[ops] def sharedPqCodebook(s: SparkSession, d: String): DataFrame =
-    statsToPqCodebook(sharedPqStats(s, d))
-
-  /** Session-memoized identical-token-set collapse of the corpus — the
-    * (rep, members, hsh) groups table EVERY same-corpus MinHash-LSH
-    * consumer re-derived per run (scan → token_set_hashes62 →
-    * groupBy(hsh)): the k=16 and k=32 near-dup queries, the hot-band
-    * salted variant, the estimator audit and the eval found-side all
-    * share it, and the k-wide signature is a cheap native projection
-    * OVER it, so the collapse is k-independent. In production this is
-    * the materialized content-collapse table a dedup stack persists
-    * next to its signatures; Bench forces it under the
-    * `minhash_groups` label (r8 attribution discipline). */
-  private[ops] def sharedMinhashGroups(s: SparkSession, d: String): DataFrame =
-    TextPipeline.memoizedPairs(s, d + "|minhash_groups") {
-      GraftFunctions.register(s)
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          call_function("token_set_hashes62", col("text")).as("hsh"))
-        .groupBy(col("hsh"))
-        .agg(sort_array(collect_list(col("doc_id"))).as("members"),
-             min(col("doc_id")).as("rep"))
-        .select(col("rep"), col("members"), col("hsh"))
-    }
+    statsToPqCodebook(Artifacts.pqStats(s, d))
 
   /** CORPUS-SIZED k-means codebook (r17, retiring the ladder's last
     * xl exemption): [[kmeansTrain]]/[[ivfCodebook]] are seeded from the
@@ -1524,7 +1465,7 @@ object Similarity {
     // the identical (rep, members, hsh) collapse is a pure function of
     // the corpus, re-derived by every same-corpus LSH consumer (k16,
     // k32, salted, the estimator, the eval found-side) — the memoized
-    // [[sharedMinhashGroups]] artifact feeds them all, the r8
+    // [[Artifacts.minhashGroups]] artifact feeds them all, the r8
     // shared-artifact discipline one level below the pair graph.
     val groups = preGroups.getOrElse {
       documents.select(
@@ -2379,20 +2320,6 @@ object Similarity {
       queryId, k)
   }
 
-  /** The FULLY-TRAINED production retrieval stack: k-means-trained
-    * coarse codebook ([[ivfCodebook]], `iters` Lloyd rounds) + Lloyd-
-    * trained PQ sub-codebooks ([[pqCodebook]]) serve the three-stage
-    * query (probe → ADC prune → exact rerank) — [[annIvfPqRerank]]
-    * with its literal coarse stand-in replaced by the trained model,
-    * closing train→serve across BOTH index levels. Hash-oracled end to
-    * end (trained centroids cross engines as floored-mean/10⁶ doubles). */
-  def annIvfPqRerankTrained(vectors: DataFrame, idCol: String, vecCol: String,
-                            iters: Int, queryId: Long, nCand: Int, k: Int): DataFrame =
-    annIvfPqRerankWith(vectors, idCol, vecCol,
-      ivfCodebook(vectors, idCol, vecCol, iters),
-      trainedPqCodebook(vectors, idCol, vecCol),
-      queryId, nCand, k)
-
   /** Maximal-Marginal-Relevance diversified top-k — the selection pass
     * retrieval feeds a context window or a curation sampler with:
     * greedily pick the candidate maximizing `5·rel − 3·max_sim_to_
@@ -2499,8 +2426,8 @@ object Similarity {
     "q_rank_fusion" -> ((s, d) =>
       rankFusion(Tables.documents(s, d), "doc_id", "text",
         Tables.embeddings(s, d), "vec_id", "embedding", 0, 20, 10,
-        preTokens = Some(TextPipeline.sharedCorpusTokens(s, d)),
-        preDl = Some(TextPipeline.sharedCorpusDl(s, d)))),
+        preTokens = Some(Artifacts.corpusTokens(s, d)),
+        preDl = Some(Artifacts.corpusDl(s, d)))),
     // SemDeDup closed to clusters: the cell-blocked cosine pair graph
     // through the SAME label-prop CC the text dedup uses (textCol is
     // dead weight with precomputed pairs — only the id universe reads)
@@ -2549,16 +2476,16 @@ object Similarity {
     // that the memoized artifact's eight other consumers share; the
     // declared output (ordered verified pairs) is byte-identical
     "q_dedup_minhash" -> ((s, d) =>
-      TextPipeline.sharedPairs(s, d).orderBy("doc_id_1", "doc_id_2")),
+      Artifacts.pairsFull(s, d).orderBy("doc_id_1", "doc_id_2")),
     // estimator-quality audit: signature-agreement Jaccard vs exact,
     // per verified pair — what k=16 granularity (625 bp) buys HERE
     "q_minhash_estimate" -> ((s, d) =>
       minhashEstimate(Tables.documents(s, d), "doc_id", "text", 0.9,
-        preGroups = Some(sharedMinhashGroups(s, d)))),
+        preGroups = Some(Artifacts.minhashGroups(s, d)))),
     // LSH banding-miss audit vs the exact all-pairs ground truth
     // both audits re-gate the ONE memoized scored pair table; outputs
     // are spec-pinned equal to the standalone dedupEval composition
-    "q_dedup_eval" -> ((s, d) => dedupEvalAt(sharedEvalScores(s, d), 0.9)),
+    "q_dedup_eval" -> ((s, d) => dedupEvalAt(Artifacts.evalScored(s, d), 0.9)),
     // the sample-tier audit the 100 TB plan actually runs: exact truth
     // on the deterministic 25% keyMix sample — quadratic cost /16
     "q_dedup_eval_sampled" -> ((s, d) =>
@@ -2566,7 +2493,7 @@ object Similarity {
     "q_dedup_eval_sweep" -> ((s, d) =>
       dedupEvalSweep(Tables.documents(s, d), "doc_id", "text",
         Seq(0.8, 0.85, 0.9, 0.95),
-        precomputedScores = Some(sharedEvalScores(s, d)))),
+        precomputedScores = Some(Artifacts.evalScored(s, d)))),
     // the high-recall parameter point under the SAME hash oracle: k=32
     // (prefix-stable family extension) in 4 bands × 8 rows lifts the
     // S-curve knee (P(candidate) at J=0.9 goes 0.68 → 0.89) at 2× the
@@ -2576,7 +2503,7 @@ object Similarity {
     "q_dedup_minhash_k32" -> ((s, d) =>
       minhashNearDup(Tables.documents(s, d), "doc_id", "text", 0.9,
         k = 32, bands = 4, rowsPerBand = 8,
-        preGroups = Some(sharedMinhashGroups(s, d)))),
+        preGroups = Some(Artifacts.minhashGroups(s, d)))),
     // delta-vs-index dedup: which "new" docs (id ≥ 250) near-dup the
     // standing reference corpus (id < 250) — the rolling-build shape
     "q_dedup_incremental" -> ((s, d) => {
@@ -2617,16 +2544,16 @@ object Similarity {
     // property test pins cap=2 for exhaustive branch coverage).
     "q_dedup_minhash_salted" -> ((s, d) =>
       minhashNearDup(Tables.documents(s, d), "doc_id", "text", 0.9, saltCap = Some(1024),
-        preGroups = Some(sharedMinhashGroups(s, d)))),
+        preGroups = Some(Artifacts.minhashGroups(s, d)))),
     "q_dedup_simhash" -> ((s, d) => simhashNearDup(Tables.documents(s, d), "doc_id", "text", 3)),
     "q_dedup_embedding" -> ((s, d) =>
       embeddingNearDup(withPlantedNearDups(Tables.embeddings(s, d)), "vec_id", "embedding", 0.99)),
     "q_kmeans_step" -> ((s, d) => kmeansStep(Tables.embeddings(s, d), "vec_id", "embedding")),
     // the trained family reads the ONE memoized 3-round model
-    // (sharedKmeansStats — the r8 shared-artifact discipline): the
+    // (Artifacts.kmeansStats — the r8 shared-artifact discipline): the
     // train is forced and timed by Bench under its own label, the five
     // consumer queries measure serve cost
-    "q_kmeans_train" -> ((s, d) => sharedKmeansStats(s, d)),
+    "q_kmeans_train" -> ((s, d) => Artifacts.kmeansStats(s, d)),
     // the trained-IVF serve path: kmeansTrain's codebook drives the
     // broadcast-codebook ANN — train with one operator, serve with the
     // other, both under the hash oracle
@@ -2639,14 +2566,14 @@ object Similarity {
     "q_embed_quantize" -> ((s, d) => quantizeEmbeddings(Tables.embeddings(s, d), "vec_id", "embedding")),
     "q_ann_quantized" -> ((s, d) => annQuantized(Tables.embeddings(s, d), "vec_id", "embedding", 0, 10)),
     // q_pq_train returns the memoized single-round PQ stats (the same
-    // shared-model discipline as sharedKmeansStats: q_pq_encode and the
+    // shared-model discipline as Artifacts.kmeansStats: q_pq_encode and the
     // trained IVFPQ stack fold the identical stats into sub-codebooks)
-    "q_pq_train" -> ((s, d) => sharedPqStats(s, d)),
+    "q_pq_train" -> ((s, d) => Artifacts.pqStats(s, d)),
     "q_pq_train_iters" -> ((s, d) =>
       pqTrainIters(Tables.embeddings(s, d), "vec_id", "embedding", 2)),
     "q_pq_encode" -> ((s, d) =>
       pqEncode(Tables.embeddings(s, d), "vec_id", "embedding",
-        statsToPqCodebook(sharedPqStats(s, d)))
+        statsToPqCodebook(Artifacts.pqStats(s, d)))
         .orderBy("vec_id", "subspace")),
     // the PQ serve family reads the ONE memoized single-round PQ model
     // (sharedPqCodebook — value-identical to the inline train each
@@ -2668,7 +2595,7 @@ object Similarity {
     // the fully-trained stack: kmeans coarse codebook (2 Lloyd rounds —
     // the oracle's CTE namespace caps it) + trained PQ sub-codebooks
     // serving probe → ADC → exact rerank; the PQ sub-codebooks fold the
-    // memoized sharedPqStats model (identical frame — pqCodebook is
+    // memoized Artifacts.pqStats model (identical frame — pqCodebook is
     // statsToPqCodebook ∘ pqTrain)
     "q_ann_ivfpq_trained" -> ((s, d) =>
       annIvfPqRerankWith(Tables.embeddings(s, d), "vec_id", "embedding",
@@ -2704,8 +2631,8 @@ object Similarity {
     "q_hybrid_rerank" -> ((s, d) =>
       hybridRerank(Tables.documents(s, d), "doc_id", "text",
         Tables.embeddings(s, d), "vec_id", "embedding", 0, 20, 25,
-        preTokens = Some(TextPipeline.sharedCorpusTokens(s, d)),
-        preDl = Some(TextPipeline.sharedCorpusDl(s, d)))),
+        preTokens = Some(Artifacts.corpusTokens(s, d)),
+        preDl = Some(Artifacts.corpusDl(s, d)))),
   )
 
   /** The synthetic embeddings are near-orthogonal (max pair cosine ~0.5 at

@@ -285,4 +285,41 @@ class PipelineSpec extends SparkSuite {
     assert(rows(2) == ("3_near", 3L, 1L, 2L, 91L),
       s"tier 3 must drop 95 (rep 1 survives) and SPARE 90 (rep 85 died): ${rows(2)}")
   }
+
+  // The session-artifact registry: one entry per (session, sfDir, name),
+  // built once and handed back by identity; nested builds run outside
+  // the map, so a consumer may be forced before its dependencies.
+  test("Artifacts: repeated lookups share one handle; a new session gets its own") {
+    val s1 = spark.newSession()
+    val s2 = spark.newSession()
+    assert(Artifacts.pairsFull(s1, sfDir) eq Artifacts.pairsFull(s1, sfDir))
+    assert(Artifacts.twins(s1, sfDir) eq Artifacts.twins(s1, sfDir))
+    assert(!(Artifacts.pairsFull(s2, sfDir) eq Artifacts.pairsFull(s1, sfDir)))
+    assert(Artifacts.held(s2) == Set("minhash_groups", "pairs_full"))
+  }
+
+  test("Artifacts: clusters forced before pairs_full builds its dependencies in place") {
+    val nested = spark.newSession()
+    val clusters = Artifacts.clusters(nested, sfDir).collect().map(_.toString).sorted
+    assert(Artifacts.held(nested) == Set("minhash_groups", "pairs_full", "clusters"))
+    val ordered = spark.newSession()
+    val builders = TextPipeline.sharedArtifactBuilders(ordered, sfDir)
+    val upTo = builders.map(_._1).indexOf("clusters")
+    val forced = builders.take(upTo + 1).map { case (_, build) => build().collect() }
+    assert(clusters.nonEmpty && clusters.length == forced.last.length)
+    assert(clusters.toSeq == forced.last.map(_.toString).sorted.toSeq)
+  }
+
+  test("Artifacts: forcing the Bench labels in declared order adds one entry per label") {
+    val s = spark.newSession()
+    val builders = TextPipeline.sharedArtifactBuilders(s, sfDir)
+    val labels = builders.map(_._1)
+    assert(labels.distinct == labels)
+    assert(Seq("minhash_groups", "pairs_full", "clusters").forall(labels.contains))
+    builders.zipWithIndex.foreach { case ((label, build), i) =>
+      build().count()
+      assert(Artifacts.held(s) == labels.take(i + 1).toSet,
+        s"forcing $label must add exactly its own entry: ${Artifacts.held(s)}")
+    }
+  }
 }

@@ -2154,7 +2154,7 @@ class TextSimilaritySpec extends SparkSuite {
     }
   }
 
-  // r18: the shared identical-token-set collapse (sharedMinhashGroups) feeds
+  // r18: the shared identical-token-set collapse (Artifacts.minhashGroups) feeds
   // minhashNearDup / minhashEstimate / the eval truth pass via preGroups.
   // Pin every seam byte-equal to the doc-level recompute it replaces — in
   // particular the rep-level truth pass, whose member re-expansion (cross
