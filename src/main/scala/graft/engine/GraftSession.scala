@@ -14,7 +14,16 @@ import org.apache.spark.sql.SparkSession
   *    which Spark 4 otherwise refuses to read (Tables.events then
   *    truncates ns→µs, matching DuckDB's read behavior);
   *  - µs parquet timestamps on write (INT96 would confuse comparators);
-  *  - AQE on (runtime re-planning, skew handling, partition coalescing).
+  *  - AQE on (runtime re-planning, skew handling, partition coalescing);
+  *  - RocksDB state commits as changelogs: a commit appends one changelog
+  *    file per state partition instead of flushing, checkpointing,
+  *    fsyncing and zipping a full snapshot (on a 4-core host, a steady
+  *    ingest trigger's state commit over 4 partitions fell from
+  *    ~340–440 ms to ~20 ms); the state-store maintenance thread
+  *    uploads snapshots in the background, and a restart loads the last
+  *    snapshot and replays the changelogs after it. The HDFS-backed
+  *    provider ignores the setting, and Spark restarts a checkpoint
+  *    written in either mode under the other.
   */
 object GraftSession {
   def builder(master: String, cores: Int): SparkSession.Builder =
@@ -42,6 +51,7 @@ object GraftSession {
       // partition count onto kilobyte-sized data, so each loop round
       // schedules near-empty tasks per stage
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
 
   /** Local session with `cores` worker threads (the driver-contract
     * shape: `local[n]` with shuffle partitions = n). */

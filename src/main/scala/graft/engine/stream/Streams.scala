@@ -491,6 +491,58 @@ object Streams {
     }
   }
 
+  /** The shared banding projection: watermarked docs → one row per
+    * (band, band-key) with the full k-long MinHash signature —
+    * identical arithmetic to the batch path
+    * ([[graft.engine.ops.Similarity.minhashNearDup]]: same signature
+    * family, same fold key, same (k, bands, rowsPerBand)
+    * parameterization with the same 2×8 defaults), so batch and
+    * stream agree on what "near-dup" means at every parameter point.
+    * Consumed by [[streamingNearDupLsh]] (pair detection) and
+    * [[streamingNearDupSurvivors]] (keep-first filtering).
+    *
+    * Slot cap: the input is coalesced to at most the session's task
+    * slots (`defaultParallelism`) before anything else runs. A
+    * micro-batch arrives as one input partition per source partition
+    * (per topic partition on Kafka, per `addData` on MemoryStream), so
+    * when source partitions per micro-batch exceed task slots, the band
+    * shuffle's map stage would run several waves of tiny tasks, each
+    * paying launch and deserialization for a handful of rows. An ingest
+    * that appends 8 documents every 40 ms under a 1 s trigger on 4
+    * slots has 25 partitions per steady trigger and ~66 in a restart's
+    * backlog; capped, both run as one wave. The coalesce is narrow (no
+    * shuffle added), a no-op when the source has no more partitions than
+    * slots, and changes no output: both state functions sort each group
+    * by doc_id before comparing. */
+  private def bandedSigs(docs: DataFrame, textCol: String, watermark: String,
+                         k: Int, bands: Int, rowsPerBand: Int)
+      : Dataset[(Int, Long, Long, Seq[Long], java.sql.Timestamp)] = {
+    require(bands * rowsPerBand == k,
+      s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal k ($k)")
+    graft.engine.functions.GraftFunctions.register(docs.sparkSession)
+    import docs.sparkSession.implicits._
+    val P31 = 2147483647L
+    val sigCol =
+      if (k == graft.engine.functions.MinHashSignature.NumPerms)
+        call_function("minhash_sig", call_function("token_set_hashes62", col(textCol)))
+      else
+        call_function("minhash_sig", call_function("token_set_hashes62", col(textCol)), lit(k))
+    docs.coalesce(docs.sparkSession.sparkContext.defaultParallelism)
+      .withWatermark("ts", watermark)
+      .withColumn("sig", sigCol)
+      .select(col("doc_id"), col("ts"), col("sig"),
+        explode(array((0 until bands).map { bnd =>
+          val cs = (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
+            .map(i => element_at(col("sig"), i + 1))
+          val bkey = cs.foldLeft(lit(0L): Column)((acc, m) =>
+            pmod(acc * 131L + pmod(m, lit(P31)), lit(P31)))
+          struct(lit(bnd).as("band"), bkey.as("bkey"))
+        }: _*)).as("bb"))
+      .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"),
+              col("doc_id"), col("sig"), col("ts"))
+      .as[(Int, Long, Long, Seq[Long], java.sql.Timestamp)]
+  }
+
   /** s_stream_neardup_lsh: cross-batch MinHash-LSH near-duplicate
     * DETECTION at a Jaccard threshold — the operator a 100 TB/day ingest
     * actually needs. [[streamingNearDup]] only collapses exact-signature
@@ -524,44 +576,11 @@ object Streams {
     * stored itself once the bucket is full, so a degenerate key costs
     * O(cap) per doc instead of O(rate × horizon); pairs between two
     * post-cap arrivals in such a bucket are the documented loss, the
-    * same non-discriminative fan-out the batch salt bounds. */
-  /** The shared banding projection: watermarked docs → one row per
-    * (band, band-key) with the full k-long MinHash signature —
-    * identical arithmetic to the batch path
-    * ([[graft.engine.ops.Similarity.minhashNearDup]]: same signature
-    * family, same fold key, same (k, bands, rowsPerBand)
-    * parameterization with the same 2×8 defaults), so batch and
-    * stream agree on what "near-dup" means at every parameter point.
-    * Consumed by [[streamingNearDupLsh]] (pair detection) and
-    * [[streamingNearDupSurvivors]] (keep-first filtering). */
-  private def bandedSigs(docs: DataFrame, textCol: String, watermark: String,
-                         k: Int, bands: Int, rowsPerBand: Int)
-      : Dataset[(Int, Long, Long, Seq[Long], java.sql.Timestamp)] = {
-    require(bands * rowsPerBand == k,
-      s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal k ($k)")
-    graft.engine.functions.GraftFunctions.register(docs.sparkSession)
-    import docs.sparkSession.implicits._
-    val P31 = 2147483647L
-    val sigCol =
-      if (k == graft.engine.functions.MinHashSignature.NumPerms)
-        call_function("minhash_sig", call_function("token_set_hashes62", col(textCol)))
-      else
-        call_function("minhash_sig", call_function("token_set_hashes62", col(textCol)), lit(k))
-    docs.withWatermark("ts", watermark)
-      .withColumn("sig", sigCol)
-      .select(col("doc_id"), col("ts"), col("sig"),
-        explode(array((0 until bands).map { bnd =>
-          val cs = (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
-            .map(i => element_at(col("sig"), i + 1))
-          val bkey = cs.foldLeft(lit(0L): Column)((acc, m) =>
-            pmod(acc * 131L + pmod(m, lit(P31)), lit(P31)))
-          struct(lit(bnd).as("band"), bkey.as("bkey"))
-        }: _*)).as("bb"))
-      .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"),
-              col("doc_id"), col("sig"), col("ts"))
-      .as[(Int, Long, Long, Seq[Long], java.sql.Timestamp)]
-  }
-
+    * same non-discriminative fan-out the batch salt bounds.
+    *
+    * Per trigger, the band shuffle's map side runs at most one task per
+    * task slot, whatever the number of source partitions in the
+    * micro-batch (the slot cap of [[bandedSigs]]). */
   def streamingNearDupLsh(docs: DataFrame, textCol: String,
                           minEstJaccard: Double = 0.7,
                           watermark: String = "10 seconds",

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import java.nio.file.Files
 import java.sql.Timestamp
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Reproduces the reference's streaming semantics (SURVEY.md §2.2-J) on
   * MemoryStream — the same offset/commit machinery a Kafka source uses,
@@ -350,48 +351,151 @@ class StreamingSpec extends SparkSuite {
   // The provider is a session conf captured at query start — the toggle
   // is config-only, zero operator changes, and the detection semantics
   // (cross-batch pairs, kill-and-restart recovery) must be IDENTICAL.
+  // GraftSession commits RocksDB state as changelogs; the second leg
+  // writes the first run's checkpoint as snapshots only (as a checkpoint
+  // from before that setting holds) and restarts it under the session's
+  // setting.
   test("s_stream_neardup_lsh on RocksDB state store: same pairs, same restart recovery") {
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val saved = spark.conf.getOption(provKey)
     spark.conf.set(provKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val in = MemoryStream[Doc](spark)
-      val ckpt = tmpDir("neardup-lsh-rocks")
-      val out = mutable.ArrayBuffer[(Long, Long)]()
-      def start() = Streams.streamingNearDupLsh(in.toDF(), "text", minEstJaccard = 0.5,
-        bands = 4, rowsPerBand = 4)
-        .writeStream
-        .outputMode(OutputMode.Append)
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Streams.NearDupHit], _: Long) =>
-          out.synchronized { out ++= b.collect().map(h => (h.doc_id_1, h.doc_id_2)) }
-          ()
-        }.start()
-      val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
-      val near = "alpha bravo charlie delta echo foxtrot golf hotel india kilo"
-      val far = "one two three four five six seven eight nine ten"
-      val q1 = start()
-      in.addData(Doc(1, ts(1), base), Doc(4, ts(1), far))
-      q1.processAllAvailable()
-      q1.stop() // RocksDB state must survive the kill in the checkpoint
-      val q2 = start()
-      in.addData(Doc(2, ts(2), near))
-      q2.processAllAvailable()
-      in.addData(Doc(3, ts(3), near + " extra"))
-      q2.processAllAvailable(); q2.stop()
-      val pairs = out.distinct.sorted.toSeq
-      assert(pairs.contains((1L, 2L)),
-        s"RocksDB state must survive the kill-and-restart: $out")
-      assert(pairs.contains((2L, 3L)), s"cross-batch pair missing on RocksDB: $out")
-      assert(pairs.forall { case (a, b) => a != 4L && b != 4L },
-        s"distinct doc must pair with nothing: $out")
+      val ckpt = runLshRestartScenario("neardup-lsh-rocks", firstRunSnapshotsOnly = false)
+      val files = stateFiles(ckpt)
+      assert(files.exists(_.endsWith(".changelog")),
+        s"RocksDB state must commit as changelogs: $files")
+      val snapCkpt = runLshRestartScenario("neardup-lsh-rocks-snap",
+        firstRunSnapshotsOnly = true)
+      assert(stateFiles(snapCkpt).exists(_.endsWith(".changelog")),
+        "the restarted run must commit changelogs on top of the snapshot")
     } finally {
       saved match {
         case Some(v) => spark.conf.set(provKey, v)
         case None => spark.conf.unset(provKey)
       }
     }
+  }
+
+  /** Every file under the checkpoint's `state/0/<partition>/` dirs. */
+  private def stateFiles(ckpt: String): Seq[String] = {
+    val parts = new java.io.File(s"$ckpt/state/0").listFiles()
+    assert(parts != null && parts.nonEmpty, s"no state partitions under $ckpt")
+    parts.toSeq.filter(_.isDirectory).flatMap(d => Option(d.list()).toSeq.flatten)
+  }
+
+  /** The kill-and-restart pair scenario on the session's state store.
+    * `firstRunSnapshotsOnly` turns RocksDB changelog checkpointing off
+    * for the first run only; the restart runs under the session's own
+    * setting. Returns the checkpoint dir. */
+  private def runLshRestartScenario(ckptName: String,
+                                    firstRunSnapshotsOnly: Boolean): String = {
+    val clKey = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val in = MemoryStream[Doc](spark)
+    val ckpt = tmpDir(ckptName)
+    val out = mutable.ArrayBuffer[(Long, Long)]()
+    def start() = Streams.streamingNearDupLsh(in.toDF(), "text", minEstJaccard = 0.5,
+      bands = 4, rowsPerBand = 4)
+      .writeStream
+      .outputMode(OutputMode.Append)
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[Streams.NearDupHit], _: Long) =>
+        out.synchronized { out ++= b.collect().map(h => (h.doc_id_1, h.doc_id_2)) }
+        ()
+      }.start()
+    val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    val near = "alpha bravo charlie delta echo foxtrot golf hotel india kilo"
+    val far = "one two three four five six seven eight nine ten"
+    val clSaved = spark.conf.getOption(clKey)
+    try {
+      if (firstRunSnapshotsOnly) spark.conf.set(clKey, "false")
+      val q1 = start()
+      in.addData(Doc(1, ts(1), base), Doc(4, ts(1), far))
+      q1.processAllAvailable()
+      q1.stop() // RocksDB state must survive the kill in the checkpoint
+      if (firstRunSnapshotsOnly)
+        assert(!stateFiles(ckpt).exists(_.endsWith(".changelog")),
+          s"first run must leave snapshots only: ${stateFiles(ckpt)}")
+    } finally clSaved match {
+      case Some(v) => spark.conf.set(clKey, v)
+      case None => spark.conf.unset(clKey)
+    }
+    val q2 = start()
+    in.addData(Doc(2, ts(2), near))
+    q2.processAllAvailable()
+    in.addData(Doc(3, ts(3), near + " extra"))
+    q2.processAllAvailable(); q2.stop()
+    val pairs = out.distinct.sorted.toSeq
+    assert(pairs.contains((1L, 2L)),
+      s"RocksDB state must survive the kill-and-restart ($ckptName): $out")
+    assert(pairs.contains((2L, 3L)), s"cross-batch pair missing on RocksDB ($ckptName): $out")
+    assert(pairs.forall { case (a, b) => a != 4L && b != 4L },
+      s"distinct doc must pair with nothing ($ckptName): $out")
+    ckpt
+  }
+
+  // s_stream_neardup_lsh slot cap: a micro-batch of more source
+  // partitions than task slots runs its band-shuffle map stage in one
+  // wave, and emits exactly the pairs of the same documents in one
+  // partition (both state functions sort each group by doc_id).
+  test("s_stream_neardup_lsh: band-shuffle map stage runs at most one task per slot, same pairs") {
+    val slots = spark.sparkContext.defaultParallelism
+    // 3 docs per partition, each partition on its own vocabulary: a
+    // fresh text, its near-dup, and a rotated copy (same token set) of
+    // the previous partition's fresh text — a cross-partition pair
+    def fresh(p: Int) = (0 until 10).map(i => s"t${p}x$i")
+    val parts = (0 until 3 * slots).map { p =>
+      val prev = fresh(p - 1)
+      Seq(Doc(3L * p + 1, ts(1), fresh(p).mkString(" ")),
+          Doc(3L * p + 2, ts(1), (fresh(p).init :+ s"t${p}y").mkString(" ")),
+          Doc(3L * p + 3, ts(1), (prev.tail :+ prev.head).mkString(" ")))
+    }
+    def run(tag: String, feeds: Seq[Seq[Doc]]): (Seq[(Long, Long)], Seq[Int]) = {
+      val in = MemoryStream[Doc](spark)
+      val out = mutable.ArrayBuffer[(Long, Long)]()
+      val q = Streams.streamingNearDupLsh(in.toDF(), "text", minEstJaccard = 0.5,
+          bands = 4, rowsPerBand = 4)
+        .writeStream
+        .outputMode(OutputMode.Append)
+        .option("checkpointLocation", tmpDir(tag))
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[Streams.NearDupHit], _: Long) =>
+          out.synchronized { out ++= b.collect().map(h => (h.doc_id_1, h.doc_id_2)) }
+          ()
+        }.start()
+      val mapTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val fenceKey = "graft.test.fence"
+      val fenced = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val props = Option(e.properties)
+          if (props.exists(_.getProperty(fenceKey) == tag)) fenced.countDown()
+          else if (props.exists(_.getProperty("sql.streaming.queryId") == q.id.toString))
+            // map stages: those another stage of the job reads from
+            e.stageInfos.filter(si => e.stageInfos.exists(_.parentIds.contains(si.stageId)))
+              .foreach(si => mapTasks.add(si.numTasks))
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        feeds.foreach(docs => in.addData(docs))
+        q.processAllAvailable()
+        q.stop()
+        // the listener bus is FIFO: once a job started after the batch
+        // is seen, every event of the batch's jobs has been delivered
+        spark.sparkContext.setLocalProperty(fenceKey, tag)
+        try spark.sparkContext.parallelize(Seq(1), 1).count()
+        finally spark.sparkContext.setLocalProperty(fenceKey, null)
+        assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus drain")
+      } finally spark.sparkContext.removeSparkListener(listener)
+      (out.sorted.toSeq, mapTasks.asScala.toSeq)
+    }
+    val (split, splitTasks) = run("neardup-lsh-slots", parts)
+    val (whole, _) = run("neardup-lsh-slots-one", Seq(parts.flatten))
+    assert(splitTasks.nonEmpty, "the batch must run a band-shuffle map stage")
+    assert(splitTasks.forall(_ <= slots),
+      s"${parts.size} source partitions on $slots slots ran map stages of $splitTasks tasks")
+    assert(split.contains((1L, 6L)), s"fixture must pair across partitions: $split")
+    assert(split == whole, s"pairs must not depend on the source partitioning: $split vs $whole")
   }
 
   // The versioned state envelope: the checkpointed schema is frozen at
