@@ -7,8 +7,11 @@ import graft.engine.GraftSession
   * Each run also reports the job/stage/task counts and summed executor
   * task time the query scheduled (from a SparkListener), so a "slow"
   * query can be split into scheduling floor vs real executor work
-  * without the (disabled) UI. Not part of the driver contract — local
-  * iteration only. */
+  * without the (disabled) UI, and the change in the context's cached
+  * RDD count (`cached=+N`): a query that leaves cached blocks behind
+  * shows a non-zero delta on every run (a session artifact's first
+  * build shows its own registry persist once). Not part of the driver
+  * contract — local iteration only. */
 object DevTime {
   private class CountListener extends org.apache.spark.scheduler.SparkListener {
     @volatile var jobs = 0
@@ -48,6 +51,7 @@ object DevTime {
         val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
         (1 to runs).foreach { i =>
           listener.reset()
+          val cached0 = spark.sparkContext.getPersistentRDDs.size
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           val dt = (System.nanoTime() - t0) / 1e9
@@ -67,7 +71,8 @@ object DevTime {
           }
           System.err.println(f"DEVTIME $name run$i $dt%.2f s " +
             f"jobs=${listener.jobs} stages=${listener.stages} tasks=${listener.tasks} " +
-            f"taskTime=${listener.taskTimeMs / 1000.0}%.2f s gc=${listener.gcTimeMs / 1000.0}%.2f s")
+            f"taskTime=${listener.taskTimeMs / 1000.0}%.2f s gc=${listener.gcTimeMs / 1000.0}%.2f s " +
+            f"cached=${spark.sparkContext.getPersistentRDDs.size - cached0}%+d")
         }
       }
     }

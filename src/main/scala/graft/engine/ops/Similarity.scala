@@ -831,6 +831,18 @@ object Similarity {
 
   private def centroidCol(j: Int): Column = array(centroids(j).map(lit(_)): _*)
 
+  /** `embedding`'s dot with each literal centroid, in cell order. */
+  private def literalDots: Column =
+    array((0 until NCells).map(j => dot(col("embedding"), centroidCol(j))): _*)
+
+  /** `e` plus its nearest LITERAL-codebook `cell` (and the `dots` it was
+    * chosen from): max dot, first tie to the lowest cell, 1-based
+    * (`array_position`) — the rule [[assignWithCb]] reproduces against a
+    * codebook frame. */
+  private def withLiteralCell(e: DataFrame): DataFrame =
+    e.withColumn("dots", literalDots)
+      .withColumn("cell", array_position(col("dots"), array_max(col("dots"))))
+
   /** IVF-style ANN — vectors are bucketed by nearest coarse centroid (the
     * inverted file), the query probes its NProbe closest cells, and only
     * those cells are scored exactly. The 100 TB shape: the index pass is
@@ -840,14 +852,12 @@ object Similarity {
   def annIvf(vectors: DataFrame, idCol: String, vecCol: String,
              queryId: Long, k: Int): DataFrame = {
     val e = canonVec(vectors, idCol, vecCol)
-    val dots = array((0 until NCells).map(j => dot(col("embedding"), centroidCol(j))): _*)
-    val cell = array_position(col("dots"), array_max(col("dots"))).as("cell")
-    val indexed = e.withColumn("dots", dots).select(col("vec_id"), col("embedding"), cell)
+    val indexed = withLiteralCell(e).select(col("vec_id"), col("embedding"), col("cell"))
     val q0 = indexed.filter(col("vec_id") === queryId)
       .select(col("embedding").as("qe"), col("cell").as("qcell"))
     // the query's NProbe nearest cells, by centroid dot with the query
     val qcells = e.filter(col("vec_id") === queryId)
-      .select(posexplode(dots.as("d")).as(Seq("j", "qdot")))
+      .select(posexplode(literalDots.as("d")).as(Seq("j", "qdot")))
       .orderBy(col("qdot").desc, col("j").asc).limit(NProbe)
       .select((col("j") + 1).as("cell")) // array_position is 1-based
     val cands = indexed.filter(col("vec_id") =!= queryId)
@@ -886,12 +896,7 @@ object Similarity {
                       codebook: DataFrame, queryId: Long, k: Int): DataFrame = {
     val e = canonVec(vectors, idCol, vecCol)
     val cb = broadcast(codebook.select(col("cell"), col("centroid")))
-    val assigned = e.crossJoin(cb)
-      .select(col("vec_id"),
-        struct(dot(col("embedding"), col("centroid")).as("d"),
-               (-col("cell")).as("negc"), col("embedding").as("emb")).as("sc"))
-      .groupBy("vec_id").agg(max("sc").as("m"))
-      .select(col("vec_id"), (-col("m.negc")).as("cell"), col("m.emb").as("embedding"))
+    val assigned = assignWithCb(e, codebook)
     val qcells = e.filter(col("vec_id") === queryId).crossJoin(cb)
       .select(col("cell"), dot(col("embedding"), col("centroid")).as("qdot"))
       .orderBy(col("qdot").desc, col("cell").asc).limit(NProbe)
@@ -906,49 +911,85 @@ object Similarity {
       .orderBy(col("cos_sim").desc, col("vec_id").asc)
   }
 
-  /** One Lloyd step of k-means over the IVF codebook, split into its two
-    * distributable halves: the ASSIGNMENT (max-dot first-tie argmax — the
-    * exact annIvf cell rule) and the per-(cell, dimension) UPDATE
-    * statistics a driver folds into the next codebook. Statistics are
-    * exact integers — a count and a `floor(v·10⁶)`-scaled component sum
-    * (plus the floored mean) — because a float mean depends on summation
-    * order and would be neither reproducible across layouts nor
-    * oracle-checkable; the 10⁻⁶ quantization is far below any codebook
-    * update that matters.
+  /** Per-(keys…, dim) Lloyd-update statistics of the `vec` arrays in
+    * `assigned`: a count, a `floor(v·10⁶)`-scaled component sum and the
+    * floored mean, `dim` 1-based. Exact integers, because a float mean
+    * depends on summation order and would be neither reproducible across
+    * layouts nor oracle-checkable; the 10⁻⁶ quantization is far below
+    * any codebook update that matters. One posexplode + one
+    * partial+final hash agg: map-side combine collapses each partition
+    * to ≤ codebook×dims rows before the shuffle. Unordered. */
+  private def flooredMeans(assigned: DataFrame, keys: Seq[String], vec: String): DataFrame =
+    assigned.select(keys.map(col) :+ posexplode(col(vec)).as(Seq("dim0", "v")): _*)
+      .groupBy((keys :+ "dim0").map(col): _*)
+      .agg(count(lit(1)).as("n"),
+        sum(floor(col("v").cast("double") * lit(1000000.0)).cast("long")).as("sum_x1e6"))
+      .select(keys.map(col) ++ Seq((col("dim0") + 1).cast("long").as("dim"),
+        col("n"), col("sum_x1e6"),
+        floor(col("sum_x1e6").cast("double") / col("n")).cast("long").as("mean_x1e6")): _*)
+
+  /** [[flooredMeans]] statistics folded into a codebook: one dim-sorted
+    * `centroid` of `mean_x1e6 / 10⁶` per `keys` tuple — exact integers
+    * divided by the same constant in both engines, so trained centroids
+    * are bit-identical doubles. Keys no vector mapped to don't exist. */
+  private def foldCodebook(stats: DataFrame, keys: Seq[String]): DataFrame =
+    stats.select(keys.map(col) ++ Seq(col("dim"),
+        (col("mean_x1e6").cast("double") / lit(1000000.0)).as("c")): _*)
+      .groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("dc"))
+      .select(keys.map(col) :+ transform(col("dc"), x => x("c")).as("centroid"): _*)
+
+  /** The one Lloyd loop behind [[kmeansTrain]], [[ivfCodebookSized]] and
+    * [[pqTrainIters]]: `first` is round 1's assignment (keys…, `vec`);
+    * every round takes its [[flooredMeans]] statistics, and every round
+    * but the last folds them ([[foldCodebook]]) into the codebook
+    * `reassign` assigns the corpus against next. Returns the final
+    * round's statistics, unordered.
+    *
+    * Codebook policy: the folded codebook (≤ 1,024 rows — the model, not
+    * data) is collected to the driver and re-enters as a local relation,
+    * the way MLlib's KMeans keeps its centers. Every round's plan is one
+    * level deep and nothing is cached: a persisted per-round frame has
+    * no owner to unpersist it, so it outlives the call and a repeat call
+    * reads its blocks instead of training, while a lazy per-round frame
+    * nests every earlier round's assignment into the next. So a call
+    * with `iters` > 1 runs `iters − 1` driver round trips at
+    * construction; `iters = 1` runs none and stays lazy. */
+  private def lloyd(first: DataFrame, keys: Seq[String], vec: String, iters: Int)
+                   (reassign: DataFrame => DataFrame): DataFrame = {
+    var stats = flooredMeans(first, keys, vec)
+    var r = 1
+    while (r < iters) {
+      val cb = foldCodebook(stats, keys)
+      val local = first.sparkSession
+        .createDataFrame(java.util.Arrays.asList(cb.collect(): _*), cb.schema)
+      stats = flooredMeans(reassign(local), keys, vec)
+      r += 1
+    }
+    stats
+  }
+
+  /** One Lloyd step of k-means over the IVF codebook — [[kmeansTrain]]
+    * with `iters = 1`: the ASSIGNMENT (the annIvf literal-codebook
+    * argmax) and the per-(cell, dimension) [[flooredMeans]] UPDATE
+    * statistics a driver folds into the next codebook.
     *
     * Scale: the centroid matrix is plan literals (broadcast-equivalent),
     * so assignment is a narrow projection; the update is one
     * partial+final hash agg keyed (cell, dim) after a 64-way posexplode
-    * — map-side combine collapses each partition to ≤ cells×dims rows
-    * before the shuffle, the same shape as the token-count aggregates. */
-  def kmeansStep(vectors: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val e = canonVec(vectors, idCol, vecCol)
-    val dots = array((0 until NCells).map(j => dot(col("embedding"), centroidCol(j))): _*)
-    e.withColumn("dots", dots)
-      .select(array_position(col("dots"), array_max(col("dots"))).as("cell"),
-              col("embedding"))
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("dim0", "v")))
-      .groupBy("cell", "dim0")
-      .agg(count(lit(1)).as("n"),
-           sum(floor(col("v").cast("double") * lit(1000000.0)).cast("long")).as("sum_x1e6"))
-      .select(col("cell"), (col("dim0") + 1).cast("long").as("dim"), col("n"),
-        col("sum_x1e6"),
-        floor(col("sum_x1e6").cast("double") / col("n")).cast("long").as("mean_x1e6"))
-      .orderBy("cell", "dim")
-  }
+    * — the same shape as the token-count aggregates. */
+  def kmeansStep(vectors: DataFrame, idCol: String, vecCol: String): DataFrame =
+    kmeansTrain(vectors, idCol, vecCol, 1)
 
-  /** Full k-means TRAINING: `iters` Lloyd rounds over the IVF codebook,
-    * the loop [[kmeansStep]] is one iteration of. Round 1 assigns
-    * against the literal seed centroids (exactly the step's rule);
-    * every later round folds the previous round's floored integer
-    * means into trained centroids (`mean_x1e6 / 10⁶` — exact doubles,
-    * the PQ-codebook discipline) and re-assigns via the
-    * [[annIvfBroadcast]] broadcast-argmax shape. Per-round statistics
-    * are `localCheckpoint`ed (≤ cells×dims rows — the MODEL, not data),
-    * so the lineage never stacks assignment joins; cells that lose all
-    * members drop out of the codebook, both engines agreeing. Returns
-    * the FINAL round's update statistics, the [[kmeansStep]] schema —
-    * all-integer, hash-oracled against `iters` chained DuckDB rounds.
+  /** Full k-means TRAINING: `iters` [[lloyd]] rounds over the IVF
+    * codebook, the loop [[kmeansStep]] is one iteration of. Round 1
+    * assigns against the literal seed centroids (exactly the step's
+    * rule); every later round re-assigns against the previous round's
+    * folded centroids via the [[assignWithCb]] broadcast argmax. Cells
+    * that lose all members drop out of the codebook, both engines
+    * agreeing. Returns the FINAL round's update statistics, the
+    * [[kmeansStep]] schema — all-integer, hash-oracled against `iters`
+    * chained DuckDB rounds.
     *
     * Scale: each round is one corpus-wide broadcast-argmax (map-side
     * combine collapses the ×cells fan-out) + one keyed agg to ≤1024
@@ -957,38 +998,8 @@ object Similarity {
   def kmeansTrain(vectors: DataFrame, idCol: String, vecCol: String,
                   iters: Int): DataFrame = {
     val e = canonVec(vectors, idCol, vecCol)
-    def statsOf(assigned: DataFrame): DataFrame =
-      assigned.select(col("cell"), posexplode(col("embedding")).as(Seq("dim0", "v")))
-        .groupBy("cell", "dim0")
-        .agg(count(lit(1)).as("n"),
-          sum(floor(col("v").cast("double") * lit(1000000.0)).cast("long")).as("sum_x1e6"))
-        .select(col("cell"), (col("dim0") + 1).cast("long").as("dim"),
-          col("n"), col("sum_x1e6"),
-          floor(col("sum_x1e6").cast("double") / col("n")).cast("long").as("mean_x1e6"))
-    val dots0 = array((0 until NCells).map(j => dot(col("embedding"), centroidCol(j))): _*)
-    var stats = statsOf(e.withColumn("dots", dots0)
-        .select(array_position(col("dots"), array_max(col("dots"))).as("cell"),
-          col("embedding")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // lazy materialization (r18): the per-round model frame is cached, not eagerly checkpointed — the next round's broadcast build (or the caller's action) materializes it, saving one scheduler-floor job per round; model-sized either way
-    var r = 1
-    while (r < iters) {
-      val cb = stats
-        .select(col("cell"), col("dim"),
-          (col("mean_x1e6").cast("double") / lit(1000000.0)).as("c"))
-        .groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("dc"))
-        .select(col("cell"), transform(col("dc"), x => x("c")).as("centroid"))
-      val assigned = e.crossJoin(broadcast(cb))
-        .select(col("vec_id"),
-          struct(dot(col("embedding"), col("centroid")).as("d"),
-            (-col("cell")).as("negc"), col("embedding").as("emb")).as("sc"))
-        .groupBy("vec_id").agg(max("sc").as("m"))
-        .select((-col("m.negc")).as("cell"), col("m.emb").as("embedding"))
-      stats = statsOf(assigned)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r += 1
-    }
-    stats.orderBy("cell", "dim")
+    lloyd(withLiteralCell(e).select("cell", "embedding"), Seq("cell"), "embedding", iters)(
+      assignWithCb(e, _)).orderBy("cell", "dim")
   }
 
   /** Reciprocal-rank fusion (RRF) — the scoreless hybrid-search
@@ -1040,7 +1051,7 @@ object Similarity {
 
   /** Nearest-class-mean evaluation — the cheapest supervised probe of an
     * embedding space (the "NCM classifier" baseline): per label, an
-    * exact integer-quantized prototype (the [[kmeansStep]] floored-mean
+    * exact integer-quantized prototype (the [[flooredMeans]] floored-mean
     * rule, so both engines hold bit-identical class means), then every
     * vector is assigned to its max-inner-product prototype and the
     * per-label accuracy is reported. Reads as "how linearly separable
@@ -1056,18 +1067,8 @@ object Similarity {
     GraftFunctions.register(vectors.sparkSession)
     val e = vectors.select(col(idCol).as("vec_id"),
       col(vecCol).as("embedding"), col(labelCol).cast("long").as("label"))
-    val protos = e
-      .select(col("label").as("proto_label"),
-        posexplode(col("embedding")).as(Seq("dim0", "v")))
-      .groupBy("proto_label", "dim0")
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("v").cast("double") * lit(1000000.0)).cast("long")).as("s"))
-      .select(col("proto_label"), col("dim0"),
-        (floor(col("s").cast("double") / col("n")).cast("long").cast("double") /
-          lit(1000000.0)).as("c"))
-      .groupBy("proto_label")
-      .agg(array_sort(collect_list(struct(col("dim0"), col("c")))).as("dc"))
-      .select(col("proto_label"), transform(col("dc"), x => x("c")).as("proto"))
+    val protos = foldCodebook(flooredMeans(e, Seq("label"), "embedding"), Seq("label"))
+      .select(col("label").as("proto_label"), col("centroid").as("proto"))
     val assigned = e.crossJoin(broadcast(protos)) // deliberate: labels × dims model
       .select(col("vec_id"), col("label"),
         struct(dot(col("embedding"), col("proto")).as("d"),
@@ -1089,33 +1090,23 @@ object Similarity {
     * components are `mean_x1e6 / 10⁶` — exact doubles, both engines. */
   def ivfCodebook(vectors: DataFrame, idCol: String, vecCol: String,
                   iters: Int): DataFrame =
-    statsToIvfCodebook(kmeansTrain(vectors, idCol, vecCol, iters))
-
-  /** The [[kmeansTrain]] statistics → (cell, centroid) fold, shared by
-    * [[ivfCodebook]] and the memoized trained-codebook bindings. */
-  private def statsToIvfCodebook(stats: DataFrame): DataFrame =
-    stats
-      .select(col("cell"), col("dim"),
-        (col("mean_x1e6").cast("double") / lit(1000000.0)).as("c"))
-      .groupBy("cell")
-      .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("dc"))
-      .select(col("cell"), transform(col("dc"), x => x("c")).as("centroid"))
+    foldCodebook(kmeansTrain(vectors, idCol, vecCol, iters), Seq("cell"))
 
   /** The broadcast-ready (cell, centroid) codebook over
     * [[Artifacts.kmeansStats]] — model-sized (≤ NCells rows), so the fold
     * itself is trivial; memoization of the STATS is what removes the
     * repeated training loops. */
   private def sharedIvfCodebook(s: SparkSession, d: String): DataFrame =
-    statsToIvfCodebook(Artifacts.kmeansStats(s, d))
+    foldCodebook(Artifacts.kmeansStats(s, d), Seq("cell"))
 
   /** The trained PQ sub-codebooks folded from [[Artifacts.pqStats]] — the
     * ≤128-row (subspace, code, centroid) model every PQ consumer shares
-    * (value-identical to `trainedPqCodebook(embeddings)`: [[pqTrain]]
-    * IS [[pqStats]] plus a presentation sort the fold's groupBy
-    * ignores). The fold itself is model-sized; memoizing the STATS is
-    * what removes the repeated corpus training passes. */
+    * (value-identical to `trainedPqCodebook(embeddings)`: both fold
+    * the same [[pqTrain]] statistics). The fold itself is model-sized;
+    * memoizing the STATS is what removes the repeated corpus training
+    * passes. */
   private[ops] def sharedPqCodebook(s: SparkSession, d: String): DataFrame =
-    statsToPqCodebook(Artifacts.pqStats(s, d))
+    foldCodebook(Artifacts.pqStats(s, d), PqKeys)
 
   /** CORPUS-SIZED k-means codebook (r17, retiring the ladder's last
     * xl exemption): [[kmeansTrain]]/[[ivfCodebook]] are seeded from the
@@ -1125,10 +1116,10 @@ object Similarity {
     * corpus so cell population stays bounded. This trainer takes k:
     * seeds are the k lowest-keyMix corpus vectors (deterministic, no
     * RNG — the sampling discipline every `q_sample_*` operator uses),
-    * then `iters` Lloyd rounds of the exact kmeansTrain arithmetic
-    * (broadcast-argmax assignment, floored integer mean statistics).
-    * Cells that lose all members drop out. Returns (cell, centroid),
-    * the [[ivfCodebook]] schema.
+    * then `iters` (≥ 1) [[lloyd]] rounds of the exact kmeansTrain
+    * arithmetic (broadcast-argmax assignment, floored integer mean
+    * statistics). Cells that lose all members drop out. Returns (cell,
+    * centroid), the [[ivfCodebook]] schema.
     *
     * Scale shape: the codebook is model-sized (k rows — the seed
     * window's single partition holds k rows, not data); each round is
@@ -1141,34 +1132,13 @@ object Similarity {
     val seedKey = TextPipeline.keyMix(col("vec_id"))
     val wSeed = org.apache.spark.sql.expressions.Window
       .orderBy(seedKey, col("vec_id"))
-    var cb = e.orderBy(seedKey, col("vec_id")).limit(k)
+    val seeds = e.orderBy(seedKey, col("vec_id")).limit(k)
       .select(col("vec_id"), col("embedding"))
       .withColumn("cell", row_number().over(wSeed).cast("long"))
       .select(col("cell"), col("embedding").as("centroid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var r = 0
-    while (r < iters) {
-      val assigned = e.crossJoin(broadcast(cb))
-        .select(col("vec_id"),
-          struct(dot(col("embedding"), col("centroid")).as("d"),
-            (-col("cell")).as("negc"), col("embedding").as("emb")).as("sc"))
-        .groupBy("vec_id").agg(max("sc").as("m"))
-        .select((-col("m.negc")).as("cell"), col("m.emb").as("embedding"))
-      cb = assigned
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("dim0", "v")))
-        .groupBy("cell", "dim0")
-        .agg(sum(floor(col("v").cast("double") * lit(1000000.0)).cast("long")).as("sum_x1e6"),
-          count(lit(1)).as("n"))
-        .select(col("cell"), col("dim0"),
-          (floor(col("sum_x1e6").cast("double") / col("n")).cast("long")
-            .cast("double") / lit(1000000.0)).as("c"))
-        .groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("dim0"), col("c")))).as("dc"))
-        .select(col("cell"), transform(col("dc"), x => x("c")).as("centroid"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r += 1
-    }
-    cb
+    foldCodebook(
+      lloyd(assignWithCb(e, seeds), Seq("cell"), "embedding", iters)(assignWithCb(e, _)),
+      Seq("cell"))
   }
 
   /** Nearest-centroid assignment as a standalone narrow projection — the
@@ -1177,13 +1147,8 @@ object Similarity {
     * runs on a streaming frame and the per-cell counts aggregate in
     * Update mode downstream. At scale this is also the routing function
     * that turns `cell` into a partition/bucket key at write time. */
-  def assignCells(vectors: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val e = canonVec(vectors, idCol, vecCol)
-    val dots = array((0 until NCells).map(j => dot(col("embedding"), centroidCol(j))): _*)
-    e.withColumn("dots", dots)
-      .select(col("vec_id"),
-              array_position(col("dots"), array_max(col("dots"))).as("cell"))
-  }
+  def assignCells(vectors: DataFrame, idCol: String, vecCol: String): DataFrame =
+    withLiteralCell(canonVec(vectors, idCol, vecCol)).select(col("vec_id"), col("cell"))
 
   /** Cluster-balanced corpus pruning (the prototype-selection family:
     * equal per-cell quotas, most-prototypical first — the embedding-
@@ -1234,14 +1199,8 @@ object Similarity {
   def embeddingDrift(v1: DataFrame, v2: DataFrame,
                      idCol: String, vecCol: String): DataFrame = {
     def dimMeans(df: DataFrame, tag: String): DataFrame =
-      canonVec(df, idCol, vecCol)
-        .select(posexplode(col("embedding")).as(Seq("dim0", "x")))
-        .select((col("dim0") + 1).cast("long").as("dim"), col("x")) // 1-based, oracle convention
-        .groupBy("dim")
-        .agg(expr("sum(CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))").as("s"),
-             count(lit(1)).as("n"))
-        .select(col("dim"),
-          expr("CAST(floor(CAST(s AS DOUBLE) / n) AS BIGINT)").as(s"mean_$tag"))
+      flooredMeans(canonVec(df, idCol, vecCol), Nil, "embedding")
+        .select(col("dim"), col("mean_x1e6").as(s"mean_$tag"))
     dimMeans(v1, "a").join(dimMeans(v2, "b"), "dim")
       .withColumn("drift_x1e6", abs(col("mean_a") - col("mean_b")))
       .orderBy("dim")
@@ -1306,11 +1265,8 @@ object Similarity {
       semanticDedup(vectors, idCol, vecCol, minCosine,
         ivfCodebookSized(vectors, idCol, vecCol, k, iters = 2))
     } else {
-      val dots = array((0 until NCells).map(j => dot(col("embedding"), centroidCol(j))): _*)
-      val cells = e.withColumn("dots", dots)
-        .select(col("vec_id"), col("embedding"),
-                array_position(col("dots"), array_max(col("dots"))).as("cell"),
-                norm(col("embedding")).as("nrm"))
+      val cells = withLiteralCell(e)
+        .select(col("vec_id"), col("embedding"), col("cell"), norm(col("embedding")).as("nrm"))
       verifyWithinCells(cells, minCosine)
     }
   }
@@ -1968,92 +1924,54 @@ object Similarity {
       .select(col("vec_id"), col("m0").cast("long").as("subspace"), col("code"),
         slice(col("embedding"), col("m0") * SubDim + 1, lit(SubDim)).as("sv"))
 
-  /** Unordered per-(subspace, code, dim) Lloyd-update statistics — the
-    * [[kmeansStep]] integer discipline (count + floor(x·10⁶) component
-    * sum + floored mean) applied per subspace: exact integers, so the
-    * trained codebook is reproducible across layouts and oracle-checkable.
-    * One narrow assign pass + one partial+final hash agg (≤ NSub·NPqCodes·
-    * SubDim = 1024 rows out); the corpus never shuffles. */
-  private def pqStats(e: DataFrame): DataFrame =
-    pqAssignInit(e)
-      .select(col("subspace"), col("code"), posexplode(col("sv")).as(Seq("dim0", "xf")))
-      .groupBy("subspace", "code", "dim0")
-      .agg(count(lit(1)).as("n"),
-        sum(floor(col("xf").cast("double") * lit(1000000.0)).cast("long")).as("sum_x1e6"))
-      .select(col("subspace"), col("code"), (col("dim0") + 1).cast("long").as("dim"),
-        col("n"), col("sum_x1e6"),
-        floor(col("sum_x1e6").cast("double") / col("n")).cast("long").as("mean_x1e6"))
+  /** The PQ codebook key: one sub-centroid per (subspace, code). */
+  private val PqKeys = Seq("subspace", "code")
 
-  /** Product-quantization training: one Lloyd step per subspace over the
-    * fixed-seed seed codebooks → the per-(subspace, code, dim) update
-    * statistics whose floored means ARE the trained codebook
-    * ([[pqCodebook]] folds them). Deterministically ordered — the
-    * fixture/oracle binding. */
-  def pqTrain(vectors: DataFrame, idCol: String, vecCol: String): DataFrame =
-    pqStats(canonVec(vectors, idCol, vecCol)).orderBy("subspace", "code", "dim")
-
-  /** The trained sub-codebooks as (subspace, code, centroid) rows:
-    * centroid components are `mean_x1e6 / 10⁶` — exact integers divided
-    * by the same constant in both engines, so the trained centroids are
-    * bit-identical doubles. Codes no vector mapped to simply don't exist
-    * (encode argmins over the surviving codes). ≤ 128 rows — broadcast
-    * material by construction. */
-  def pqCodebook(vectors: DataFrame, idCol: String, vecCol: String): DataFrame =
-    statsToPqCodebook(pqStats(canonVec(vectors, idCol, vecCol)))
-
-  /** Fold per-(subspace, code, dim) update stats into (subspace, code,
-    * centroid) rows — `mean_x1e6 / 10⁶` exact doubles, dim-sorted. */
-  private def statsToPqCodebook(stats: DataFrame): DataFrame =
-    stats
-      .select(col("subspace"), col("code"), col("dim"),
-        (col("mean_x1e6").cast("double") / lit(1000000.0)).as("c"))
-      .groupBy("subspace", "code")
-      .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("dc"))
-      .select(col("subspace"), col("code"),
-        transform(col("dc"), x => x("c")).as("centroid"))
-
-  /** Multi-round PQ training — the [[kmeansTrain]] discipline applied
-    * per subspace: round 1 is [[pqTrain]]'s seed assignment, each later
-    * round folds the floored means into trained sub-centroids and
-    * re-assigns every slice against them (broadcast + struct-min — the
-    * [[pqEncode]] rule, sv riding the struct untouched since (dist,
-    * code) is unique per group). Stats are `localCheckpoint`ed per
-    * round (≤1024 rows — the model). Returns the FINAL round's update
-    * statistics in the [[pqTrain]] schema; `iters = 1` degenerates to
-    * [[pqTrain]] exactly (spec-pinned). */
-  def pqTrainIters(vectors: DataFrame, idCol: String, vecCol: String,
-                   iters: Int): DataFrame = {
-    val e = canonVec(vectors, idCol, vecCol)
-    def statsOf(assigned: DataFrame): DataFrame =
-      assigned.select(col("subspace"), col("code"),
-          posexplode(col("sv")).as(Seq("dim0", "xf")))
-        .groupBy("subspace", "code", "dim0")
-        .agg(count(lit(1)).as("n"),
-          sum(floor(col("xf").cast("double") * lit(1000000.0)).cast("long")).as("sum_x1e6"))
-        .select(col("subspace"), col("code"), (col("dim0") + 1).cast("long").as("dim"),
-          col("n"), col("sum_x1e6"),
-          floor(col("sum_x1e6").cast("double") / col("n")).cast("long").as("mean_x1e6"))
-    val svs = e.select(col("vec_id"), explode(array((0 until NSub).map { m =>
+  /** Each embedding as its NSub contiguous SubDim slices — one
+    * (vec_id, subspace, sv) row per slice, one narrow generator. */
+  private def subspaceSlices(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), explode(array((0 until NSub).map { m =>
         struct(lit(m.toLong).as("subspace"),
           slice(col("embedding"), m * SubDim + 1, SubDim).as("sv"))
       }: _*)).as("b"))
       .select(col("vec_id"), col("b.subspace").as("subspace"), col("b.sv").as("sv"))
-    var stats = statsOf(pqAssignInit(e).select("subspace", "code", "sv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // lazy materialization (r18): the per-round model frame is cached, not eagerly checkpointed — the next round's broadcast build (or the caller's action) materializes it, saving one scheduler-floor job per round; model-sized either way
-    var r = 1
-    while (r < iters) {
-      val cb = statsToPqCodebook(stats)
-      val assigned = svs.join(broadcast(cb), "subspace")
+
+  /** Product-quantization training: one Lloyd step per subspace over the
+    * fixed-seed seed codebooks — [[pqTrainIters]] with `iters = 1`, the
+    * per-(subspace, code, dim) [[flooredMeans]] statistics whose floored
+    * means ARE the trained codebook ([[pqCodebook]] folds them). One
+    * narrow assign pass + one partial+final hash agg (≤ NSub·NPqCodes·
+    * SubDim = 1024 rows out); the corpus never shuffles.
+    * Deterministically ordered — the fixture/oracle binding. */
+  def pqTrain(vectors: DataFrame, idCol: String, vecCol: String): DataFrame =
+    pqTrainIters(vectors, idCol, vecCol, 1)
+
+  /** The trained sub-codebooks as (subspace, code, centroid) rows, the
+    * [[foldCodebook]] of [[pqTrain]]. Codes no vector mapped to simply
+    * don't exist (encode argmins over the surviving codes). ≤ 128 rows
+    * — broadcast material by construction. */
+  def pqCodebook(vectors: DataFrame, idCol: String, vecCol: String): DataFrame =
+    foldCodebook(pqTrain(vectors, idCol, vecCol), PqKeys)
+
+  /** Multi-round PQ training — `iters` [[lloyd]] rounds per subspace:
+    * round 1 is [[pqTrain]]'s seed assignment, each later round
+    * re-assigns every slice against the previous round's folded
+    * sub-centroids (broadcast + struct-min — the [[pqEncode]] rule, sv
+    * riding the struct untouched since (dist, code) is unique per
+    * group). Returns the FINAL round's update statistics in the
+    * [[pqTrain]] schema; `iters = 1` is [[pqTrain]] (spec-pinned). */
+  def pqTrainIters(vectors: DataFrame, idCol: String, vecCol: String,
+                   iters: Int): DataFrame = {
+    val e = canonVec(vectors, idCol, vecCol)
+    val svs = subspaceSlices(e)
+    lloyd(pqAssignInit(e), PqKeys, "sv", iters) { cb =>
+      svs.join(broadcast(cb), "subspace")
         .select(col("subspace"), col("vec_id"),
           struct(l2ToCentRow(col("sv"), col("centroid")).as("dist"),
             col("code").as("code"), col("sv").as("sv")).as("sc"))
         .groupBy("vec_id", "subspace").agg(min("sc").as("m"))
         .select(col("subspace"), col("m.code").as("code"), col("m.sv").as("sv"))
-      stats = statsOf(assigned)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r += 1
-    }
-    stats.orderBy("subspace", "code", "dim")
+    }.orderBy("subspace", "code", "dim")
   }
 
   /** Squared L2 against a TRAINED (data, not literal) centroid row —
@@ -2075,13 +1993,8 @@ object Similarity {
     * reshuffles the float corpus. */
   def pqEncode(vectors: DataFrame, idCol: String, vecCol: String,
                codebook: DataFrame): DataFrame = {
-    val e = canonVec(vectors, idCol, vecCol)
-    val svs = e.select(col("vec_id"), explode(array((0 until NSub).map { m =>
-        struct(lit(m.toLong).as("subspace"),
-          slice(col("embedding"), m * SubDim + 1, SubDim).as("sv"))
-      }: _*)).as("b"))
-      .select(col("vec_id"), col("b.subspace").as("subspace"), col("b.sv").as("sv"))
-    svs.join(broadcast(codebook.select(col("subspace"), col("code"), col("centroid"))),
+    subspaceSlices(canonVec(vectors, idCol, vecCol))
+      .join(broadcast(codebook.select(col("subspace"), col("code"), col("centroid"))),
         "subspace")
       .select(col("vec_id"), col("subspace"),
         struct(l2ToCentRow(col("sv"), col("centroid")).as("dist"),
@@ -2135,12 +2048,7 @@ object Similarity {
     * to (full corpus for annPq, probed IVF cells for [[annIvfPq]]). */
   private def adcTopK(e: DataFrame, corpus: DataFrame, cb: DataFrame,
                       queryId: Long, k: Int): DataFrame = {
-    val qsv = e.filter(col("vec_id") === queryId)
-      .select(explode(array((0 until NSub).map { m =>
-        struct(lit(m.toLong).as("subspace"),
-          slice(col("embedding"), m * SubDim + 1, SubDim).as("sv"))
-      }: _*)).as("b"))
-      .select(col("b.subspace").as("subspace"), col("b.sv").as("sv"))
+    val qsv = subspaceSlices(e.filter(col("vec_id") === queryId)).select("subspace", "sv")
     val lut = qsv.join(broadcast(cb), "subspace")
       .select(col("subspace"), col("code"),
         floor(l2ToCentRow(col("sv"), col("centroid")) * lit(1000000.0))
@@ -2167,12 +2075,9 @@ object Similarity {
                preCb: Option[DataFrame] = None): DataFrame = {
     val e = canonVec(vectors, idCol, vecCol)
     val cb = preCb.getOrElse(trainedPqCodebook(vectors, idCol, vecCol))
-    val dots = array((0 until NCells).map(j => dot(col("embedding"), centroidCol(j))): _*)
-    val indexed = e.withColumn("dots", dots)
-      .select(col("vec_id"), col("embedding"),
-        array_position(col("dots"), array_max(col("dots"))).as("cell"))
+    val indexed = withLiteralCell(e).select(col("vec_id"), col("embedding"), col("cell"))
     val qcells = e.filter(col("vec_id") === queryId)
-      .select(posexplode(dots.as("d")).as(Seq("j", "qdot")))
+      .select(posexplode(literalDots.as("d")).as(Seq("j", "qdot")))
       .orderBy(col("qdot").desc, col("j").asc).limit(NProbe)
       .select((col("j") + 1).cast("long").as("cell"))
     val cands = indexed.filter(col("vec_id") =!= queryId)
@@ -2272,9 +2177,9 @@ object Similarity {
   }
 
   /** Nearest-cell assignment against a broadcast codebook — the
-    * [[annIvfBroadcast]] struct-max rule (max dot, first-tie-lowest-
-    * cell) factored out so the IVFPQ-with-codebook path and the
-    * streaming index build share one definition. Returns
+    * struct-max rule (max dot, first-tie-lowest-cell) of
+    * [[annIvfBroadcast]], the IVFPQ-with-codebook path, the k-means
+    * [[lloyd]] rounds and the streaming index build. Returns
     * (vec_id, cell, embedding). */
   private[engine] def assignWithCb(e: DataFrame, coarseCb: DataFrame): DataFrame =
     e.crossJoin(broadcast(coarseCb.select(col("cell"), col("centroid"))))
@@ -2573,7 +2478,7 @@ object Similarity {
       pqTrainIters(Tables.embeddings(s, d), "vec_id", "embedding", 2)),
     "q_pq_encode" -> ((s, d) =>
       pqEncode(Tables.embeddings(s, d), "vec_id", "embedding",
-        statsToPqCodebook(Artifacts.pqStats(s, d)))
+        foldCodebook(Artifacts.pqStats(s, d), PqKeys))
         .orderBy("vec_id", "subspace")),
     // the PQ serve family reads the ONE memoized single-round PQ model
     // (sharedPqCodebook — value-identical to the inline train each
@@ -2596,7 +2501,7 @@ object Similarity {
     // the oracle's CTE namespace caps it) + trained PQ sub-codebooks
     // serving probe → ADC → exact rerank; the PQ sub-codebooks fold the
     // memoized Artifacts.pqStats model (identical frame — pqCodebook is
-    // statsToPqCodebook ∘ pqTrain)
+    // foldCodebook ∘ pqTrain)
     "q_ann_ivfpq_trained" -> ((s, d) =>
       annIvfPqRerankWith(Tables.embeddings(s, d), "vec_id", "embedding",
         ivfCodebook(Tables.embeddings(s, d), "vec_id", "embedding", 2),

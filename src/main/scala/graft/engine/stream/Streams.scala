@@ -3,7 +3,6 @@ package graft.engine.stream
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 /** Structured-Streaming re-expression of the reference's streaming surface
@@ -81,26 +80,6 @@ object Streams {
   /** One observed batch from the offset mirror (O3/O4 parity). */
   final case class OffsetRecord(batchId: Long, source: String,
                                 startOffset: String, endOffset: String)
-
-  /** O3/O4 parity: read-only mirror of the engine's per-batch offset
-    * bookkeeping, the Structured-Streaming analogue of the reference's
-    * `saveOffsets` ZK write (K:98–109). One record per completed batch,
-    * exposing start/end offsets exactly as the WAL commits them. */
-  final class OffsetMirror extends StreamingQueryListener {
-    private val records = new ConcurrentLinkedQueue[OffsetRecord]()
-    def observed: Seq[OffsetRecord] = records.asScala.toSeq
-
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val p = e.progress
-      p.sources.foreach { s =>
-        records.add(OffsetRecord(p.batchId, s.description,
-          Option(s.startOffset).map(_.toString).getOrElse("none"),
-          Option(s.endOffset).map(_.toString).getOrElse("none")))
-      }
-    }
-  }
 
   /** Pluggable external offset store — the persistence seam of the O3/O4
     * parity mirror. The reference hardcodes ZooKeeper as its store
@@ -270,14 +249,13 @@ object Streams {
     def stop(): Unit = server.stop(0)
   }
 
-  /** O3/O4 as a durable operational artifact, not just an in-memory
-    * observability hook: every completed batch's per-source offset range
-    * goes through the [[OffsetStore]] — the Structured-Streaming analogue
-    * of the reference persisting offsets externally every batch
-    * (K:98–109). A restart replaying the last uncommitted batch re-emits
-    * the same batchId and the store's idempotent write converges, so
-    * after any kill-and-restart the store reads back as contiguous,
-    * gapless offset ranges (tested). */
+  /** O3/O4 parity as a durable operational artifact: every completed
+    * batch's per-source offset range goes through the [[OffsetStore]] —
+    * the Structured-Streaming analogue of the reference persisting
+    * offsets externally every batch (K:98–109). A restart replaying the
+    * last uncommitted batch re-emits the same batchId and the store's
+    * idempotent write converges, so after any kill-and-restart the store
+    * reads back as contiguous, gapless offset ranges (tested). */
   final class DurableOffsetMirror(store: OffsetStore) extends StreamingQueryListener {
     /** File-store convenience — the local default. */
     def this(dir: String) = this(new AtomicFileOffsetStore(dir))

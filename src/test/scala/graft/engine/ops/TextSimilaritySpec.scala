@@ -747,6 +747,51 @@ class TextSimilaritySpec extends SparkSuite {
       "round 2 must move at least one slice between codes")
   }
 
+  // The Lloyd trainers bring each round's codebook back to the driver
+  // instead of caching per-round frames: a call leaves no cached RDD
+  // behind, and a repeat call trains again rather than reading an
+  // earlier call's blocks, so it schedules as many jobs as the first.
+  test("Lloyd trainers leave no cached RDDs; a repeat call schedules as many jobs") {
+    // a no-op filter no other test applies: a frame an earlier test left
+    // cached cannot match these plans, so the first call trains cold
+    val emb = graft.engine.io.Tables.embeddings(spark, sfDir).filter(col("vec_id") =!= -7L)
+    val sc = spark.sparkContext
+    val fenceKey = "graft.test.fence"
+    def jobsOf(tag: String)(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val fenced = new java.util.concurrent.CountDownLatch(1)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty(fenceKey) == tag)) fenced.countDown()
+          else jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        body
+        // the listener bus is FIFO: once a job started after the body is
+        // seen, every job the body scheduled has been delivered
+        sc.setLocalProperty(fenceKey, tag)
+        try sc.parallelize(Seq(1), 1).count()
+        finally sc.setLocalProperty(fenceKey, null)
+        assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus drain")
+      } finally sc.removeSparkListener(listener)
+      jobs.get
+    }
+    val trainers = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "kmeansTrain(3)" -> (() => Similarity.kmeansTrain(emb, "vec_id", "embedding", 3)),
+      "pqTrainIters(2)" -> (() => Similarity.pqTrainIters(emb, "vec_id", "embedding", 2)),
+      "ivfCodebookSized(24, 2)" ->
+        (() => Similarity.ivfCodebookSized(emb, "vec_id", "embedding", 24, 2)))
+    trainers.foreach { case (name, train) =>
+      val cached0 = sc.getPersistentRDDs.size
+      val first = jobsOf(s"$name-1") { train().collect(); () }
+      assert(sc.getPersistentRDDs.size == cached0,
+        s"$name left ${sc.getPersistentRDDs.size - cached0} cached RDDs behind")
+      val repeat = jobsOf(s"$name-2") { train().collect(); () }
+      assert(repeat == first, s"$name: the repeat call scheduled $repeat jobs, the first $first")
+    }
+  }
+
   test("annPqRerank: ADC prunes, the exact scorer decides — scores match brute-force cosine") {
     val exact = run("q_sim_cosine").as[(Long, Double)].collect().toMap
     val rr = run("q_ann_pq_rerank").as[(Long, Long, Double, Long)].collect().toSeq

@@ -21,8 +21,22 @@ class StreamingSpec extends SparkSuite {
   case class Doc(doc_id: Long, ts: Timestamp, text: String)
   case class LDoc(doc_id: Long, ts: Timestamp, lang: String, text: String)
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-$tag").toString
+  // every checkpoint/sink directory a test makes, deleted in afterAll
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  private def tmpDir(tag: String): String = {
+    val dir = Files.createTempDirectory(s"graft-$tag").toFile
+    tmpDirs.add(dir)
+    dir.toString
+  }
+
+  override def afterAll(): Unit = {
+    try {
+      // a query still writing its checkpoint would recreate what is deleted
+      spark.streams.active.foreach { q => q.stop(); q.awaitTermination() }
+      tmpDirs.asScala.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    } finally super.afterAll()
+  }
 
   // s_decode_projection (O5: key dropped, value as string, K:43)
   test("s_decode_projection: (key,value) stream reduces to string values") {
@@ -57,7 +71,7 @@ class StreamingSpec extends SparkSuite {
 
   // s_offsets_saved_per_batch (O3/O4 parity via listener mirror)
   test("s_offsets_saved_per_batch: one offset record per batch, monotonic") {
-    val mirror = new Streams.OffsetMirror
+    val mirror = new Streams.DurableOffsetMirror(new Streams.InMemoryOffsetStore)
     spark.streams.addListener(mirror)
     try {
       val in = MemoryStream[(String, String)](spark)
@@ -69,8 +83,8 @@ class StreamingSpec extends SparkSuite {
       q.stop(); q.awaitTermination()
       // listener events are async — wait briefly for delivery
       val deadline = System.nanoTime() + 10e9.toLong
-      while (mirror.observed.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
-      val recs = mirror.observed
+      while (mirror.readBack().size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      val recs = mirror.readBack()
       assert(recs.size >= 2, s"expected ≥2 offset records, got $recs")
       val batchIds = recs.map(_.batchId)
       assert(batchIds == batchIds.sorted, "offset records in batch order (R:143)")
@@ -882,7 +896,7 @@ class StreamingSpec extends SparkSuite {
     q1.stop() // kill
     // the production writer's persisted artifacts, round-tripped through
     // storage: the standing corpus and the cluster table
-    val store = Files.createTempDirectory("graft-maint-store").toString
+    val store = tmpDir("maint-store")
     m1.corpusDocs.get.write.parquet(s"$store/corpus")
     m1.current.get.write.parquet(s"$store/standing")
     // fresh process: re-seed from storage, resume the SAME checkpoint —
@@ -1016,7 +1030,7 @@ class StreamingSpec extends SparkSuite {
     q1.stop() // kill
 
     // the writer's persisted artifacts, round-tripped through storage
-    val store = Files.createTempDirectory("graft-repair-store").toString
+    val store = tmpDir("repair-store")
     m1.corpusDocs.get.write.parquet(s"$store/corpus")
     m1.standingEdges.get.write.parquet(s"$store/edges")
     m1.current.get.write.parquet(s"$store/standing")
@@ -1095,7 +1109,7 @@ class StreamingSpec extends SparkSuite {
 
     // restart from the persisted registry; the source re-delivers only
     // post-crash batches through the same checkpoint
-    val store = Files.createTempDirectory("graft-linereg").toString + "/registry"
+    val store = tmpDir("linereg") + "/registry"
     m1.standingLines.get.write.parquet(store)
     val m2 = new Streams.LineDedupMaintenance("doc_id", "text")
     m2.resume(spark.read.parquet(store))
@@ -2307,6 +2321,7 @@ class StreamingSpec extends SparkSuite {
   test("s_stream_file_sink: manifest-committed rows exactly once; orphan files invisible") {
     val in = MemoryStream[Doc](spark)
     val dir = tmpDir("filesink-out")
+    val stage = tmpDir("filesink-stage")
     val ckpt = tmpDir("filesink-ckpt")
     def start() = Streams.parquetSink(
       in.toDF().select(col("doc_id"), col("text")), dir, ckpt).start()
@@ -2325,8 +2340,8 @@ class StreamingSpec extends SparkSuite {
     // a torn write leaves an uncommitted data file: metadata-aware reads
     // must not see it — that invisibility IS the exactly-once guarantee
     Seq((99L, "orphan")).toDF("doc_id", "text")
-      .write.mode("append").parquet(dir + "_stage")
-    val orphan = new java.io.File(dir + "_stage").listFiles()
+      .write.mode("append").parquet(stage)
+    val orphan = new java.io.File(stage).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     java.nio.file.Files.copy(orphan.toPath,
       new java.io.File(dir, "part-99999-orphan.snappy.parquet").toPath)
