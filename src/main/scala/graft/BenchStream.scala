@@ -245,7 +245,7 @@ object BenchStream {
     // r16 (verdict item 2): the section is now a RUNG LADDER like
     // line_registry_growth — the standard 48-batch rung plus an
     // env-gated extended rung a decade up (~480 batches, the depth at
-    // which the CkptLease leak bit at ~900 and the stats-squaring bug
+    // which the checkpoint-release leak bit at ~900 and the stats-squaring bug
     // at ~30), merged forward across runs.
     val ctBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_CLUSTER_BATCHES", "48").toInt
     val ctExtBatches = sys.env.getOrElse("SPARK_GRAFT_STREAM_CLUSTER_EXT_BATCHES", "0").toInt

@@ -128,12 +128,10 @@ object ScaleCheck {
     // linear controls (wide scans, shuffles, windows)
     "q_agg_group", "q_window_rank", "q_topk_per_group", "q_join_bucketed",
     "q_profile", "q_zorder", "q_outlier_mad", "q_vocab_build",
-    // r15 verdict item 6: the forced star-vs-labelprop DIAGNOSTIC pair
-    // (see Diagnostic below) — both distributed CC loops measured past
-    // the fused-path gate on the high-diameter digit-ladder customer
-    // graph, so the r6 "star wins when edges can't persist partitioned"
-    // note gets measured ladder points instead of a one-off figure
-    "x_cc_star_forced", "x_cc_labelprop_forced",
+    // the forced distributed-CC DIAGNOSTIC (see Diagnostic below): the
+    // label-prop loop measured past the fused-path gate on the
+    // high-diameter digit-ladder customer graph
+    "x_cc_labelprop_forced",
     // r15 new queries (ladder-on-introduction discipline): the mixture
     // plan (domain-keyed agg + 1-row broadcast-back — should ride flat)
     // and the URL dedup (narrow derive + one url-keyed agg — the
@@ -203,23 +201,21 @@ object ScaleCheck {
     * past it and ride the trained path.) */
   val DeclaredXlExempt: Set[String] = Set.empty
 
-  /** DIAGNOSTIC comparison entries (r15 verdict item 6), not
-    * production-path linearity claims: both distributed CC loops run
-    * FORCED past the fused union-find gate (`spark.graft.cc
-    * .localMaxEdges` = 0 for the duration of the build) over the
-    * q_fuzzy_clusters digit-ladder customer graph — the high-diameter
-    * regime where star-contraction's r6 advantage (4.7 s vs 9.8 s at
-    * sf0.1) was measured once and carried as a note. The entries exist
-    * to COMPARE the two loops' ladder curves; the production surface
-    * never takes either loop at these scales (the gate routes to the
-    * fused task), so they are excluded from every flag list and stop
+  /** DIAGNOSTIC entry, not a production-path linearity claim: the
+    * distributed label-prop CC loop run FORCED past the fused union-find
+    * gate (`spark.graft.localMaxEdges` = 0 for the duration of the
+    * build) over the q_fuzzy_clusters digit-ladder customer graph — the
+    * high-diameter regime, where the loop's round count is largest. It
+    * tracks what the distributed route costs per rung; the production
+    * surface never takes that route at these scales (the gate routes to
+    * the fused task), so it is excluded from every flag list and stops
     * at the 30× rung like the other declared tiers. */
-  val Diagnostic: Set[String] = Set("x_cc_star_forced", "x_cc_labelprop_forced")
+  val Diagnostic: Set[String] = Set("x_cc_labelprop_forced")
 
-  private def forcedCc(algo: String): (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
+  private val forcedCc: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
     (s, d) => {
       import org.apache.spark.sql.functions.col
-      val key = "spark.graft.cc.localMaxEdges"
+      val key = "spark.graft.localMaxEdges"
       val prior = s.conf.getOption(key)
       s.conf.set(key, "0")
       try {
@@ -229,24 +225,22 @@ object ScaleCheck {
           .select(col("id_1").as("doc_id_1"), col("id_2").as("doc_id_2"))
           .localCheckpoint()
         graft.engine.ops.TextPipeline.dedupClusters(cust, "c_custkey", "c_name",
-          0.9, precomputedPairs = Some(pairs), algo = algo)
+          0.9, precomputedPairs = Some(pairs))
       } finally prior.fold(s.conf.unset(key))(v => s.conf.set(key, v))
     }
 
-  /** ScaleCheck-local bindings for the diagnostic entries — NOT part of
+  /** ScaleCheck-local binding for the diagnostic entry — NOT part of
     * SparkEntry.queries (the SURVEY §2.2 inventory stays 1:1 with the
-    * registry; these are audit probes, not operators). */
+    * registry; this is an audit probe, not an operator). */
   val Extras: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
-    Map("x_cc_star_forced" -> forcedCc("star"),
-        "x_cc_labelprop_forced" -> forcedCc("labelprop"))
+    Map("x_cc_labelprop_forced" -> forcedCc)
 
   /** Rungs each query is allowed to skip: the declared-quadratic audit
     * tiers and the two quadratic-by-fixture exemptions stop at the 30×
     * rung — at 100× their cost is ~100× the 10× point by design (the
     * declaration IS that they don't ride the ladder; their sampled /
     * trained / deletion-neighborhood production twins run the full
-    * ladder in their place). The diagnostic pair stops there too (its
-    * question — which loop's curve is flatter — is answered by 30×). */
+    * ladder in their place). The diagnostic entry stops there too. */
   val XxlSkip: Set[String] = DeclaredQuadratic ++ DeclaredXlExempt ++ Diagnostic
 
   def main(args: Array[String]): Unit = {

@@ -219,7 +219,7 @@ private[ops] object Artifacts {
     * `q_bpe_learn` returns its merge table and `q_bpe_apply` its applied
     * corpus, two faces of the identical sequential loop. Both outputs are
     * already materialized (merges via the driver argmax, corpus via the
-    * per-round localCheckpoints); Bench forces the applied corpus. */
+    * per-round truncations); Bench forces the applied corpus. */
   val bpeChain: Artifact[(DataFrame, DataFrame)] =
     declare("bpe_chain", (t: (DataFrame, DataFrame)) => t._2) { (s, d) =>
       TextPipeline.bpeChain(Tables.documents(s, d), "doc_id", "text", BpeMerges)

@@ -129,87 +129,91 @@ object TextPipeline {
     * Scale shape: a handful of label-propagation rounds (iterations ≈
     * graph diameter, and near-dup clusters are dense so it converges
     * quickly), each one join + one min-aggregate, both hash-partitioned
-    * on the id. The edge list is persisted once; each round's labels are
-    * `localCheckpoint`ed to truncate lineage — the standard iterative-
-    * DataFrame pattern. (A persist/unpersist chain does NOT work here:
-    * unpersisting round N's labels cascade-invalidates round N+1's cache
-    * because its plan depends on them, and each round then recomputes the
-    * whole history — measured exponential, 1.5 s → 16 s by iteration 6.)
-    * Convergence is detected by the monotone-decreasing label sum, so
-    * termination needs no fixed iteration cap. Returns (id, cluster) for
-    * EVERY document.
+    * on the id. The edge list is persisted once; the rounds run on
+    * [[Lineage.fixpoint]] (each round materialized through
+    * [[Lineage.truncate]], superseded rounds released). Convergence is
+    * detected by the monotone-decreasing label sum, so termination
+    * needs no fixed iteration cap. Returns (id, cluster) for EVERY
+    * document.
     *
-    * `reliable=true` swaps `localCheckpoint` for `checkpoint` against the
-    * context's checkpoint dir every `checkpointEvery` rounds (the rest stay
-    * local): executor-local blocks are NOT fault-tolerant, so on a real
-    * cluster a lost executor mid-fixpoint kills the job; a reliable
-    * checkpoint every k rounds bounds the recompute to k rounds of lineage.
-    * Requires `spark.sparkContext.setCheckpointDir` to have been called. */
+    * Fault tolerance is the deployment's choice, not a parameter: with
+    * a context checkpoint dir set, every round is a reliable
+    * checkpoint, so a lost executor mid-fixpoint recomputes one round.
+    *
+    * Nothing the call caches outlives it: the pair frame it persists
+    * for the gate count is unpersisted once the labels are
+    * materialized, so a repeat call on the same pairs recomputes
+    * instead of reading the first call's blocks. */
   def dedupClusters(documents: DataFrame, idCol: String, textCol: String,
                     threshold: Double, maxIters: Int = 20,
-                    reliable: Boolean = false, checkpointEvery: Int = 1,
-                    precomputedPairs: Option[DataFrame] = None,
-                    algo: String = "labelprop"): DataFrame = {
+                    precomputedPairs: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    // one materialization per round: reliable rounds write to the
-    // checkpoint dir (fault-tolerant), all others truncate lineage via
-    // executor-local blocks (fast; the local[n] default). Shared by both
-    // algorithms so reliable/checkpointEvery keep their contract under
-    // algo="star" too.
-    def mat(df: DataFrame, round: Int): DataFrame =
-      if (reliable && round % math.max(1, checkpointEvery) == 0) df.checkpoint()
-      else df.localCheckpoint()
-    // the star route consumes the pair list twice (the gate count and
-    // the contraction loop); when the pairs were NOT precomputed each
-    // consumption would re-run the whole minhash banding — materialize
-    // once on that route only (label-prop's single consumption rides
-    // the symmetric edge persist below instead)
-    val rawPairs0 = precomputedPairs
-      .getOrElse(Similarity.minhashNearDup(documents, idCol, textCol, threshold, ordered = false))
-    // BOTH algorithms now gate on the raw pair count before building
-    // their loop layouts (r18 extended this to label-prop, which used to
-    // count the already-persisted symmetric edge list — paying the sym
-    // unionAll + repartition shuffle + cache materialization even when
-    // the fused path then bypassed them), so when the pairs were not
-    // precomputed the count and the post-gate consumer would each re-run
-    // the whole minhash banding — materialize once on that route.
-    val rawPairs =
-      if (precomputedPairs.isEmpty) rawPairs0.localCheckpoint()
-      else rawPairs0
+    // pairs computed here are consumed twice (the gate count and the
+    // chosen path): materialize them once, released at the end
+    val rawPairs = precomputedPairs.getOrElse(Lineage.truncate(
+      Similarity.minhashNearDup(documents, idCol, textCol, threshold, ordered = false)))
     val pairs = rawPairs.select(col("doc_id_1").as("a"), col("doc_id_2").as("b"))
-    val ccLocalMax = documents.sparkSession.conf
-      .getOption("spark.graft.cc.localMaxEdges").map(_.toLong)
-      .getOrElse(2000000L)
-    if (algo == "star") {
-      // the star route gates on the RAW pair count (2× = the symmetric
-      // edge count, same units as the config) without ever building
-      // label-prop's persisted symmetric join layout — star past the
-      // gate re-symmetrizes internally per round, and the fused task
-      // needs each undirected edge only once (union-find is
-      // direction-free)
-      if (!reliable && maxIters >= 20 && 2 * rawPairs.count() <= ccLocalMax)
-        return fusedUnionFind(documents, idCol, pairs)
-      return starComponents(documents, idCol, rawPairs, maxIters, mat)
-    }
-    // label-prop gate, MOVED ABOVE the symmetric layout build (r18): the
-    // fused task needs each undirected edge once, so counting the raw
-    // pairs here skips the sym unionAll + repartition shuffle + cache
-    // materialization entirely on the (default-cap) fused route — those
-    // existed solely to serve the distributed loop below. Same gate
-    // semantics: 2·|pairs| = the symmetric edge count the old
-    // edges.count() measured. See the r13/r14 adaptive-path-selection
-    // rationale further down; it applies verbatim.
-    // Caller-SUPPLIED pair frames are cached for the gate + walk pair of
+    // Caller-SUPPLIED pair frames are cached for the same two
     // consumptions: an unmaterialized subtree (e.g. semanticClusters'
-    // cell-blocked cosine verify) would otherwise execute twice — the
-    // very recompute the old persisted edge layout incidentally hid.
-    // (The isEmpty route is already localCheckpoint-materialized above;
-    // memoized suppliers add one cheap derived cache layer.)
-    val gatedPairs =
-      if (precomputedPairs.isEmpty || reliable || maxIters < 20) pairs
-      else pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    if (!reliable && maxIters >= 20 && 2 * gatedPairs.count() <= ccLocalMax)
-      return fusedUnionFind(documents, idCol, gatedPairs)
+    // cell-blocked cosine verify) would otherwise execute twice.
+    val cachePairs = precomputedPairs.isDefined && maxIters >= 20
+    if (cachePairs) pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // ADAPTIVE PATH SELECTION (r13): the iteration's input is the
+      // dup-graph edge list — graph-sized, ≪ corpus. When it fits one
+      // task (2·|pairs| = the symmetric edge count, against
+      // [[fusedMaxEdges]]), connected components run as ONE executor
+      // task: union-find with min-id component labels, which is the
+      // EXACT fixpoint the label-prop loop converges to (min id per
+      // component — the loop's monotone decrease has no other stable
+      // point), so the paths are result-identical whenever the loop
+      // converges (it always has: convergence is observed, the cap has
+      // never bound, and the DuckDB oracle's reachability walk pins the
+      // true components regardless of path). At fixture scale the loop
+      // is ~6 rounds of pure scheduler floor; the fused task removes it
+      // from EVERY consumer (clusters artifact, fuzzy/entity clusters,
+      // incremental CC, recall repair). The count runs on the raw pairs,
+      // BEFORE the symmetric layout below, so the fused route never pays
+      // the sym unionAll + repartition shuffle + cache (r18).
+      //
+      // The fused path is the EXACT fixpoint, so it only stands in when
+      // the caller's cap cannot bind semantically: a deliberately small
+      // maxIters asks for TRUNCATED propagation (partial labels), which
+      // only the round-based loop can honor — every production call
+      // site uses the default (20, ≥ the measured convergence depth).
+      // RAISING the cap SCALES WITH maxIters: the distributed loop runs
+      // ≤ maxIters pointer-jumping rounds — enough for any graph the
+      // DEFAULT 2M cap admits (jump-composed chains shrink
+      // geometrically), but a much larger cap on a pathological
+      // high-diameter graph could admit a graph whose loop would
+      // truncate where the fused path converges; raise maxIters with it
+      // (the loop self-reports truncation under spark.graft.debug).
+      if (maxIters >= 20 && 2 * pairs.count() <= fusedMaxEdges(documents.sparkSession))
+        fusedUnionFind(documents, idCol, pairs)
+      else labelPropagation(documents, idCol, pairs, maxIters)
+    } finally {
+      if (cachePairs) pairs.unpersist()
+      if (precomputedPairs.isEmpty) Lineage.release(rawPairs)
+    }
+  }
+
+  /** The one size gate of the iterative graph operators
+    * ([[dedupClusters]], [[pairGraphPagerankConverged]]): an edge list
+    * of at most `spark.graft.localMaxEdges` rows (default 2M) runs its
+    * fixpoint as ONE fused executor task, a larger one as the
+    * distributed round loop. At 2M edges the fused tasks hold ~64 MB of
+    * primitive arrays and compute in a few seconds, still far cheaper
+    * than the distributed loops' scheduler floor at that size (measured
+    * at the sf1 rung); a genuinely huge graph (a 100 TB dup graph)
+    * falls through to the distributed path. */
+  private def fusedMaxEdges(spark: SparkSession): Long =
+    spark.conf.getOption("spark.graft.localMaxEdges").map(_.toLong).getOrElse(2000000L)
+
+  /** [[dedupClusters]]' distributed route: min-label propagation with
+    * one pointer jump per round over the symmetric edge list. */
+  private def labelPropagation(documents: DataFrame, idCol: String,
+                               pairs: DataFrame, maxIters: Int): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
     // undirected edge list, materialized once, hash-partitioned on the
     // join key: every propagation round equi-joins edges on `b`, so the
     // cached partitioning is reused and only the (tiny) label table
@@ -222,58 +226,11 @@ object TextPipeline {
     // `canChangeCachedPlanOutputPartitioning`; without it a cached
     // plan pins the full session shuffle count and every loop round
     // schedules that many near-empty tasks per stage).
-    val edges = gatedPairs
-      .unionAll(gatedPairs.select(col("b").as("a"), col("a").as("b")))
+    val edges = pairs
+      .unionAll(pairs.select(col("b").as("a"), col("a").as("b")))
       .repartition(col("b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // ADAPTIVE PATH SELECTION (r13, the same counted-threshold
-      // discipline as the pagerank fixpoint): the iteration's input is
-      // the dup-graph edge list — graph-sized, ≪ corpus. When it fits
-      // one task (`spark.graft.cc.localMaxEdges`, default 2M rows),
-      // connected components run as ONE executor task: union-find with
-      // min-id component labels, which is the EXACT fixpoint the
-      // label-prop loop converges to (min id per component — the loop's
-      // monotone decrease has no other stable point), so the paths are
-      // result-identical whenever the loop converges (it always has:
-      // convergence is observed, the cap has never bound, and the
-      // DuckDB oracle's reachability walk pins the true components
-      // regardless of path). At fixture scale the loop is ~6 rounds of
-      // pure scheduler floor; the fused task removes it from EVERY
-      // consumer (clusters artifact, fuzzy/entity clusters, incremental
-      // CC, recall repair). Past the threshold — or whenever the caller
-      // asked for `reliable` fault-tolerant checkpoints, whose whole
-      // point is surviving executor loss mid-iteration — the
-      // distributed loop below runs unchanged. No driver collect on
-      // either path.
-      //
-      // The gate applies to BOTH distributed algorithms (r14): the
-      // union-find fixpoint is min-id components regardless of how the
-      // loop would have walked there, so `algo="star"` routes through
-      // the same fused task when the graph fits (gated above, on the
-      // raw pair count) — previously it early-returned above the gate
-      // and q_fuzzy_clusters paid ~N star-contraction rounds of
-      // scheduler floor on a graph that fits one task. Past the gate
-      // each algo keeps its own loop.
-      //
-      // RAISING `spark.graft.cc.localMaxEdges` SCALES WITH maxIters:
-      // the fused path returns the exact fixpoint, while the
-      // distributed label-prop loop runs ≤ maxIters pointer-jumping
-      // rounds — enough for any graph admitted by the DEFAULT 2M cap
-      // (jump-composed chains shrink geometrically, so 20 rounds cover
-      // diameters ≫ 2M-edge graphs can realize under the observed-
-      // convergence discipline), but a much larger cap on a
-      // pathological high-diameter graph could admit a graph whose
-      // loop would truncate where the fused path converges. If you
-      // raise the cap by k decades, raise maxIters accordingly (the
-      // loop self-reports truncation under spark.graft.debug).
-      // the fused path is the EXACT fixpoint, so it only stands in when
-      // the caller's cap cannot bind semantically: a deliberately small
-      // maxIters asks for TRUNCATED propagation (partial labels), which
-      // only the round-based loop can honor — every production call
-      // site uses the default (20, ≥ the measured convergence depth).
-      // (The gate itself now sits above the edges build — see r18 note.)
-      val obs0 = new org.apache.spark.sql.Observation("labelsum_init")
       // The loop iterates over GRAPH NODES ONLY — every node of the
       // symmetric edge list appears as a `b`, and a node with no
       // near-dup partner is its own cluster by definition, so the
@@ -285,74 +242,43 @@ object TextPipeline {
       // first hop folds into the seed materialization, riding the edge
       // list's existing (b)-partitioning (groupBy("b") reuses it, no
       // extra shuffle).
-      val minNbr = edges.groupBy("b").agg(min(col("a")).as("mn"))
+      val seed = edges.groupBy("b").agg(min(col("a")).as("mn"))
         .withColumnRenamed("b", "id")
-      var labels = mat(minNbr
         .select(col("id"), least(col("id"), col("mn")).as("cluster"))
-        .observe(obs0, sum("cluster").as("s")), 0)
-      // empty graph → empty labels → null sum; treat as 0 so the first
-      // batch's equal-0 sum converges immediately instead of NPE-ing
-      def obsSum(o: org.apache.spark.sql.Observation): Long =
-        Option(o.get("s")).fold(0L)(_.asInstanceOf[Long])
-      var prevSum = obsSum(obs0)
-      var iter = 0
-      var converged = false
-      // pointer jumping: also adopt the label's own label. Every label
-      // IS a node id, so each jump composes the previous-round lookup
-      // once more — chains shrink geometrically, O(log diameter)
-      // rounds instead of O(diameter). The jump table is the BATCH-
-      // START labels — already materialized — so each batch pays
-      // exactly ONE materialization (r2 checkpointed the hop too, to
-      // feed a self-join, and the double write was ~half the round
-      // cost). Labels are monotone per node (labels_n(c) ≤ c for every
-      // node c), so jumping through the older table is a pure decrease
-      // and the sum fixpoint test is unchanged: an equal sum means no
-      // node moved, i.e. the hop alone is at fixpoint.
-      while (!converged && iter < maxIters) {
-        val base = labels // round-start snapshot
-        // pointer jump through the round-start table: label(u) ←
-        // min(label(u), base(label(u))). Jump-count tuning was measured
-        // flat at sf0.1 (1, 2 or 3 prev-table jumps all converge in 6
-        // rounds — the binding constraint is the graph's hop diameter,
-        // not chain length), and jumping through the FRESH hop result
-        // (textbook path-halving, 5 rounds) costs ~2× wall clock
-        // because the hop subtree gets re-executed on the ptr side —
-        // AQE does not reuse the exchange across the self-join's two
-        // different-keyed sides. One cheap prev-table jump is the
-        // measured optimum.
-        def jump(df: DataFrame, tag: String): DataFrame = {
-          val ptr = base.select(col("id").as(s"pid_$tag"),
-                                col("cluster").as(s"pcluster_$tag"))
-          df.join(ptr, df("cluster") === ptr(s"pid_$tag"), "left_outer")
-            .select(df("id"),
-              least(df("cluster"),
-                    coalesce(col(s"pcluster_$tag"), df("cluster"))).as("cluster"))
-        }
+      // ONE round per materialization: batching two hop-rounds per job
+      // was measured WORSE (6.2 s vs 5.2 s at sf0.1) — the loop is
+      // stage-bound, not driver-round-trip-bound, and batch granularity
+      // wastes a full extra round at the fixpoint test. Labels are
+      // monotone per node, so an equal exact sum means no node moved —
+      // a hash fingerprint would be weaker, not stronger, here.
+      val labels = Lineage.fixpoint(seed, maxIters, 1, "dedup_clusters",
+          Seq(sum("cluster"))) { base =>
         // each node adopts the min of its own and its neighbors' labels
         val msgs = edges.join(base.withColumnRenamed("id", "b"), "b")
           .select(col("a").as("id"), col("cluster"))
         val hopped = base.select(col("id"), col("cluster"))
           .unionAll(msgs)
           .groupBy("id").agg(min("cluster").as("cluster"))
-        // The convergence sum rides the SAME job that materializes the
-        // round (observe → CollectMetrics), not a second agg job.
-        // (Batching TWO hop-rounds per materialization was measured
-        // WORSE — 6.2 s vs 5.2 s at sf0.1 — the loop is stage-bound,
-        // not driver-round-trip-bound, and batch granularity wastes a
-        // full extra round at the fixpoint test.)
-        val obs = new org.apache.spark.sql.Observation(s"labelsum_i$iter")
-        labels = mat(jump(hopped, "a")
-          .observe(obs, sum("cluster").as("s")),
-          iter + 1) // eager: truncates lineage, stays distributed
-        val nextSum = obsSum(obs)
-        converged = nextSum == prevSum // monotone ⇒ equal sum = fixpoint
-        prevSum = nextSum
-        iter += 1
+        // pointer jump through the round-start table: label(u) ←
+        // min(label(u), base(label(u))). Every label IS a node id, so
+        // each jump composes the previous-round lookup once more —
+        // chains shrink geometrically, O(log diameter) rounds instead of
+        // O(diameter). The jump table is the round-start labels —
+        // already materialized — so each round pays exactly ONE
+        // materialization, and jumping through the older table is a
+        // pure decrease (labels_n(c) ≤ c), so the sum test is unchanged.
+        // Jump-count tuning was measured flat at sf0.1 (1, 2 or 3
+        // prev-table jumps all converge in 6 rounds — the binding
+        // constraint is the graph's hop diameter), and jumping through
+        // the FRESH hop result (textbook path-halving, 5 rounds) costs
+        // ~2× wall clock because the hop subtree gets re-executed on the
+        // ptr side — AQE does not reuse the exchange across the
+        // self-join's two different-keyed sides.
+        val ptr = base.select(col("id").as("pid"), col("cluster").as("pcluster"))
+        hopped.join(ptr, hopped("cluster") === ptr("pid"), "left_outer")
+          .select(hopped("id"),
+            least(hopped("cluster"), coalesce(col("pcluster"), hopped("cluster"))).as("cluster"))
       }
-      // diagnostics opt-in (spark.graft.debug=true): library callers and
-      // tests stay silent like the rest of the operator layer
-      if (documents.sparkSession.conf.getOption("spark.graft.debug").contains("true"))
-        System.err.println(s"[dedup_clusters] ${if (converged) "converged" else "max-iters"} after $iter rounds")
       // singletons re-enter here: cluster = own id for every document
       // with no verified partner (one anti-join against the graph's
       // node set — the only stage that touches the full corpus)
@@ -362,45 +288,51 @@ object TextPipeline {
     } finally edges.unpersist()
   }
 
+  /** Sorted distinct ids over `parts` and each id's index in that
+    * order — the id compaction of the fused graph tasks, so their inner
+    * loops sweep primitive arrays instead of hashing (measured ~10×
+    * over a map-based round at the sf1 rung's ~1M edges). Sort +
+    * in-place dedup, no boxing. */
+  private def compactIds(parts: Array[Long]*): (Array[Long], scala.collection.mutable.LongMap[Int]) = {
+    val s = new Array[Long](parts.map(_.length).sum)
+    var off = 0
+    parts.foreach { p => System.arraycopy(p, 0, s, off, p.length); off += p.length }
+    java.util.Arrays.sort(s)
+    var w = 0; var r = 0
+    while (r < s.length) {
+      if (w == 0 || s(r) != s(w - 1)) { s(w) = s(r); w += 1 }
+      r += 1
+    }
+    val ids = java.util.Arrays.copyOf(s, w)
+    val idx = new scala.collection.mutable.LongMap[Int](ids.length * 2)
+    var k = 0
+    while (k < ids.length) { idx.update(ids(k), k); k += 1 }
+    (ids, idx)
+  }
+
   /** The counted-gate FUSED connected-components task ([[dedupClusters]]'
-    * adaptive path, shared by both distributed algorithms): union-find
-    * with min-id component labels over an edge frame `(a, b)` — each
-    * undirected edge may appear once or symmetrically, union-find is
-    * direction-free — run as ONE executor task via the house-justified
-    * mapPartitions (at the gate's admission size the distributed loops
-    * are pure DAGScheduler latency over kilobytes). No driver collect:
-    * the labels stay a DataFrame and join back to the corpus. */
+    * adaptive path): union-find with min-id component labels over an
+    * edge frame `(a, b)` — each undirected edge may appear once or
+    * symmetrically, union-find is direction-free — run as ONE executor
+    * task via the house-justified mapPartitions (at the gate's
+    * admission size the distributed loop is pure DAGScheduler latency
+    * over kilobytes). No driver collect: the labels stay a DataFrame
+    * and join back to the corpus. */
   private def fusedUnionFind(documents: DataFrame, idCol: String,
                              e: DataFrame): DataFrame = {
     import documents.sparkSession.implicits._
-    val localLabels = e.as[(Long, Long)]
+    val localLabels = Lineage.truncate(e.as[(Long, Long)]
       .coalesce(1)
       .mapPartitions { it =>
         // stream into primitive builders (boxed pairs never
         // retained: ~200 B/edge transient vs 16 B here), compact
-        // ids by sort + in-place dedup, union-find with path
-        // halving, then map each component to its min member id —
-        // the label-prop fixpoint
+        // ids, union-find with path halving, then map each component
+        // to its min member id — the label-prop fixpoint
         val ab = scala.collection.mutable.ArrayBuilder.make[Long]
         val bb = scala.collection.mutable.ArrayBuilder.make[Long]
         it.foreach { e => ab += e._1; bb += e._2 }
         val ea = ab.result(); val eb = bb.result()
-        val m = ea.length
-        val ids = {
-          val s = new Array[Long](2 * m)
-          System.arraycopy(ea, 0, s, 0, m)
-          System.arraycopy(eb, 0, s, m, m)
-          java.util.Arrays.sort(s)
-          var w = 0; var r = 0
-          while (r < 2 * m) {
-            if (w == 0 || s(r) != s(w - 1)) { s(w) = s(r); w += 1 }
-            r += 1
-          }
-          java.util.Arrays.copyOf(s, w)
-        }
-        val idx = new scala.collection.mutable.LongMap[Int](ids.length * 2)
-        var k0 = 0
-        while (k0 < ids.length) { idx.update(ids(k0), k0); k0 += 1 }
+        val (ids, idx) = compactIds(ea, eb)
         val parent = Array.tabulate(ids.length)(identity)
         def find(x0: Int): Int = {
           var x = x0
@@ -408,7 +340,7 @@ object TextPipeline {
           x
         }
         var j = 0
-        while (j < m) {
+        while (j < ea.length) {
           val ra = find(idx(ea(j))); val rb = find(idx(eb(j)))
           if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
           j += 1
@@ -418,8 +350,7 @@ object TextPipeline {
         // component minimum
         ids.iterator.zipWithIndex.map { case (id, k) => (id, ids(find(k))) }
       }
-      .toDF("id", "cl")
-      .localCheckpoint() // materialize while the caller's edge source is live
+      .toDF("id", "cl")) // materialize while the caller's edge source is live
     documents.select(col(idCol).as("id"))
       .join(localLabels, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("cl"), col("id")).as("cluster"))
@@ -533,94 +464,6 @@ object TextPipeline {
       .orderBy("cluster")
   }
 
-  /** Alternating large-star/small-star connected components (the
-    * MapReduce-CC formulation) over a canonical `(a < b)` pair list —
-    * the structural alternative to [[dedupClusters]]' label-propagation
-    * loop, kept behind its `algo` flag for measured comparison:
-    *  - large-star: every node's strictly-larger neighbors reconnect to
-    *    `min(N(u) ∪ {u})`;
-    *  - small-star: every node's smaller-or-equal neighbors (plus the
-    *    node) reconnect to the min of that set.
-    * Both phases compose lazily inside ONE materialization per
-    * iteration; convergence = the (count, Σa, Σb) triple repeating,
-    * observed on the same job. At fixpoint every component is a star
-    * rooted at its min id, which is exactly the label-prop answer —
-    * same output contract, same oracle (spec-pinned identical on the
-    * fixture).
-    *
-    * MEASURED AND REJECTED as the default (round 6, sf0.1 DevTime
-    * steady state): star 12.65 s vs label-prop 4.08 s. The fixture
-    * loop is SCHEDULER-bound, and each star iteration re-shuffles the
-    * whole EDGE set through two groupBys, two distincts and two joins
-    * (~6 stages/iteration), where a label-prop round shuffles only the
-    * tiny label table against the once-persisted hash-partitioned edge
-    * list (~3 stages). Star's asymptotic win (O(log n) iterations
-    * independent of diameter, edges shrinking toward stars) needs
-    * per-round DATA cost to dominate — i.e. an edge list too big to
-    * persist partitioned — which is the opposite of this regime. The
-    * flag stays for that regime and for the equivalence spec. Since
-    * r14 this loop only runs PAST [[dedupClusters]]' counted
-    * union-find gate — a graph that fits one task never pays the
-    * star rounds' scheduler floor. */
-  private def starComponents(documents: DataFrame, idCol: String,
-                             pairs: DataFrame, maxIters: Int,
-                             mat: (DataFrame, Int) => DataFrame): DataFrame = {
-    def sym(e: DataFrame): DataFrame =
-      e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-    def largeStar(adj: DataFrame): DataFrame = {
-      val mins = adj.groupBy("a").agg(min("b").as("mn"))
-        .select(col("a"), least(col("a"), col("mn")).as("m"))
-      adj.filter(col("b") > col("a")).join(mins, "a")
-        .select(col("m").as("a"), col("b").as("b"))
-        .filter(col("a") < col("b")).distinct()
-    }
-    def smallStar(adj: DataFrame): DataFrame = {
-      val le = adj.filter(col("b") < col("a"))
-      val mins = le.groupBy("a").agg(min("b").as("m"))
-      le.join(mins, "a")
-        .select(col("m").as("x"), col("b").as("y"))
-        .unionAll(mins.select(col("m").as("x"), col("a").as("y")))
-        .filter(col("x") =!= col("y"))
-        .select(least(col("x"), col("y")).as("a"),
-                greatest(col("x"), col("y")).as("b"))
-        .distinct()
-    }
-    var e = pairs.select(col("doc_id_1").as("a"), col("doc_id_2").as("b")).distinct()
-    var prev = (-1L, -1L)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val obs = new org.apache.spark.sql.Observation(s"star_i$iter")
-      // convergence = the edge SET repeating. The fingerprint is
-      // (count, XOR of xxhash64(a, b)): the edge list is distinct by
-      // construction, XOR is order-free and overflow-free, and two
-      // different edge sets colliding needs a 64-bit hash collision —
-      // unlike the earlier (count, Σa, Σb) triple, which any swap
-      // moving mass between two edges could collide (e.g.
-      // {(1,4),(2,3)} vs {(1,3),(2,4)}).
-      e = mat(smallStar(sym(largeStar(sym(e))))
-        .observe(obs, count(lit(1)).as("n"),
-          bit_xor(xxhash64(col("a"), col("b"))).as("h")),
-        iter + 1)
-      val cur = (obs.get("n").asInstanceOf[Long],
-        Option(obs.get("h")).fold(0L)(_.asInstanceOf[Long]))
-      converged = cur == prev
-      prev = cur
-      iter += 1
-    }
-    // surface the non-fixpoint case exactly like the label-prop loop:
-    // hitting maxIters without the set repeating means labels may be
-    // incomplete, and silence would make that indistinguishable from
-    // success
-    if (documents.sparkSession.conf.getOption("spark.graft.debug").contains("true"))
-      System.err.println(s"[star_components] ${if (converged) "converged" else "max-iters"} after $iter rounds")
-    val labels = e.select(col("b").as("id"), col("a").as("cluster"))
-      .unionAll(e.select(col("a").as("id"), col("a").as("cluster")).distinct())
-    documents.select(col(idCol).as("id"))
-      .join(labels.groupBy("id").agg(min("cluster").as("cluster")), Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
-  }
-
   /** Incremental connected components — the maintenance half of the
     * cluster-table lifecycle (the dedup analogue of [[Similarity
     * .minhashIndexMerge]]'s index maintenance): given yesterday's
@@ -661,16 +504,17 @@ object TextPipeline {
     // left joins against the (id-cardinality) prior table — at scale
     // the delta side is small, so AQE broadcasts IT, and the standing
     // table streams; either way cost ∝ inputs, no fixpoint touched yet.
-    // persist (r18): the quotient edge list is DELTA-sized and consumed
-    // by three subplans (the CC gate count / fixpoint input and both
-    // unionAll arms of the node set) — unpersisted, the translation
-    // joins against the standing table re-spliced into each consumer
-    // and the final plan carried ~187 Exchange nodes at sf0.1 (the
-    // dedup_cascade plan-splice disease, guide §2.4); cached it is one
-    // InMemoryRelation read per consumer. Lazy persist, not
-    // localCheckpoint: no eager job, and the binding-local frame is
-    // ContextCleaner-freed with the query.
-    val qEdges = deltaEdges
+    // The quotient edge list is DELTA-sized and consumed by three
+    // subplans (the CC gate count / fixpoint input and both unionAll
+    // arms of the node set) — un-materialized, the translation joins
+    // against the standing table re-spliced into each consumer and the
+    // final plan carried ~187 Exchange nodes at sf0.1 (the
+    // dedup_cascade plan-splice disease, guide §2.4). It is truncated
+    // rather than persisted: a cache-manager entry outlives the query
+    // (the cache manager holds it strongly, so the next call's
+    // identical plan read it), while this checkpoint is released as
+    // soon as the quotient labels are materialized.
+    val qEdges = Lineage.truncate(deltaEdges
       .join(pr.withColumnRenamed("tid", "a"), Seq("a"), "left_outer")
       .withColumn("qa", coalesce(col("trep"), col("a"))).drop("trep")
       .join(pr.select(col("tid").as("b"), col("trep")), Seq("b"), "left_outer")
@@ -678,8 +522,7 @@ object TextPipeline {
       .filter(col("qa") =!= col("qb"))
       .select(least(col("qa"), col("qb")).as("doc_id_1"),
               greatest(col("qa"), col("qb")).as("doc_id_2"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // quotient node set: the touched reps/new ids from the edges plus
     // every new doc (a delta doc with no edge is its own cluster and
     // must appear in the output) — NOT the full corpus
@@ -687,12 +530,12 @@ object TextPipeline {
       .unionAll(qEdges.select(col("doc_id_2").as("id")))
       .unionAll(newIds.select(col(newIds.columns.head).as("id")))
       .distinct()
-    // persist (r18): quotient-sized, consumed by BOTH output arms below —
-    // unpersisted, each arm re-ran the whole quotient fixpoint subtree
-    val qLabels = dedupClusters(qNodes, "id", "id", 1.0, maxIters,
+    // quotient-sized, consumed by BOTH output arms below — materialized
+    // once, so neither arm re-runs the quotient fixpoint subtree
+    val qLabels = Lineage.truncate(dedupClusters(qNodes, "id", "id", 1.0, maxIters,
         precomputedPairs = Some(qEdges))
-      .select(col("id").as("qid"), col("cluster").as("qcluster"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id").as("qid"), col("cluster").as("qcluster")))
+    Lineage.release(qEdges)
     // map back through the quotient: old rows ride their prior label
     // (untouched clusters miss the join and keep it), new rows read
     // their own quotient node
@@ -3045,9 +2888,10 @@ object TextPipeline {
 
   /** BPE merge-LIST learning: `nMerges` chained [[bpeStep]] iterations
     * driven with the [[dedupClusters]] loop discipline — each round is
-    * ONE materialization (`localCheckpoint` truncates the rewrite
-    * lineage, which otherwise grows a replace() tree per round), and the
-    * round's merge accounting rides that same job via `observe`. Emits
+    * ONE materialization ([[Lineage.truncate]] cuts the rewrite lineage,
+    * which otherwise grows a replace() tree per round, and the round it
+    * superseded is released), and the round's merge accounting rides
+    * that same job via `observe`. Emits
     * the ordered merge list `(step, pair, n, n_merges)` that
     * [[graft.engine.stream.Streams]]' BPE-apply stage consumes as its
     * trained vocabulary.
@@ -3083,7 +2927,7 @@ object TextPipeline {
     * the applied corpus with the before/after token counts — the
     * compression ledger a tokenizer-budget planner reads. Scale: the
     * rewrite chain is nMerges keyed full-corpus map passes (each one
-    * localCheckpointed, argmax riding `observe`); the final raw-count
+    * truncated, argmax riding `observe`); the final raw-count
     * join is doc-keyed. */
   def bpeApply(documents: DataFrame, idCol: String, textCol: String,
                nMerges: Int): DataFrame = {
@@ -3125,6 +2969,16 @@ object TextPipeline {
       trim(rep(rep(doubled, pattern, mergedTok), lit("  "), sp))
     }
     def toksOf(pair: String): Set[String] = pair.split(' ').toSet
+    // each round's rewrite replaces the corpus; once the next round is
+    // materialized the one it read is released (the input is the
+    // caller's, so the first round releases nothing)
+    var owned = false
+    def truncate(next: DataFrame): DataFrame = {
+      val materialized = Lineage.truncate(next)
+      if (owned) Lineage.release(corpus)
+      owned = true
+      materialized
+    }
     val topK = 64
     var step = 1
     var exhausted = false
@@ -3190,7 +3044,7 @@ object TextPipeline {
         val obs = new org.apache.spark.sql.Observation(s"bpe_learn_$step")
         fusable match {
           case Some((p2, n2)) if remaining >= 2 =>
-            corpus = corpus
+            corpus = truncate(corpus
               .select(col("doc_id"), col("text").as("t0"), stepExpr(col("text"), p1).as("t1"))
               .select(col("doc_id"), col("t0"), col("t1"), stepExpr(col("t1"), p2).as("t2"))
               .select(col("doc_id"),
@@ -3200,23 +3054,21 @@ object TextPipeline {
                   .cast("long").as("m2"),
                 col("t2").as("text"))
               .observe(obs, sum(col("m1")).as("m1"), sum(col("m2")).as("m2"))
-              .select("doc_id", "text")
-              .localCheckpoint()
+              .select("doc_id", "text"))
             merges += ((step.toLong, p1, n1, obs.get("m1").asInstanceOf[Long]))
             merges += ((step.toLong + 1, p2, n2, obs.get("m2").asInstanceOf[Long]))
             if (dbg) System.err.println(
               f"[bpe_chain] steps $step+${step + 1} (fused): ${(System.nanoTime() - t0) / 1e9}%.2f s")
             step += 2
           case _ =>
-            corpus = corpus
+            corpus = truncate(corpus
               .select(col("doc_id"), col("text").as("t0"), stepExpr(col("text"), p1).as("t1"))
               .select(col("doc_id"),
                 (size(split(col("t0"), " ")) - size(split(col("t1"), " ")))
                   .cast("long").as("m1"),
                 col("t1").as("text"))
               .observe(obs, sum(col("m1")).as("m"))
-              .select("doc_id", "text")
-              .localCheckpoint()
+              .select("doc_id", "text"))
             merges += ((step.toLong, p1, n1, obs.get("m").asInstanceOf[Long]))
             if (dbg) System.err.println(
               f"[bpe_chain] step $step: ${(System.nanoTime() - t0) / 1e9}%.2f s")
@@ -3593,14 +3445,16 @@ object TextPipeline {
     * tunable left: any iteration budget ≥ the convergence round
     * returns bit-identical scores (spec-pinned).
     *
-    * Same loop discipline as [[dedupClusters]]: the size/degree-
-    * annotated QUOTIENT edge list (see the twin-collapse note in the
-    * body) is persisted hash-partitioned on its join key so only the
-    * class-sized score table moves per round; rounds are materialized
-    * in batches of three (`localCheckpoint` — lineage would otherwise
-    * grow linearly in rounds) with every round's convergence
-    * fingerprint riding the batch's ONE job via `observe` — no
-    * per-round jobs, no second aggregation. Dup-graph families are
+    * Same loop driver as [[dedupClusters]]: the size/degree-annotated
+    * QUOTIENT edge list (see the twin-collapse note in the body) is
+    * persisted hash-partitioned on its join key so only the class-sized
+    * score table moves per round. A quotient within [[fusedMaxEdges]]
+    * runs the walk as one fused task; a larger one runs on
+    * [[Lineage.fixpoint]], six rounds per materialization (lineage
+    * would otherwise grow linearly in rounds) with every round's
+    * (count, xor-of-hashes) fingerprint riding the batch's ONE job via
+    * `observe` — no per-round jobs, no second aggregation, superseded
+    * batches released. Dup-graph families are
     * near-cliques, and the uniform 10⁶ start IS the exact fixpoint of
     * any regular component, so typical corpora converge in a handful
     * of rounds — only irregular template stars pay the 60-round tail,
@@ -3652,180 +3506,104 @@ object TextPipeline {
         greatest(col("deg"), lit(1L)).as("src_deg")))
       .repartition(col("x"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Fixpoint detection is a (count, xor of xxhash64(doc_id, score))
-    // vector fingerprint — the starComponents discipline — NOT a
-    // prev-vs-next delta join: the join added a second keyed join + a
-    // wider materialization to EVERY round, and a 0.85-contraction
-    // needs ~70 rounds to snap the 10⁶-scale integers to their exact
-    // fixpoint, so the round constant dominates end-to-end cost
-    // (measured 23 s at sf0.1 with the delta join vs ~3× less batched).
-    // Rounds run in batches of 3 per materialization: each round's
-    // aggregate carries its own `observe`, and the ONE batch-end
-    // localCheckpoint job fills all three, so consecutive-round
-    // equality (= exact fixpoint, immune to floor limit cycles) is
-    // still checked at EVERY round — only the materialization is
-    // batched. Overshooting a mid-batch fixpoint is harmless: rounds
-    // past a fixpoint return it unchanged, so the batch-end vector IS
-    // the fixpoint, and the oracle's movement-0 walk agrees bit-for-bit
-    // (unique output in both regimes: early fixpoint, or the shared
-    // `maxIters` cap vector).
-    def fpOf(o: org.apache.spark.sql.Observation): (Long, Long) =
-      (Option(o.get("n")).fold(0L)(_.asInstanceOf[Long]),
-       Option(o.get("h")).fold(0L)(_.asInstanceOf[Long]))
-    def observed(df: DataFrame, tag: String): (DataFrame, org.apache.spark.sql.Observation) = {
-      val obs = new org.apache.spark.sql.Observation(tag)
-      (df.observe(obs, count(lit(1)).as("n"),
-        bit_xor(xxhash64(col("cls"), col("score"))).as("h")), obs)
-    }
     try {
       // ADAPTIVE PATH SELECTION (r13, the BroadcastHashJoin discipline
       // applied to the fixpoint): the iteration's input is the QUOTIENT
       // edge list — counted here, not assumed. When it fits one task
-      // (`spark.graft.pagerank.localMaxEdges`, default 2M rows — the
-      // edges stream straight into primitive arrays, 32 B/edge, so the
-      // task holds ~64 MB at the threshold), the ~78-round walk runs as
-      // ONE executor task via mapPartitions (the repo's third justified
-      // mapPartitions): the
-      // distributed loop's cost at that size is pure scheduler floor —
-      // 2 stages × ~78 rounds × ~45 ms ≈ 7 s of DAGScheduler latency
-      // over kilobytes of data — which the fused task eliminates
-      // (measured 7.9 → ~1 s at sf0.1). The arithmetic is the SAME
-      // integer walk line-for-line (seed 10⁶, c = src_sz·(score·85 DIV
-      // (src_deg·100)), next = 150000 + Σc per y, stop at consecutive
-      // equality or maxIters), so both paths are bit-identical — the
-      // spec forces the distributed path on the same graph and compares
-      // maps, and the oracle pins the values either way. Past the
-      // threshold (a 100 TB dup graph whose quotient outgrows one task)
-      // the distributed keyed-join loop below runs unchanged; no
-      // driver collect on either path.
-      // Threshold calibration: the fused task is O(edges × rounds) of
-      // long arithmetic (~10⁸ ops/s single-core) plus ~50 B/edge of
-      // task memory, so 2M edges ≈ 2-4 s compute in ~100 MB — still
-      // far cheaper than the distributed loop's ~30 s scheduler floor
-      // at that size (measured at the sf1 rung), while a genuinely
-      // huge quotient (a 100 TB dup graph) falls through to the
-      // distributed path. The first draft's 200k default put the sf1
-      // ladder rung just past the cliff and the flagged_norm rule
-      // correctly caught the path transition masquerading as a slope.
-      val localMax = pairs.sparkSession.conf
-        .getOption("spark.graft.pagerank.localMaxEdges").map(_.toLong)
-        .getOrElse(2000000L)
-      val nQuotientEdges = e.count() // also materializes the persisted list
-      if (nQuotientEdges <= localMax) {
-        import pairs.sparkSession.implicits._
-        val cap = maxIters
-        val localScores = e
-          .select(col("x"), col("y"), col("src_sz"), col("src_deg"))
-          .as[(Long, Long, Long, Long)]
-          .coalesce(1)
-          .mapPartitions { rows =>
-            // stream the edges straight into primitive builders — the
-            // boxed tuples are never retained (at the threshold the
-            // boxed form would be ~300 B/edge transient vs 32 B here)
-            val xb = scala.collection.mutable.ArrayBuilder.make[Long]
-            val yb = scala.collection.mutable.ArrayBuilder.make[Long]
-            val szb = scala.collection.mutable.ArrayBuilder.make[Long]
-            val degb = scala.collection.mutable.ArrayBuilder.make[Long]
-            rows.foreach { r => xb += r._1; yb += r._2; szb += r._3; degb += r._4 }
-            val xa = xb.result(); val ya = yb.result()
-            val esz = szb.result(); val edeg = degb.result()
-            val m = xa.length
-            // every class appears as x (and as y) via its self-edge, so
-            // the node set and the per-round key set are both `distinct
-            // x` (sort + in-place dedup, no boxing). Ids compact to
-            // 0..n-1 so each round is two primitive array sweeps — no
-            // hashing in the inner loop (measured ~10× over a map-based
-            // round at the sf1 rung's ~1M edges).
-            val ids = {
-              val s = java.util.Arrays.copyOf(xa, m)
-              java.util.Arrays.sort(s)
-              var w = 0; var r = 0
-              while (r < m) {
-                if (w == 0 || s(r) != s(w - 1)) { s(w) = s(r); w += 1 }
-                r += 1
+      // ([[fusedMaxEdges]]; the edges stream straight into primitive
+      // arrays, 32 B/edge), the ~78-round walk runs as ONE executor task
+      // via mapPartitions (the repo's third justified mapPartitions):
+      // the distributed loop's cost at that size is pure scheduler
+      // floor — 2 stages × ~78 rounds × ~45 ms ≈ 7 s of DAGScheduler
+      // latency over kilobytes of data — which the fused task
+      // eliminates (measured 7.9 → ~1 s at sf0.1). The arithmetic is
+      // the SAME integer walk line-for-line (seed 10⁶, c = src_sz·(score
+      // ·85 DIV (src_deg·100)), next = 150000 + Σc per y, stop at
+      // consecutive equality or maxIters), so both paths are
+      // bit-identical — the spec forces the distributed path on the same
+      // graph and compares maps, and the oracle pins the values either
+      // way. No driver collect on either path.
+      val scores =
+        if (e.count() <= fusedMaxEdges(pairs.sparkSession)) { // also materializes the persisted list
+          import pairs.sparkSession.implicits._
+          val cap = maxIters
+          // materialized while the persisted edge list is live: the
+          // finally-block unpersist below runs before the CALLER's first
+          // action, so an un-checkpointed plan would re-derive the
+          // quotient AND re-run the whole walk per action
+          Lineage.truncate(e
+            .select(col("x"), col("y"), col("src_sz"), col("src_deg"))
+            .as[(Long, Long, Long, Long)]
+            .coalesce(1)
+            .mapPartitions { rows =>
+              // stream the edges straight into primitive builders — the
+              // boxed tuples are never retained (at the threshold the
+              // boxed form would be ~300 B/edge transient vs 32 B here)
+              val xb = scala.collection.mutable.ArrayBuilder.make[Long]
+              val yb = scala.collection.mutable.ArrayBuilder.make[Long]
+              val szb = scala.collection.mutable.ArrayBuilder.make[Long]
+              val degb = scala.collection.mutable.ArrayBuilder.make[Long]
+              rows.foreach { r => xb += r._1; yb += r._2; szb += r._3; degb += r._4 }
+              val xa = xb.result(); val ya = yb.result()
+              val esz = szb.result(); val edeg = degb.result()
+              val m = xa.length
+              // every class appears as x (and as y) via its self-edge,
+              // so the node set and the per-round key set are both
+              // `distinct x`
+              val (ids, idx) = compactIds(xa)
+              val ex = new Array[Int](m); val ey = new Array[Int](m)
+              var i = 0
+              while (i < m) { ex(i) = idx(xa(i)); ey(i) = idx(ya(i)); i += 1 }
+              val n = ids.length
+              var cur = Array.fill(n)(1000000L)
+              var it = 0
+              var done = n == 0
+              while (!done && it < cap) {
+                // every class receives its self-edge row, so seeding the
+                // base rate for all n nodes matches the distributed
+                // groupBy(y) exactly
+                val next = Array.fill(n)(150000L)
+                var j = 0
+                while (j < m) {
+                  next(ey(j)) += esz(j) * (cur(ex(j)) * 85L / (edeg(j) * 100L))
+                  j += 1
+                }
+                done = java.util.Arrays.equals(cur, next)
+                cur = next
+                it += 1
               }
-              java.util.Arrays.copyOf(s, w)
+              ids.iterator.zipWithIndex.map { case (id, k) => (id, cur(k)) }
             }
-            val idx = new scala.collection.mutable.LongMap[Int](ids.length * 2)
-            var k0 = 0
-            while (k0 < ids.length) { idx.update(ids(k0), k0); k0 += 1 }
-            val ex = new Array[Int](m); val ey = new Array[Int](m)
-            var i = 0
-            while (i < m) { ex(i) = idx(xa(i)); ey(i) = idx(ya(i)); i += 1 }
-            val n = ids.length
-            var cur = Array.fill(n)(1000000L)
-            var it = 0
-            var done = n == 0
-            while (!done && it < cap) {
-              // every class receives its self-edge row, so seeding the
-              // base rate for all n nodes matches the distributed
-              // groupBy(y) exactly
-              val next = Array.fill(n)(150000L)
-              var j = 0
-              while (j < m) {
-                next(ey(j)) += esz(j) * (cur(ex(j)) * 85L / (edeg(j) * 100L))
-                j += 1
-              }
-              done = java.util.Arrays.equals(cur, next)
-              cur = next
-              it += 1
-            }
-            ids.iterator.zipWithIndex.map { case (id, k) => (id, cur(k)) }
+            .toDF("cls", "score"))
+        } else {
+          // Fixpoint detection is a (count, xor of xxhash64(cls, score))
+          // vector fingerprint, NOT a prev-vs-next delta join: the join
+          // added a second keyed join + a wider materialization to EVERY
+          // round, and a 0.85-contraction needs ~70 rounds to snap the
+          // 10⁶-scale integers to their exact fixpoint, so the round
+          // constant dominates end-to-end cost (measured 23 s at sf0.1
+          // with the delta join vs ~3× less batched). XOR is order-free
+          // and overflow-free over a key-distinct vector.
+          // 6 rounds/materialization MEASURED optimum at sf0.1 — in both
+          // directions. 3 rounds: 8.8 s (r10); GEOMETRIC GROWTH 6→12→24
+          // (the hypothesis that wall clock ∝ materialization count, so
+          // fewer+deeper jobs must win) measured WORSE: 11.7 s at 12,
+          // 21.5 s at 24 vs ~7 s at fixed 6 (r13, steady DevTime). Each
+          // round still schedules its own join+agg stages inside the
+          // batched job, while per-stage cost GROWS with lineage depth
+          // (whole-stage codegen compiles the k-round chain per stage and
+          // the serialized task binary — already 3-4 MiB — is
+          // rebroadcast per stage), so deeper batches pay more per round
+          // than they save in job launches.
+          Lineage.fixpoint(cls.select(col("cls"), lit(1000000L).as("score")),
+              maxIters, 6, "pagerank",
+              Seq(count(lit(1)), bit_xor(xxhash64(col("cls"), col("score"))))) { cur =>
+            val contrib = e.join(cur, e("x") === cur("cls"))
+              .select(col("y").as("cls"),
+                (col("src_sz") * expr("(score * 85) DIV (src_deg * 100)")).as("c"))
+            contrib.groupBy("cls").agg((lit(150000L) + sum(col("c"))).as("score"))
           }
-          .toDF("cls", "score")
-          // materialize while the persisted edge list is live: the
-          // finally-block unpersist below runs before the CALLER's
-          // first action, so an un-checkpointed plan would re-derive
-          // the quotient AND re-run the whole walk per action
-          .localCheckpoint()
-        return member.join(localScores.withColumnRenamed("cls", "c2"),
-            member("cls") === col("c2"))
-          .select(col("u").as("doc_id"), col("score"))
-          .orderBy("doc_id")
-      }
-      val (seed, seedObs) = observed(
-        cls.select(col("cls"), lit(1000000L).as("score")), "pr_fp_seed")
-      var scores = seed.localCheckpoint()
-      var prevFp = fpOf(seedObs)
-      var iter = 0
-      var converged = false
-      // 6 rounds/materialization MEASURED optimum at sf0.1 — in both
-      // directions. 3 rounds: 8.8 s (r10); GEOMETRIC GROWTH 6→12→24
-      // (the r11-verdict hypothesis that wall clock ∝ materialization
-      // count, so fewer+deeper jobs must win) measured WORSE, not
-      // better: 11.7 s at cap 12, 21.5 s at cap 24 vs ~7 s at fixed 6
-      // (r13, steady DevTime). The floor is NOT per-job: each round
-      // still schedules its own join+agg stages inside the batched job,
-      // while per-stage cost GROWS with lineage depth (whole-stage
-      // codegen compiles the k-round chain per stage and the serialized
-      // task binary — already 3-4 MiB — is rebroadcast per stage), so
-      // deeper batches pay more per round than they save in job
-      // launches. Rejected like algo="star": measured, documented,
-      // kept at the optimum. Convergence is checked at EVERY round via
-      // the batched observations, so overshoot past a fixpoint remains
-      // impossible beyond the harmless identity rounds.
-      val batchRounds = 6
-      while (!converged && iter < maxIters) {
-        val k = math.min(batchRounds, maxIters - iter)
-        var cur = scores
-        val roundObs = (1 to k).map { j =>
-          val contrib = e.join(cur, e("x") === cur("cls"))
-            .select(col("y").as("cls"),
-              (col("src_sz") * expr("(score * 85) DIV (src_deg * 100)")).as("c"))
-          val (next, obs) = observed(
-            contrib.groupBy("cls").agg((lit(150000L) + sum(col("c"))).as("score")),
-            s"pr_fp_i${iter + j}")
-          cur = next
-          obs
         }
-        scores = cur.localCheckpoint() // one job: k rounds + all k observations
-        val fps = prevFp +: roundObs.map(fpOf)
-        converged = fps.sliding(2).exists { case Seq(a, b) => a == b }
-        prevFp = fps.last
-        iter += k
-      }
-      if (pairs.sparkSession.conf.getOption("spark.graft.debug").contains("true"))
-        System.err.println(s"[pagerank] ${if (converged) "fixpoint" else "max-iters"} after $iter quotient rounds")
       // expand the class scores back to members: every graph node reads
       // its class's score — one keyed join against the member table
       member.join(scores.withColumnRenamed("cls", "c2"),
@@ -5155,17 +4933,13 @@ object TextPipeline {
     "q_fuzzy_clusters" -> ((s, d) => {
       val cust = Tables.customer(s, d)
       // pairs materialize ONCE (the CC edge union otherwise re-executes
-      // the deletion-variant join on both union branches), and the STAR
-      // variant does the contracting: digit-ladder name chains give this
-      // graph a much larger diameter than the LSH dup graphs, and
-      // alternating large/small star collapses chains ~2x faster than
-      // label-prop + one pointer jump here (measured 4.7 s vs 9.8 s at
-      // sf0.1 with identical output)
+      // the deletion-variant join on both union branches); the graph
+      // fits the fused union-find task at every oracle scale
       val pairs = fuzzyMatch(cust, "c_custkey", "c_name", Seq("c_nationkey"), 1)
         .select(col("id_1").as("doc_id_1"), col("id_2").as("doc_id_2"))
         .localCheckpoint()
       dedupClusters(cust, "c_custkey", "c_name", 0.9,
-        precomputedPairs = Some(pairs), algo = "star").orderBy("id")
+        precomputedPairs = Some(pairs)).orderBy("id")
     }),
     // same corpus/benchmark split as q_contamination: docs < 10 are the
     // held-out eval set, the rest is the trainable corpus

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
 import scala.jdk.CollectionConverters._
+import graft.engine.ops.Lineage
 
 /** Structured-Streaming re-expression of the reference's streaming surface
   * (SURVEY.md §2.1 O1–O10 + §2.2-J north-star operators).
@@ -1656,7 +1657,7 @@ object Streams {
       // LIFETIME CONTRACT (r16, ADVICE): the frame handed to the sink
       // is the SAME checkpointed `changed` slice the standing store
       // rides, and the store deterministically releases superseded
-      // checkpoints at a later ingest boundary (CkptLease — lineage is
+      // checkpoints at a later ingest boundary (Lineage.release — lineage is
       // truncated, a released frame cannot recompute). The sink must
       // therefore fully materialize/write `changed` WITHIN the
       // callback; retaining the DataFrame lazily past it reads missing
@@ -1689,7 +1690,7 @@ object Streams {
       // ingest boundary: release legs superseded during PRIOR batches
       corpusF.beginBatch(); standingF.beginBatch()
       val b = ckpt(batch.select(col(idCol), col(textCol)))
-      if (b.isEmpty) { CkptLease.release(b); return }
+      if (b.isEmpty) { Lineage.release(b); return }
       // ONE materialization per batch, and it is DELTA-sized: the
       // changed slice (moved old rows + every new row / the cold-start
       // insert set) feeds the upsert sink AND the standing store —
@@ -1743,34 +1744,6 @@ object Streams {
       .foreachBatch { (batch: Dataset[Row], bid: Long) => maint.ingest(batch.toDF(), bid); () }
       .start()
 
-  /** Explicit release of a localCheckpoint's persisted blocks (r15).
-    * `Dataset.unpersist` does NOT free a localCheckpoint (it only
-    * uncaches `persist`-style cache entries), and the ContextCleaner
-    * frees a checkpoint's blocks only after a GC notices the RDD is
-    * unreachable — which lags allocation badly on a long ingest: the
-    * extended registry-growth rung (1200 batches) OOMed an 8 g heap on
-    * the ~150 superseded full-store compaction copies alone. The
-    * standing-frame classes below therefore release superseded legs
-    * DETERMINISTICALLY, by unpersisting the `LogicalRDD` leaf behind
-    * each checkpointed frame once a full batch has passed since it was
-    * superseded (a released local checkpoint cannot recompute — its
-    * lineage was truncated — so release timing is part of the frames'
-    * ownership contract: every appended delta must be an exclusively
-    * owned checkpoint, and standing values read via get/latest are
-    * valid until the owner's next ingest). */
-  private object CkptLease {
-    /** Unpersist the checkpoint behind `df` — only when the plan is a
-      * pure view of exactly ONE `LogicalRDD` leaf (an exclusively owned
-      * checkpoint). An ambiguous plan leaks rather than corrupts. */
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      } match {
-        case Seq(rdd) => rdd.unpersist(blocking = false)
-        case _ => ()
-      }
-  }
-
   /** The ONE checkpoint form every standing-maintenance store uses:
     * `localCheckpoint` with the carried origin statistics STRIPPED
     * ([[org.apache.spark.sql.graft.CkptStats]]). A per-batch store
@@ -1782,7 +1755,7 @@ object Streams {
     * batch ~30 and OOMed on statistics `BigInteger`s over a 7k-row
     * table. Stripping resets each checkpoint to the default leaf
     * estimate, which cannot compound (in-batch join depth is bounded);
-    * the same persisted RDD backs the frame, so [[CkptLease]] release
+    * the same persisted RDD backs the frame, so [[Lineage.release]]
     * is unaffected. */
   private def ckpt(df: DataFrame): DataFrame =
     org.apache.spark.sql.graft.CkptStats.stripCarriedStats(df.localCheckpoint())
@@ -1799,10 +1772,12 @@ object Streams {
     *
     * Ownership (r15, release gating r16): the frame OWNS every
     * appended/seeded checkpoint. Legs superseded by a compaction are
-    * released via [[CkptLease]] at the owner's next [[beginBatch]] —
+    * released via [[Lineage.release]] at the owner's next [[beginBatch]] —
     * an explicit INGEST-boundary hook, one full batch later, so every
     * plan built over them during their batch has finished — keeping
-    * standing memory O(store), not O(store × compactions). (r16,
+    * standing memory O(store), not O(store × compactions) — left to
+    * the ContextCleaner, the 1200-batch registry-growth rung OOMed an
+    * 8 g heap on ~150 superseded compaction copies. (r16,
     * ADVICE: release used to ride the next `append`, which for an
     * owner appending twice per ingest — RecallRepairMaintenance's
     * edge store — fired MID-batch and was safe only through an
@@ -1819,7 +1794,7 @@ object Streams {
     /** Ingest-boundary hook: release every leg superseded during a
       * PRIOR batch (never the current one — appends only enqueue). */
     def beginBatch(): Unit = {
-      pendingRelease.foreach(CkptLease.release); pendingRelease = Nil
+      pendingRelease.foreach(Lineage.release); pendingRelease = Nil
     }
     /** Re-seed from a caller-materialized frame (kill-and-restart). */
     def seed(df: DataFrame): Unit = {
@@ -1864,7 +1839,7 @@ object Streams {
     private var pendingRelease: List[DataFrame] = Nil
     /** Ingest-boundary hook — see [[AppendOnlyFrame.beginBatch]]. */
     def beginBatch(): Unit = {
-      pendingRelease.foreach(CkptLease.release); pendingRelease = Nil
+      pendingRelease.foreach(Lineage.release); pendingRelease = Nil
     }
     private def resolve(df: DataFrame): DataFrame =
       df.groupBy("id")
@@ -1986,7 +1961,7 @@ object Streams {
       corpusF.beginBatch(); edgesF.beginBatch(); auditF.beginBatch()
       refutedF.beginBatch(); standingF.beginBatch()
       val b = ckpt(batch.select(col(idCol), col(textCol)))
-      if (b.isEmpty) { CkptLease.release(b); return }
+      if (b.isEmpty) { Lineage.release(b); return }
       // ONE probe materialization per batch: the edge delta feeds the
       // standing anti-join, the verify's pair graph, AND the CC delta
       // (the pre-r14 shape recomputed the banded probe for ccIncremental)
@@ -2016,7 +1991,7 @@ object Streams {
       val verified = ckpt(graft.engine.ops.TextPipeline
         .missingLinksVerify(corpusNext, idCol, textCol, threshold, minCommon,
           precomputedPairs = Some(graphEdges), excludePairs = refutedF.get))
-      // each store's delta gets its OWN checkpoint (r15, the CkptLease
+      // each store's delta gets its OWN checkpoint (r15, the Lineage.release
       // ownership contract): `verified` used to back the audit, refuted
       // AND confirmed-edge parts through one shared RDD, so no store
       // could release its superseded legs without corrupting a sibling
@@ -2061,8 +2036,8 @@ object Streams {
       // per-batch temps: every consumer above materialized eagerly, so
       // their checkpoints release now. `batchEdges` is a temp only on
       // the warm path (cold start appends it to the edge store itself).
-      CkptLease.release(verified)
-      if (newEdges ne batchEdgesCp) CkptLease.release(batchEdgesCp)
+      Lineage.release(verified)
+      if (newEdges ne batchEdgesCp) Lineage.release(batchEdgesCp)
     }
   }
 
@@ -2139,7 +2114,7 @@ object Streams {
       // ingest boundary: release legs superseded during PRIOR batches
       reg.beginBatch(); emittedF.beginBatch()
       val b = ckpt(batch.select(col(idCol).cast("long").as("doc_id"), col(textCol)))
-      if (b.isEmpty) { CkptLease.release(b); return }
+      if (b.isEmpty) { Lineage.release(b); return }
       val rawLines = b.select(col("doc_id"),
           posexplode(split(col(textCol), "\n")).as(Seq("idx", "line")))
         .select(col("doc_id"), (col("idx") + 1).cast("long").as("line_no"), col("line"))
@@ -2186,7 +2161,7 @@ object Streams {
       // accumulates it; the registry above is the real standing store)
       // per-batch temp: `fresh` and `out` are checkpointed and owned by
       // their frames; nothing lazy still reads the input batch
-      CkptLease.release(b)
+      Lineage.release(b)
     }
   }
 

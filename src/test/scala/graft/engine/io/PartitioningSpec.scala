@@ -2,7 +2,6 @@ package graft.engine.io
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Demonstrates the date-partitioned layout SURVEY §4.2 commits to for the
   * 100 TB events table: static partition pruning (a date filter touches
@@ -11,7 +10,7 @@ import java.nio.file.Files
 class PartitioningSpec extends SparkSuite {
 
   private lazy val factDir: String = {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = tmpDir("part")
     Tables.events(spark, sfDir)
       .withColumn("event_date", col("ts").cast("date"))
       .write.partitionBy("event_date").mode("overwrite").parquet(dir)
@@ -44,7 +43,7 @@ class PartitioningSpec extends SparkSuite {
       val fact = spark.read.parquet(factDir)
       // independent date dimension on disk, with a selective predicate —
       // the shape DPP requires (filter on dim side, join on partition key)
-      val dimDir = Files.createTempDirectory("graft-dim").toString
+      val dimDir = tmpDir("dim")
       val w = org.apache.spark.sql.expressions.Window.orderBy("event_date")
       fact.select(col("event_date")).distinct()
         .withColumn("day_no", row_number().over(w))
@@ -67,7 +66,7 @@ class PartitioningSpec extends SparkSuite {
       pmod(datediff(to_date(col("o_orderdate")),
         lit(java.sql.Date.valueOf("1992-01-01"))).cast("long"), lit(1024L)).as("y"))
     def fileWidths(df: DataFrame, sortCol: String): Seq[(Long, Long)] = {
-      val dir = Files.createTempDirectory(s"graft-z-$sortCol").toString
+      val dir = tmpDir(s"z-$sortCol")
       df.repartitionByRange(8, col(sortCol)).sortWithinPartitions(sortCol)
         .write.mode("overwrite").parquet(dir)
       spark.read.parquet(dir)

@@ -3,7 +3,6 @@ package graft.engine.io
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.Files
 
 /** Beyond parquet: the engine reads the same relational data from JSON
   * lines and CSV with explicit schemas (schema inference is forbidden at
@@ -13,7 +12,7 @@ class SourceFormatsSpec extends SparkSuite {
   private lazy val base = Tables.nation(spark, sfDir)
 
   test("JSON lines round-trip with explicit schema matches the parquet rows") {
-    val dir = Files.createTempDirectory("graft-json").toString + "/nation"
+    val dir = tmpDir("json") + "/nation"
     base.write.mode("overwrite").json(dir)
     val schema = StructType(Seq(
       StructField("n_nationkey", IntegerType), StructField("n_name", StringType),
@@ -25,7 +24,7 @@ class SourceFormatsSpec extends SparkSuite {
   }
 
   test("CSV round-trip with explicit schema and header matches the parquet rows") {
-    val dir = Files.createTempDirectory("graft-csv").toString + "/nation"
+    val dir = tmpDir("csv") + "/nation"
     base.select("n_nationkey", "n_name", "n_regionkey")
       .write.mode("overwrite").option("header", "true").csv(dir)
     val schema = StructType(Seq(
@@ -37,7 +36,7 @@ class SourceFormatsSpec extends SparkSuite {
   }
 
   test("ORC round-trip preserves rows and pushes filters into the scan") {
-    val dir = Files.createTempDirectory("graft-orc").toString + "/nation"
+    val dir = tmpDir("orc") + "/nation"
     base.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir).select("n_nationkey", "n_name", "n_regionkey")
     val orig = base.select("n_nationkey", "n_name", "n_regionkey")
@@ -49,7 +48,7 @@ class SourceFormatsSpec extends SparkSuite {
   }
 
   test("partitioned parquet write round-trips and exposes the partition column") {
-    val dir = Files.createTempDirectory("graft-part").toString + "/orders"
+    val dir = tmpDir("part") + "/orders"
     val o = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
     o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(dir)

@@ -1,6 +1,5 @@
 package graft.engine.io
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
@@ -24,13 +23,13 @@ class TablesSpec extends SparkSuite {
     // layout A — TIMESTAMP(NANOS): under nanosAsLong Spark surfaces the
     // column as BIGINT nanoseconds; writing a BIGINT column reproduces
     // exactly what the adapter's LongType branch receives
-    val nanosDir = Files.createTempDirectory("graft-ev-nanos").toString
+    val nanosDir = tmpDir("ev-nanos")
     micros.zipWithIndex
       .map { case (us, i) => (i.toLong, us * 1000L + 777L) } // sub-µs noise
       .toDF("event_id", "ts")
       .write.mode("overwrite").parquet(s"$nanosDir/events.parquet")
     // layout B — TIMESTAMP(MICROS) NTZ
-    val microsDir = Files.createTempDirectory("graft-ev-micros").toString
+    val microsDir = tmpDir("ev-micros")
     micros.zipWithIndex
       .map { case (us, i) => (i.toLong, us) }
       .toDF("event_id", "us")
@@ -47,7 +46,7 @@ class TablesSpec extends SparkSuite {
   }
 
   test("events ts: a non-UTC session fails fast instead of silently shifting the NTZ timeline") {
-    val microsDir = Files.createTempDirectory("graft-ev-tz").toString
+    val microsDir = tmpDir("ev-tz")
     micros.zipWithIndex.map { case (us, i) => (i.toLong, us) }
       .toDF("event_id", "us")
       .withColumn("ts", to_timestamp_ntz(expr("timestamp_micros(us)")))
@@ -63,7 +62,7 @@ class TablesSpec extends SparkSuite {
   }
 
   test("events ts: an unexpected fixture type fails loudly instead of coercing to nulls") {
-    val badDir = Files.createTempDirectory("graft-ev-bad").toString
+    val badDir = tmpDir("ev-bad")
     Seq((1L, "2023-11-14 22:13:20")).toDF("event_id", "ts")
       .write.mode("overwrite").parquet(s"$badDir/events.parquet")
     val e = intercept[IllegalStateException](Tables.load(spark, badDir, "events"))

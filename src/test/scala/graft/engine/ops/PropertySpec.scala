@@ -293,29 +293,20 @@ class PropertySpec extends SparkSuite {
   // r13: both adaptive execution paths (single-task pagerank fixpoint,
   // union-find CC) must agree with their distributed twins on RANDOM
   // graphs, not just the fixture — chains, cliques, isolated pairs and
-  // disconnected unions all land here. r14: algo="star" now routes
-  // through the same fused gate, so the pin also forces the
-  // star-contraction loop and demands the same components from it.
-  test("adaptive paths: fused and distributed CC (labelprop + star) + pagerank agree on random graphs (3 iters)") {
+  // disconnected unions all land here. One gate key forces both.
+  test("adaptive paths: fused and distributed CC + pagerank agree on random graphs (3 iters)") {
     check("adaptive", 3)(Prop.forAll(randomEdges) { edges =>
       val pairs = edges.toDF("doc_id_1", "doc_id_2")
       val docs = edges.flatMap(e => Seq(e._1, e._2)).distinct
         .map(id => (id, s"tok$id")).toDF("doc_id", "text")
-      def cc(algo: String) = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9,
-        precomputedPairs = Some(pairs), algo = algo).as[(Long, Long)].collect().toMap
+      def cc() = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9,
+        precomputedPairs = Some(pairs)).as[(Long, Long)].collect().toMap
       def pr() = TextPipeline.pairGraphPagerankConverged(pairs)
         .as[(Long, Long)].collect().toMap
-      val ccFused = cc("labelprop"); val prFused = pr()
-      // star under the default gate must take the SAME fused task
-      val starFused = cc("star")
-      spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-      spark.conf.set("spark.graft.pagerank.localMaxEdges", "0")
-      try cc("labelprop") == ccFused && cc("star") == ccFused &&
-        starFused == ccFused && pr() == prFused
-      finally {
-        spark.conf.unset("spark.graft.cc.localMaxEdges")
-        spark.conf.unset("spark.graft.pagerank.localMaxEdges")
-      }
+      val ccFused = cc(); val prFused = pr()
+      spark.conf.set("spark.graft.localMaxEdges", "0")
+      try cc() == ccFused && pr() == prFused
+      finally spark.conf.unset("spark.graft.localMaxEdges")
     })
   }
 

@@ -291,36 +291,14 @@ class TextSimilaritySpec extends SparkSuite {
       s"groups ${rows.size} must equal distinct page identities $expectedGroups")
   }
 
-  test("dedupClusters algo=star: large-star/small-star labels equal label propagation exactly") {
-    val docs = graft.engine.io.Tables.documents(spark, sfDir)
-    val lp = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9)
-      .as[(Long, Long)].collect().sorted.toSeq
-    // r14: under the default gate algo="star" routes through the same
-    // fused union-find task (assert that first), so this spec forces
-    // the distributed loop to keep the star-contraction rounds
-    // themselves exercised
-    val starFused = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9, algo = "star")
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(starFused == lp, s"gated star CC diverged from label-prop")
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-    val star = try TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9, algo = "star")
-      .as[(Long, Long)].collect().sorted.toSeq
-    finally spark.conf.unset("spark.graft.cc.localMaxEdges")
-    assert(star == lp, s"star CC diverged from label-prop")
-    assert(lp.exists { case (id, c) => id != c }, "fixture must have non-trivial clusters")
-    // chain graph: the case pointer-jumping needs rounds for and star
-    // collapses differently — both must still agree on min-id roots
-    // (forced distributed for the same reason)
+  test("dedupClusters forced label-prop: a chain graph converges to its min-id root") {
+    // chain graph: the case pointer-jumping needs rounds for, forced past
+    // the fused gate so the distributed loop itself runs
     val chain = Seq((1L, "x"), (2L, "x"), (3L, "x")).toDF("doc_id", "text")
     val chainPairs = Seq((1L, 2L, 1.0), (2L, 3L, 1.0)).toDF("doc_id_1", "doc_id_2", "jaccard")
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
-    try {
-      val lpc = TextPipeline.dedupClusters(chain, "doc_id", "text", 0.9,
-        precomputedPairs = Some(chainPairs)).as[(Long, Long)].collect().sorted.toSeq
-      val stc = TextPipeline.dedupClusters(chain, "doc_id", "text", 0.9,
-        precomputedPairs = Some(chainPairs), algo = "star").as[(Long, Long)].collect().sorted.toSeq
-      assert(lpc == Seq((1L, 1L), (2L, 1L), (3L, 1L)) && stc == lpc, s"lp=$lpc star=$stc")
-    } finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+    val lpc = forcedDistributed(TextPipeline.dedupClusters(chain, "doc_id", "text", 0.9,
+      precomputedPairs = Some(chainPairs))).as[(Long, Long)].collect().sorted.toSeq
+    assert(lpc == Seq((1L, 1L), (2L, 1L), (3L, 1L)), s"lp=$lpc")
   }
 
   test("packGlobal: bins never exceed the budget; cross-doc fill beats the per-doc tails it consumed") {
@@ -747,6 +725,36 @@ class TextSimilaritySpec extends SparkSuite {
       "round 2 must move at least one slice between codes")
   }
 
+  /** Jobs `body` schedules, counted by a listener fenced with a marker job. */
+  private def jobsOf(tag: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val fenceKey = "graft.test.fence"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(fenceKey) == tag)) fenced.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the listener bus is FIFO: once a job started after the body is
+      // seen, every job the body scheduled has been delivered
+      sc.setLocalProperty(fenceKey, tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(fenceKey, null)
+      assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus drain")
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  /** `body` with the iterative graph operators forced past their fused gate. */
+  private def forcedDistributed[T](body: => T): T = {
+    spark.conf.set("spark.graft.localMaxEdges", "0")
+    try body finally spark.conf.unset("spark.graft.localMaxEdges")
+  }
+
   // The Lloyd trainers bring each round's codebook back to the driver
   // instead of caching per-round frames: a call leaves no cached RDD
   // behind, and a repeat call trains again rather than reading an
@@ -756,27 +764,6 @@ class TextSimilaritySpec extends SparkSuite {
     // cached cannot match these plans, so the first call trains cold
     val emb = graft.engine.io.Tables.embeddings(spark, sfDir).filter(col("vec_id") =!= -7L)
     val sc = spark.sparkContext
-    val fenceKey = "graft.test.fence"
-    def jobsOf(tag: String)(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val fenced = new java.util.concurrent.CountDownLatch(1)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty(fenceKey) == tag)) fenced.countDown()
-          else jobs.incrementAndGet()
-      }
-      sc.addSparkListener(listener)
-      try {
-        body
-        // the listener bus is FIFO: once a job started after the body is
-        // seen, every job the body scheduled has been delivered
-        sc.setLocalProperty(fenceKey, tag)
-        try sc.parallelize(Seq(1), 1).count()
-        finally sc.setLocalProperty(fenceKey, null)
-        assert(fenced.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus drain")
-      } finally sc.removeSparkListener(listener)
-      jobs.get
-    }
     val trainers = Seq[(String, () => org.apache.spark.sql.DataFrame)](
       "kmeansTrain(3)" -> (() => Similarity.kmeansTrain(emb, "vec_id", "embedding", 3)),
       "pqTrainIters(2)" -> (() => Similarity.pqTrainIters(emb, "vec_id", "embedding", 2)),
@@ -1248,23 +1235,28 @@ class TextSimilaritySpec extends SparkSuite {
     assert(byCluster.forall { case (c, minId) => c == minId })
   }
 
-  test("dedup clusters: reliable checkpoint mode (fault-tolerant lineage truncation) matches local mode") {
+  test("a context checkpoint dir makes the CC and PageRank rounds reliable checkpoints; results unchanged") {
     val docs = graft.engine.io.Tables.documents(spark, sfDir)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    val pairs = graft.engine.ops.Similarity
+      .minhashNearDup(docs, "doc_id", "text", 0.9, ordered = false)
+      .select("doc_id_1", "doc_id_2").localCheckpoint()
+    def cc() = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9)
+      .as[(Long, Long)].collect().toMap
+    def pr() = TextPipeline.pairGraphPagerankConverged(pairs)
+      .as[(Long, Long)].collect().toMap
+    val (localCc, localPr) = forcedDistributed((cc(), pr()))
+    val ckpt = new java.io.File(tmpDir("ckpt"))
+    val sc = spark.sparkContext
     try {
-      spark.sparkContext.setCheckpointDir(ckpt.getAbsolutePath)
-      val local = graft.engine.ops.TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9)
-        .as[(Long, Long)].collect().toMap
-      val reliable = graft.engine.ops.TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9,
-          reliable = true, checkpointEvery = 2)
-        .as[(Long, Long)].collect().toMap
-      assert(reliable == local, "reliable-checkpoint fixpoint must be bit-identical to local mode")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(ckpt)
-    }
+      sc.setCheckpointDir(ckpt.getAbsolutePath)
+      val (reliableCc, reliablePr) = forcedDistributed((cc(), pr()))
+      assert(reliableCc == localCc, "reliable-checkpoint CC must be bit-identical to local mode")
+      assert(reliablePr == localPr, "reliable-checkpoint PageRank must be bit-identical to local mode")
+      val written = org.apache.commons.io.FileUtils.listFiles(ckpt, null, true)
+        .toArray(Array.empty[java.io.File]).count(_.getName.startsWith("part-"))
+      assert(written > 0, s"no checkpoint files under $ckpt")
+    } finally sc.setCheckpointDir(null)
+    assert(sc.getCheckpointDir.isEmpty, "later suites must stay on local checkpoints")
   }
 
   test("stratified sample: per-stratum rates land near target, deterministic across layouts") {
@@ -1982,13 +1974,13 @@ class TextSimilaritySpec extends SparkSuite {
     // r13: the size-guarded single-task path and the distributed
     // keyed-join loop must be BIT-IDENTICAL on the same graph — force
     // the distributed path by zeroing the threshold and compare
-    spark.conf.set("spark.graft.pagerank.localMaxEdges", "0")
+    spark.conf.set("spark.graft.localMaxEdges", "0")
     try {
       val distributed = TextPipeline.pairGraphPagerankConverged(pairs)
         .as[(Long, Long)].collect().toMap
       assert(distributed == converged,
         "adaptive path selection must not change a single score")
-    } finally spark.conf.unset("spark.graft.pagerank.localMaxEdges")
+    } finally spark.conf.unset("spark.graft.localMaxEdges")
   }
 
   test("missingLinksVerify/Repair: a banding-missed true pair is recovered and its clusters merge") {
@@ -2150,15 +2142,64 @@ class TextSimilaritySpec extends SparkSuite {
     val docs = graft.engine.io.Tables.documents(spark, sfDir)
     val fused = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9)
       .as[(Long, Long)].collect().toMap
-    spark.conf.set("spark.graft.cc.localMaxEdges", "0")
+    spark.conf.set("spark.graft.localMaxEdges", "0")
     try {
       val distributed = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9)
         .as[(Long, Long)].collect().toMap
       assert(distributed == fused,
         "adaptive CC path selection must not change a single label")
-    } finally spark.conf.unset("spark.graft.cc.localMaxEdges")
+    } finally spark.conf.unset("spark.graft.localMaxEdges")
     // non-vacuous: the fixture has real multi-doc clusters
     assert(fused.groupBy(_._2).values.map(_.size).max > 1)
+  }
+
+  // dedupClusters persists a caller's pair frame for its gate count and
+  // ccIncremental materializes its quotient edges and labels: none of
+  // it may outlive the call, or a repeat call reads the first call's
+  // blocks instead of recomputing them
+  test("CC calls add no cache entry; a repeat call schedules as many jobs as the first") {
+    def entries = org.apache.spark.sql.graft.CacheEntries.count(spark)
+    // a no-op filter no other test applies: a frame an earlier test left
+    // cached cannot match these plans
+    val docs = graft.engine.io.Tables.documents(spark, sfDir).filter(col("doc_id") =!= -11L)
+    val pairs = graft.engine.ops.Similarity
+      .minhashNearDup(docs, "doc_id", "text", 0.9, ordered = false)
+      .select("doc_id_1", "doc_id_2").localCheckpoint()
+    val cut = docs.agg(max("doc_id")).head().getLong(0) / 2
+    val prior = TextPipeline.dedupClusters(
+      docs.filter(col("doc_id") < cut), "doc_id", "text", 0.9,
+      precomputedPairs =
+        Some(pairs.filter(col("doc_id_1") < cut && col("doc_id_2") < cut)))
+    val delta = pairs.filter(col("doc_id_2") >= cut)
+      .select(col("doc_id_1").as("a"), col("doc_id_2").as("b"))
+    val newIds = docs.filter(col("doc_id") >= cut).select(col("doc_id").as("id"))
+    def clusters() =
+      TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9, precomputedPairs = Some(pairs))
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "dedupClusters fused" -> (() => clusters()),
+      "dedupClusters distributed" -> (() => forcedDistributed(clusters())),
+      "ccIncremental" -> (() => TextPipeline.ccIncremental(prior, delta, newIds)))
+    calls.foreach { case (name, call) =>
+      val entries0 = entries
+      val first = jobsOf(s"$name-1") { call().collect(); () }
+      assert(entries == entries0, s"$name left ${entries - entries0} cache entries behind")
+      val repeat = jobsOf(s"$name-2") { call().collect(); () }
+      assert(repeat == first, s"$name: the repeat call scheduled $repeat jobs, the first $first")
+    }
+  }
+
+  // Lineage.fixpoint releases every superseded round: what stays
+  // registered after the call is the result's own materialization
+  test("a forced-distributed CC on a path graph leaves at most one checkpoint registered") {
+    val path = (1L to 41L).map(i => (i, "x")).toDF("doc_id", "text")
+    val pathPairs = (1L to 40L).map(i => (i, i + 1)).toDF("doc_id_1", "doc_id_2")
+    val sc = spark.sparkContext
+    val rdds0 = sc.getPersistentRDDs.size
+    val labels = forcedDistributed(TextPipeline.dedupClusters(path, "doc_id", "text", 0.9,
+      precomputedPairs = Some(pathPairs))).as[(Long, Long)].collect()
+    assert(labels.length == 41 && labels.forall(_._2 == 1L), labels.toSeq.sorted.toString)
+    val grown = sc.getPersistentRDDs.size - rdds0
+    assert(grown <= 1, s"$grown persistent RDDs stayed registered")
   }
 
   test("ccIncremental equals from-scratch dedupClusters on the fixture split") {

@@ -4,7 +4,6 @@ import graft.SparkSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import java.nio.file.Files
 import java.sql.Timestamp
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -20,23 +19,6 @@ class StreamingSpec extends SparkSuite {
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
   case class Doc(doc_id: Long, ts: Timestamp, text: String)
   case class LDoc(doc_id: Long, ts: Timestamp, lang: String, text: String)
-
-  // every checkpoint/sink directory a test makes, deleted in afterAll
-  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-
-  private def tmpDir(tag: String): String = {
-    val dir = Files.createTempDirectory(s"graft-$tag").toFile
-    tmpDirs.add(dir)
-    dir.toString
-  }
-
-  override def afterAll(): Unit = {
-    try {
-      // a query still writing its checkpoint would recreate what is deleted
-      spark.streams.active.foreach { q => q.stop(); q.awaitTermination() }
-      tmpDirs.asScala.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    } finally super.afterAll()
-  }
 
   // s_decode_projection (O5: key dropped, value as string, K:43)
   test("s_decode_projection: (key,value) stream reduces to string values") {
