@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
-import graft.engine.functions.GraftFunctions
 import graft.engine.io.Tables
 
 /** The session-shared artifacts: intermediates that several query
@@ -93,14 +92,7 @@ private[ops] object Artifacts {
     * In production, the content-collapse table a dedup stack persists
     * next to its signatures. */
   val minhashGroups: Artifact[DataFrame] = declareFrame("minhash_groups") { (s, d) =>
-    GraftFunctions.register(s)
-    Tables.documents(s, d)
-      .select(col("doc_id"),
-        call_function("token_set_hashes62", col("text")).as("hsh"))
-      .groupBy(col("hsh"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("members"),
-           min(col("doc_id")).as("rep"))
-      .select(col("rep"), col("members"), col("hsh"))
+    Similarity.tokenSetGroups(Tables.documents(s, d), "doc_id", "text")
   }
 
   /** The verified minhash pair graph over the full corpus —
@@ -176,10 +168,11 @@ private[ops] object Artifacts {
 
   /** [[Similarity.scoredEvalTable]] at the audit ladder's minimum:
     * `q_dedup_eval` (the 0.9 point) and `q_dedup_eval_sweep` (the ladder)
-    * re-gate ONE materialization of the quadratic truth pass. */
+    * re-gate ONE materialization ([[Lineage.truncate]]) of the quadratic
+    * truth pass. */
   val evalScored: Artifact[DataFrame] = declareFrame("eval_scored") { (s, d) =>
-    Similarity.scoredEvalTable(Tables.documents(s, d), "doc_id", "text", 0.8,
-      preGroups = Some(minhashGroups(s, d)))
+    Lineage.truncate(Similarity.scoredEvalTable(Tables.documents(s, d), "doc_id", "text", 0.8,
+      preGroups = Some(minhashGroups(s, d))))
   }
 
   /** [[Similarity.kmeansTrain]](embeddings, 3) final-round statistics —

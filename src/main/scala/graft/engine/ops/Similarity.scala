@@ -180,31 +180,16 @@ object Similarity {
     * while it is still one number in a report rather than a hung stage.
     *
     * Shape: the shared docs→groups→signature→band prefix (identical
-    * arithmetic to [[minhashNearDup]] — same native signature family,
-    * same fold band key), then two narrow aggregates keyed by
+    * arithmetic to [[minhashNearDup]]: [[tokenSetGroups]], the native
+    * signature, [[bandKeys]]), then two narrow aggregates keyed by
     * (band, bkey) and band. Nothing quadratic runs: the audit costs one
     * signature pass even when the join it predicts would explode. */
   def minhashBandStats(documents: DataFrame, idCol: String, textCol: String,
                        k: Int = 16, bands: Int = 2): DataFrame = {
-    require(k % bands == 0, s"k ($k) must split evenly into $bands bands")
-    val rowsPerBand = k / bands
     val spark = documents.sparkSession
-    GraftFunctions.register(spark)
-    val docs = documents.select(
-      col(idCol).as("doc_id"),
-      call_function("token_set_hashes62", col(textCol)).as("hsh"))
-    val groups = docs.groupBy(col("hsh"))
-      .agg(min(col("doc_id")).as("rep"))
-    val sigs = groups.select(col("rep"),
-      GraftFunctions.minhashSig(spark, col("hsh"), k).as("sig"))
-    val P31 = 2147483647L
-    val banded = sigs.select(col("rep"), explode(array((0 until bands).map { bnd =>
-        val cs = (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
-          .map(i => element_at(col("sig"), i + 1))
-        val bkey = cs.foldLeft(lit(0L): Column)((acc, m) =>
-          pmod(acc * 131L + pmod(m, lit(P31)), lit(P31)))
-        struct(lit(bnd).as("band"), bkey.as("bkey"))
-      }: _*)).as("bb"))
+    val banded = tokenSetGroups(documents, idCol, textCol)
+      .select(col("rep"), GraftFunctions.minhashSig(spark, col("hsh"), k).as("sig"))
+      .select(col("rep"), bandKeys(col("sig"), k, bands, k / bands))
       .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"))
     banded.groupBy("band", "bkey").agg(count(lit(1)).as("pop"))
       .groupBy("band")
@@ -461,29 +446,16 @@ object Similarity {
                       bands: Int = 2, rowsPerBand: Int = 8,
                       preGroups: Option[DataFrame] = None): DataFrame = {
     val spark = documents.sparkSession
-    GraftFunctions.register(spark)
     // preGroups (r18): the memoized [[Artifacts.minhashGroups]] collapse —
     // the estimator only reads (rep, hsh) of it (members unused)
-    val groups = preGroups.map(_.select(col("rep"), col("hsh"))).getOrElse {
-      documents.select(col(idCol).as("doc_id"),
-          call_function("token_set_hashes62", col(textCol)).as("hsh"))
-        .groupBy("hsh").agg(min("doc_id").as("rep"))
-    }
+    val groups = preGroups.getOrElse(tokenSetGroups(documents, idCol, textCol))
+      .select(col("rep"), col("hsh"))
     val sigs = groups.select(col("rep"), size(col("hsh")).as("sz"),
       GraftFunctions.minhashSig(spark, col("hsh"), k).as("sig"))
-    val P31 = 2147483647L
-    val banded = sigs.select(col("rep"), col("sz"), explode(array((0 until bands).map { bnd =>
-        val cs = (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
-          .map(i => element_at(col("sig"), i + 1))
-        val bkey = cs.foldLeft(lit(0L): Column)((acc, m) =>
-          pmod(acc * 131L + pmod(m, lit(P31)), lit(P31)))
-        struct(lit(bnd).as("band"), bkey.as("bkey"))
-      }: _*)).as("bb"))
+    val banded = sigs.select(col("rep"), col("sz"), bandKeys(col("sig"), k, bands, rowsPerBand))
       .select(col("rep"), col("sz"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    val sizeBound = least(col("x.sz"), col("y.sz")).cast("double") >=
-      greatest(col("x.sz"), col("y.sz")) * lit(threshold - 0.001)
     val cand = banded.as("x").join(banded.as("y"), Seq("band", "bkey"))
-      .filter(col("x.rep") < col("y.rep") && sizeBound)
+      .filter(col("x.rep") < col("y.rep") && sizeBound(col("x.sz"), col("y.sz"), threshold))
       .select(col("x.rep").as("rep_1"), col("y.rep").as("rep_2")).distinct()
     val sa = groups.join(sigs.select(col("rep"), col("sig")), "rep")
       .select(col("rep").as("rep_1"), col("hsh").as("ha"), col("sig").as("siga"))
@@ -494,10 +466,9 @@ object Similarity {
       when(element_at(col("siga"), i + 1) === element_at(col("sigb"), i + 1), lit(1L))
         .otherwise(lit(0L))).reduce(_ + _)
     cand.join(sa, "rep_1").join(sb, "rep_2")
+      .filter(setJaccard(col("ha"), col("hb")) >= threshold)
       .withColumn("inter", inter.cast("long"))
       .withColumn("nmatch", matches)
-      .filter(round(col("inter").cast("double") /
-        (size(col("ha")) + size(col("hb")) - col("inter")), 4) >= threshold)
       .select(col("rep_1"), col("rep_2"),
         expr("(10000 * inter) DIV (size(ha) + size(hb) - inter)").as("exact_bp"),
         expr(s"(10000 * nmatch) DIV $k").as("est_bp"))
@@ -533,19 +504,6 @@ object Similarity {
       .orderBy("q_id")
   }
 
-  /** Dedup-quality audit — the near-dup analogue of [[annRecall]]: the
-    * MinHash-LSH pair set ([[minhashNearDup]]) confusion-counted against
-    * the EXACT all-pairs Jaccard ground truth at the same threshold, as
-    * one operator emitting `(n_truth, n_found, tp, fp, fn, precision_bp,
-    * recall_bp)` — the banding-miss rate a pipeline watches before
-    * trusting an LSH parameterization on a new corpus. Because the LSH
-    * path verifies exact Jaccard on its candidates, fp can only be 0;
-    * the audit still counts it honestly rather than assuming it.
-    *
-    * Scale: the ground-truth side is DECLARED quadratic (the
-    * `q_sim_pairs_topk` discipline — an audit tier you run on a sample,
-    * not a serving path; the single-block ngramJaccard call makes that
-    * explicit). The confusion join runs over pair sets, not the corpus. */
   /** Salt-group cap for the all-pairs truth joins (0/negative → unsalted
     * single-task join). Env-tunable for A/B measurement and for hosts
     * whose core count makes a different spread optimal; the default
@@ -560,31 +518,23 @@ object Similarity {
       // env-tunable for hosts whose core count prefers another spread.
       .orElse(Some(64)).filter(_ > 0)
 
+  /** Dedup-quality audit — the near-dup analogue of [[annRecall]]: the
+    * MinHash-LSH pair set ([[minhashNearDup]]) confusion-counted against
+    * the EXACT all-pairs Jaccard ground truth at the same threshold, as
+    * one operator emitting `(n_truth, n_found, tp, fp, fn, precision_bp,
+    * recall_bp)` — the banding-miss rate a pipeline watches before
+    * trusting an LSH parameterization on a new corpus. Because the LSH
+    * path verifies exact Jaccard on its candidates, fp can only be 0;
+    * the audit still counts it honestly rather than assuming it.
+    *
+    * Scale: the ground-truth side is DECLARED quadratic (the
+    * `q_sim_pairs_topk` discipline — an audit tier you run on a sample,
+    * not a serving path; the single-block ngramJaccard call makes that
+    * explicit). The confusion count runs over pair sets, not the corpus.
+    * One gate, so the scored table is read once and stays lazy. */
   def dedupEval(documents: DataFrame, idCol: String, textCol: String,
-                threshold: Double): DataFrame = {
-    val keys = Seq("doc_id_1", "doc_id_2")
-    // saltCap (r17): the single-block truth join otherwise runs the
-    // whole corpus² verify in ONE task — triangle salt spreads it,
-    // same pair set (see ngramJaccard's salt note)
-    val truth = TextPipeline.ngramJaccard(
-        documents.withColumn("all_blk", lit(1)), idCol, textCol, Seq("all_blk"), threshold,
-        saltCap = evalSaltCap)
-      .select(keys.map(col): _*)
-    val found = minhashNearDup(documents, idCol, textCol, threshold, ordered = false)
-      .select(keys.map(col): _*)
-    truth.withColumn("t", lit(1L))
-      .join(found.withColumn("f", lit(1L)), keys, "full_outer")
-      .agg(
-        sum(when(col("t").isNotNull && col("f").isNotNull, 1L).otherwise(0L)).as("n_tp"),
-        sum(when(col("t").isNull && col("f").isNotNull, 1L).otherwise(0L)).as("n_fp"),
-        sum(when(col("t").isNotNull && col("f").isNull, 1L).otherwise(0L)).as("n_fn"))
-      .select(
-        (col("n_tp") + col("n_fn")).as("n_truth"),
-        (col("n_tp") + col("n_fp")).as("n_found"),
-        col("n_tp"), col("n_fp"), col("n_fn"),
-        expr("10000 * n_tp DIV (n_tp + n_fp)").as("precision_bp"),
-        expr("10000 * n_tp DIV (n_tp + n_fn)").as("recall_bp"))
-  }
+                threshold: Double): DataFrame =
+    dedupEvalAt(scoredEvalTable(documents, idCol, textCol, threshold), threshold)
 
   /** The [[dedupEval]] confusion counted at a LADDER of thresholds from
     * one pair computation — the curve an operator reads to SET the dedup
@@ -592,10 +542,11 @@ object Similarity {
     * all-pairs truth and the LSH candidate set are scored ONCE at the
     * ladder's minimum (banding is threshold-independent; the size-bound
     * prune at min(t)−0.001 is provably inert for every rung), the scored
-    * full-outer pair table is checkpointed, and each rung re-gates it
-    * with pure column predicates. Recall falling away below the banding
-    * design point is exactly the S-curve the parameterization chose —
-    * this query makes that trade measurable.
+    * full-outer pair table is truncated ([[Lineage.truncate]]), and each
+    * rung re-gates it with pure column predicates ([[dedupEvalAt]]).
+    * Recall falling away below the banding design point is exactly the
+    * S-curve the parameterization chose — this query makes that trade
+    * measurable.
     *
     * Scale: one quadratic truth pass (the declared audit tier) + one
     * near-dup run; the per-rung aggregates run over the materialized
@@ -604,86 +555,56 @@ object Similarity {
                      thresholds: Seq[Double],
                      precomputedScores: Option[DataFrame] = None): DataFrame = {
     require(thresholds.nonEmpty)
-    val joined = precomputedScores.getOrElse(
-      scoredEvalTable(documents, idCol, textCol, thresholds.min))
+    val scored = precomputedScores.getOrElse(
+      Lineage.truncate(scoredEvalTable(documents, idCol, textCol, thresholds.min)))
     thresholds.sorted.map { t =>
-      joined.agg(
-          sum(when(col("tj") >= t && col("fj") >= t, 1L).otherwise(0L)).as("n_tp"),
-          sum(when((col("tj").isNull || col("tj") < t) && col("fj") >= t, 1L)
-            .otherwise(0L)).as("n_fp"),
-          sum(when(col("tj") >= t && (col("fj").isNull || col("fj") < t), 1L)
-            .otherwise(0L)).as("n_fn"))
-        .select(
-          lit(math.round(t * 100)).cast("long").as("threshold_pct"),
-          (col("n_tp") + col("n_fn")).as("n_truth"),
-          (col("n_tp") + col("n_fp")).as("n_found"),
-          col("n_tp"), col("n_fp"), col("n_fn"),
-          expr("CASE WHEN n_tp + n_fp = 0 THEN NULL ELSE 10000 * n_tp DIV (n_tp + n_fp) END")
-            .as("precision_bp"),
-          expr("CASE WHEN n_tp + n_fn = 0 THEN NULL ELSE 10000 * n_tp DIV (n_tp + n_fn) END")
-            .as("recall_bp"))
+      dedupEvalAt(scored, t)
+        .select(lit(math.round(t * 100)).cast("long").as("threshold_pct"), col("*"))
     }.reduce(_ unionAll _).orderBy("threshold_pct")
   }
 
   /** The (tj, fj) scored pair table both dedup audits re-gate: exact
     * all-pairs truth and verified LSH candidates, each carrying its
-    * jaccard, full-outer joined on the pair key and truncated via
-    * localCheckpoint. A gate at any t ≥ `tMin` is a pure filter of
-    * this table (banding is threshold-independent; the size-bound
-    * prune at tMin−0.001 is inert for every higher gate). */
+    * jaccard, full-outer joined on the pair key. Returned lazy: a caller
+    * that gates it more than once truncates it first. A gate at any
+    * t ≥ `tMin` is a pure filter of this table (banding is
+    * threshold-independent; the size-bound prune at tMin−0.001 is inert
+    * for every higher gate).
+    *
+    * The truth pass runs at REP level over the identical-token-set
+    * collapse ([[tokenSetGroups]], or the caller's memoized copy in
+    * `preGroups`): jaccard is a pure function of the token SET, so each
+    * distinct-set pair is verified once and [[expandRepPairs]] expands
+    * the members back (cross pairs carry the rep pair's jaccard,
+    * within-group pairs are exact duplicates at 1.0 ≥ tMin): ~38% fewer
+    * merge-walk probes at sf0.1, more on a template-heavy corpus. The sets
+    * reach the truth join pre-hashed, so its salted branch caches
+    * nothing. Spec-pinned equal to a doc-level all-pairs reference in
+    * TextSimilaritySpec; the found side shares the same groups. */
   private[ops] def scoredEvalTable(documents: DataFrame, idCol: String,
                                    textCol: String, tMin: Double,
                                    preGroups: Option[DataFrame] = None): DataFrame = {
-    // saltCap (r17): see dedupEval — the eval_scored artifact's truth
-    // pass ran single-threaded without it (~19 s at sf0.1).
-    // preGroups (r18): the truth pass runs at REP level over the
-    // identical-token-set collapse — jaccard is a pure function of the
-    // token SET, so verifying each distinct-set pair once and expanding
-    // group members back (cross pairs carry the rep pair's jaccard,
-    // within-group pairs are exact duplicates at 1.0 ≥ tMin) yields the
-    // byte-identical pair table while the quadratic merge-walk runs
-    // over reps only (~38% fewer probes at sf0.1, and the collapse is
-    // the decisive term on a template-heavy real corpus). Spec-pinned
-    // equal to the doc-level pass in TextSimilaritySpec; the found side
-    // shares the same memoized groups.
-    val truth = preGroups match {
-      case Some(g) =>
-        val repPairs = TextPipeline.ngramJaccard(
-            g.select(col("rep").as("rid"), col("hsh")).withColumn("all_blk", lit(1)),
-            "rid", "hsh", Seq("all_blk"), tMin,
-            saltCap = evalSaltCap, preHashed = true, ordered = false)
-        val ma = g.select(col("rep").as("doc_id_1"), col("members").as("ma"))
-        val mb = g.select(col("rep").as("doc_id_2"), col("members").as("mb"))
-        val cross = repPairs.join(ma, "doc_id_1").join(mb, "doc_id_2")
-          .select(explode(col("ma")).as("a"), col("mb"), col("jaccard"))
-          .select(col("a"), explode(col("mb")).as("b"), col("jaccard"))
-          .select(least(col("a"), col("b")).as("doc_id_1"),
-                  greatest(col("a"), col("b")).as("doc_id_2"), col("jaccard"))
-        val within = g.filter(size(col("members")) > 1)
-          .select(explode(col("members")).as("a"), col("members"))
-          .select(col("a"), explode(col("members")).as("b"))
-          .filter(col("a") < col("b"))
-          .select(col("a").as("doc_id_1"), col("b").as("doc_id_2"),
-                  lit(1.0).as("jaccard"))
-        cross.unionAll(within)
-          .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("tj"))
-      case None =>
-        TextPipeline.ngramJaccard(
-            documents.withColumn("all_blk", lit(1)), idCol, textCol, Seq("all_blk"), tMin,
-            saltCap = evalSaltCap)
-          .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("tj"))
-    }
+    val groups = preGroups.getOrElse(tokenSetGroups(documents, idCol, textCol))
+    // saltCap (r17): the single-block truth join otherwise runs the
+    // whole quadratic verify in ONE task (~19 s at sf0.1 for eval_scored)
+    val repPairs = TextPipeline.ngramJaccard(
+        groups.select(col("rep").as("rid"), col("hsh")).withColumn("all_blk", lit(1)),
+        "rid", "hsh", Seq("all_blk"), tMin,
+        saltCap = evalSaltCap, preHashed = true, ordered = false)
+      .join(groups.select(col("rep").as("doc_id_1"), col("members").as("ma")), "doc_id_1")
+      .join(groups.select(col("rep").as("doc_id_2"), col("members").as("mb")), "doc_id_2")
+    val truth = expandRepPairs(repPairs, groups)
+      .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("tj"))
     val found = minhashNearDup(documents, idCol, textCol, tMin, ordered = false,
-        preGroups = preGroups)
+        preGroups = Some(groups))
       .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("fj"))
     truth.join(found, Seq("doc_id_1", "doc_id_2"), "full_outer")
       .select("tj", "fj")
-      .localCheckpoint()
   }
 
-  /** One [[dedupEval]] confusion row derived from a scored pair table —
-    * identical output contract to [[dedupEval]] at the same threshold
-    * (spec-pinned equal), the form the memoized bindings use. */
+  /** The one confusion count of the dedup audits: (n_truth, n_found, tp,
+    * fp, fn, precision_bp, recall_bp) of a scored pair table gated at
+    * `t`. Precision/recall are NULL when their denominator is 0. */
   def dedupEvalAt(scored: DataFrame, t: Double): DataFrame =
     scored.agg(
         sum(when(col("tj") >= t && col("fj") >= t, 1L).otherwise(0L)).as("n_tp"),
@@ -695,8 +616,10 @@ object Similarity {
         (col("n_tp") + col("n_fn")).as("n_truth"),
         (col("n_tp") + col("n_fp")).as("n_found"),
         col("n_tp"), col("n_fp"), col("n_fn"),
-        expr("10000 * n_tp DIV (n_tp + n_fp)").as("precision_bp"),
-        expr("10000 * n_tp DIV (n_tp + n_fn)").as("recall_bp"))
+        expr("CASE WHEN n_tp + n_fp = 0 THEN NULL ELSE 10000 * n_tp DIV (n_tp + n_fp) END")
+          .as("precision_bp"),
+        expr("CASE WHEN n_tp + n_fn = 0 THEN NULL ELSE 10000 * n_tp DIV (n_tp + n_fn) END")
+          .as("recall_bp"))
 
   /** The sample-tier form of [[dedupEval]] — the discipline the docs
     * promise for the quadratic ground-truth audits, DEMONSTRATED as an
@@ -1366,6 +1289,100 @@ object Similarity {
       (col("salt_lo") === col("x.g") && col("salt_hi") === col("x.g"))
 
   // ------------------------------------------------------------- MinHash
+  // The MinHash-LSH kernel, defined once: every batch, audit,
+  // incremental-index and streaming LSH operator builds on these, so
+  // "near-dup" means the same thing on every path.
+
+  /** The identical-token-set collapse every MinHash-LSH operator runs
+    * first: one row per distinct token set, `(rep, members, hsh)` — the
+    * min doc id, the sorted member ids and the set itself.
+    *
+    * `hsh` is the token set as a sorted DISTINCT array of poly_hash62
+    * longs (the fused native `token_set_hashes62`), computed BEFORE the
+    * group stage so the groupBy compares long arrays, never string
+    * arrays, and the signature and the exact verify run on the same
+    * longs (one string hash per token). poly_hash62, not xxhash64, so
+    * that every value the pipeline produces — signatures, band keys,
+    * verified pairs — replays in DuckDB SQL and the oracle checks
+    * values, not just rows. The 62-bit width matters: the collapse and
+    * the verify both trust these longs as token identities, and a
+    * 31-bit hash's birthday collisions would silently merge different
+    * tokens or documents, invisibly to an oracle replaying the same
+    * hash. Callers that read only `rep`/`hsh` leave `members` to
+    * column pruning. */
+  private[engine] def tokenSetGroups(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    GraftFunctions.register(df.sparkSession)
+    hashSetGroups(df.select(col(idCol).as("doc_id"),
+      call_function("token_set_hashes62", col(textCol)).as("hsh")))
+  }
+
+  /** [[tokenSetGroups]] over caller-hashed `(doc_id, hsh)` sets (the
+    * exact prefix joins group their shingle sets the same way). */
+  private[engine] def hashSetGroups(sets: DataFrame): DataFrame =
+    sets.groupBy(col("hsh"))
+      .agg(sort_array(collect_list(col("doc_id"))).as("members"),
+           min(col("doc_id")).as("rep"))
+      .select(col("rep"), col("members"), col("hsh"))
+
+  /** The LSH band keys of a k-wide MinHash signature: ONE explode of
+    * `bands` `(band, bkey)` structs, aliased `bb` (a unionAll of
+    * per-band selects would recompute the signature per band). The
+    * band key is the left fold `(acc·131 + mᵢ mod p) mod p`, p = 2³¹−1,
+    * over the band's `rowsPerBand` signature components.
+    *
+    * The key contract every banded path relies on: it is engine-neutral
+    * (DuckDB replays it with one `list_reduce`), and a key collision
+    * only ever ADDS candidates, which the exact verify then discards
+    * identically on both engines. This is the one place a design with
+    * `bands × rowsPerBand ≠ k` is rejected. */
+  private[engine] def bandKeys(sig: Column, k: Int, bands: Int, rowsPerBand: Int): Column = {
+    require(bands * rowsPerBand == k,
+      s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal k ($k)")
+    val P31 = 2147483647L
+    explode(array((0 until bands).map { bnd =>
+      val bkey = (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
+        .map(i => element_at(sig, i + 1))
+        .foldLeft(lit(0L): Column)((acc, m) => pmod(acc * 131L + pmod(m, lit(P31)), lit(P31)))
+      struct(lit(bnd).as("band"), bkey.as("bkey"))
+    }: _*)).as("bb")
+  }
+
+  /** The size prune of a Jaccard gate at `t`: |A∩B| ≤ min(|A|,|B|), so
+    * J ≥ t forces min ≥ t·max, and a pair failing that is dropped with
+    * two int compares before it pays the merge walk. The 0.001 slack
+    * keeps pairs whose ROUNDED jaccard reaches `t` from just below, so
+    * the prune never changes an output (the oracle carries none). */
+  private[engine] def sizeBound(na: Column, nb: Column, t: Double): Column =
+    least(na, nb).cast("double") >= greatest(na, nb) * lit(t - 0.001)
+
+  /** Exact Jaccard of two sorted distinct hash arrays, rounded to 4
+    * places — the value every verify gates on. The native merge walk
+    * counts the overlap with zero allocation (vs array_intersect's
+    * per-row set). Needs the engine functions registered. */
+  private[engine] def setJaccard(a: Column, b: Column): Column = {
+    val inter = call_function("sorted_intersect_size", a, b).cast("double")
+    round(inter / (size(a) + size(b) - inter), 4)
+  }
+
+  /** Verified rep pairs back to doc pairs: every member of one group
+    * against every member of the other at the rep pair's `jaccard`
+    * (`repPairs` carries the member arrays as `ma`/`mb`), plus the
+    * within-group pairs, which are exact duplicates at 1.0. Output
+    * `(doc_id_1 < doc_id_2, jaccard)`. */
+  private[engine] def expandRepPairs(repPairs: DataFrame, groups: DataFrame): DataFrame = {
+    val cross = repPairs
+      .select(explode(col("ma")).as("a"), col("mb"), col("jaccard"))
+      .select(col("a"), explode(col("mb")).as("b"), col("jaccard"))
+      .select(least(col("a"), col("b")).as("doc_id_1"),
+              greatest(col("a"), col("b")).as("doc_id_2"), col("jaccard"))
+    val within = groups.filter(size(col("members")) > 1)
+      .select(explode(col("members")).as("a"), col("members"))
+      .select(col("a"), explode(col("members")).as("b"))
+      .filter(col("a") < col("b"))
+      .select(col("a").as("doc_id_1"), col("b").as("doc_id_2"), lit(1.0).as("jaccard"))
+    cross.unionAll(within).select("doc_id_1", "doc_id_2", "jaccard")
+  }
+
   /** MinHash + LSH banding near-dup over whitespace token sets: k-wide
     * signature → `bands` × `rowsPerBand` banding → band-bucket join →
     * exact Jaccard verify at `threshold`. Emits (doc_id_1, doc_id_2,
@@ -1393,88 +1410,38 @@ object Similarity {
                      k: Int = graft.engine.functions.MinHashSignature.NumPerms,
                      bands: Int = 2, rowsPerBand: Int = 8,
                      preGroups: Option[DataFrame] = None): DataFrame = {
-    require(bands * rowsPerBand == k,
-      s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal k ($k)")
     val spark = documents.sparkSession
-    GraftFunctions.register(spark)
-    // `hsh`: the token set as a sorted DISTINCT array of poly_hash62
-    // longs, computed BEFORE the group stage so (a) the groupBy
-    // shuffles/compares long arrays, never string arrays, and (b) the
-    // minhash base hash and the verification intersect run on the same
-    // longs (one string hash per token total). poly_hash62 (not
-    // xxhash64) on purpose: every value this pipeline produces is
-    // expressible in DuckDB SQL, so the whole LSH pipeline — signatures,
-    // band keys, verified pairs — is value-checked by the driver oracle
-    // rather than rows-only. The 62-bit width matters here: the
-    // identical-set collapse and the exact-Jaccard verify both trust
-    // these longs as token identities, and a 31-bit hash's birthday
-    // collisions would silently merge different tokens (inflated
-    // jaccard) or even different documents (false "exact" duplicates) —
-    // invisible to the oracle, which replays the same hash.
-    // fused native pass (see TokenSetHashes62) — value-identical to
-    // array_sort(array_distinct(transform(array_distinct(split(text)),
-    // poly_hash62))), whose lambdas would run interpreted per token
     // The rep-level table is consumed by five downstream subplans; when
     // NOT caller-supplied the recompute is cheap on long-array keys
     // (measured cheaper than an InMemoryRelation round-trip, which also
     // breaks codegen fusion). `preGroups` (r18) is the cross-QUERY seam:
-    // the identical (rep, members, hsh) collapse is a pure function of
-    // the corpus, re-derived by every same-corpus LSH consumer (k16,
-    // k32, salted, the estimator, the eval found-side) — the memoized
-    // [[Artifacts.minhashGroups]] artifact feeds them all, the r8
-    // shared-artifact discipline one level below the pair graph.
-    val groups = preGroups.getOrElse {
-      documents.select(
-          col(idCol).as("doc_id"),
-          call_function("token_set_hashes62", col(textCol)).as("hsh"))
-        .groupBy(col("hsh"))
-        .agg(sort_array(collect_list(col("doc_id"))).as("members"),
-             min(col("doc_id")).as("rep"))
-        .select(col("rep"), col("members"), col("hsh"))
-    }
+    // the memoized [[Artifacts.minhashGroups]] collapse feeds every
+    // same-corpus LSH consumer (k16, k32, salted, the estimator, the
+    // eval found-side).
+    val groups = preGroups.getOrElse(tokenSetGroups(documents, idCol, textCol))
     // k-wide signature as ONE native fused pass per rep (no explode, no
     // second shuffle — the signature is a scalar projection; see
     // MinHashSignature). Bit-identical to the explode + k-min-agg
     // formulation it replaced (property-tested in FunctionsSpec).
     val sigs = groups.select(col("rep"), size(col("hsh")).as("sz"),
       GraftFunctions.minhashSig(spark, col("hsh"), k).as("sig"))
-    // `bands` bands of `rowsPerBand` rows; band key = left fold
-    // (acc·131 + mᵢ mod p) mod p over the band's signature components —
-    // engine-neutral (the oracle replicates it with one list_reduce),
-    // and collisions only ever ADD candidates, which exact verification
-    // then discards identically on both engines. Bands come from ONE
-    // explode over the sig row (a unionAll of selects would recompute
-    // the whole signature per band).
-    val P31 = 2147483647L
-    val banded = sigs.select(col("rep"), col("sz"), explode(array((0 until bands).map { bnd =>
-        val cs = (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
-          .map(i => element_at(col("sig"), i + 1))
-        val bkey = cs.foldLeft(lit(0L): Column)((acc, m) =>
-          pmod(acc * 131L + pmod(m, lit(P31)), lit(P31)))
-        struct(lit(bnd).as("band"), bkey.as("bkey"))
-      }: _*)).as("bb"))
+    val banded = sigs.select(col("rep"), col("sz"), bandKeys(col("sig"), k, bands, rowsPerBand))
       .select(col("rep"), col("sz"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    // Size-bound pruning INSIDE the band self-join: jaccard ≥ t forces
-    // min(|sa|,|sb|) ≥ t·max(|sa|,|sb|), so pairs failing the bound are
+    // [[sizeBound]] INSIDE the band self-join: pairs failing it are
     // dropped as the join probes — BEFORE the distinct, which is the
     // dominant stage of the whole pipeline (the self-similar fixture
     // emits ~4.25 M raw candidates from ~4 k reps; shuffling all of
     // them into the dedup was ~80% of pipeline time; an earlier
     // formulation pruned after the distinct via broadcast size joins
     // and paid it in full). Carrying `sz` through the explode costs one
-    // int per band row. The 0.001 slack covers pairs whose ROUNDED
-    // jaccard crosses the threshold from just below; output is
-    // therefore exactly unchanged (the oracle keeps verifying ALL
-    // band collisions and matches).
-    val sizeBound =
-      least(col("x.sz"), col("y.sz")).cast("double") >=
-        greatest(col("x.sz"), col("y.sz")) * lit(threshold - 0.001)
+    // int per band row.
+    val bound = sizeBound(col("x.sz"), col("y.sz"), threshold)
     // optional hot-band salt (see saltCells): same pair set, bounded
     // per-task pair count when a band key goes pathological
     val cand = (saltCap match {
       case None =>
         banded.as("x").join(banded.as("y"), Seq("band", "bkey"))
-          .filter(col("x.rep") < col("y.rep") && sizeBound)
+          .filter(col("x.rep") < col("y.rep") && bound)
       case Some(cap) =>
         // materialize the (tiny: 4 narrow cols/rep) banded table once —
         // the hot-bucket count and both join sides otherwise each
@@ -1497,32 +1464,17 @@ object Similarity {
         val b = banded.persist(StorageLevel.MEMORY_AND_DISK)
         val salted = saltCells(b, Seq("band", "bkey"), "rep", cap)
         salted.as("x").join(salted.as("y"), Seq("band", "bkey", "salt_lo", "salt_hi"))
-          .filter(saltPairFilter && col("x.rep") < col("y.rep") && sizeBound)
+          .filter(saltPairFilter && col("x.rep") < col("y.rep") && bound)
     })
       .select(col("x.rep").as("rep_1"), col("y.rep").as("rep_2"))
       .distinct()
-    // exact-Jaccard verification of LSH candidates, still at rep level.
-    // `hsh` arrays are sorted, so the native merge-walk expression counts
-    // the overlap with zero allocation (vs array_intersect's per-row set).
+    // exact-Jaccard verification of LSH candidates, still at rep level
     val sa = groups.select(col("rep").as("rep_1"), col("hsh").as("sa"), col("members").as("ma"))
     val sb = groups.select(col("rep").as("rep_2"), col("hsh").as("sb"), col("members").as("mb"))
-    val inter = GraftFunctions.sortedIntersectSize(spark, col("sa"), col("sb")).cast("double")
     val verified = cand.join(sa, "rep_1").join(sb, "rep_2")
-      .withColumn("jaccard", round(inter / (size(col("sa")) + size(col("sb")) - inter), 4))
+      .withColumn("jaccard", setJaccard(col("sa"), col("sb")))
       .filter(col("jaccard") >= threshold)
-    // expand cross-group rep pairs to doc pairs (jaccard as verified) …
-    val cross = verified
-      .select(explode(col("ma")).as("a"), col("mb"), col("jaccard"))
-      .select(col("a"), explode(col("mb")).as("b"), col("jaccard"))
-      .select(least(col("a"), col("b")).as("doc_id_1"),
-              greatest(col("a"), col("b")).as("doc_id_2"), col("jaccard"))
-    // … plus the within-group pairs, which are exact duplicates (jaccard 1)
-    val within = groups.filter(size(col("members")) > 1)
-      .select(explode(col("members")).as("a"), col("members"))
-      .select(col("a"), explode(col("members")).as("b"))
-      .filter(col("a") < col("b"))
-      .select(col("a").as("doc_id_1"), col("b").as("doc_id_2"), lit(1.0).as("jaccard"))
-    val pairs = cross.unionAll(within).select("doc_id_1", "doc_id_2", "jaccard")
+    val pairs = expandRepPairs(verified, groups)
     // consumers that only need the pair SET (e.g. survivor anti-joins)
     // skip the global sort of ~|pairs| rows
     if (ordered) pairs.orderBy("doc_id_1", "doc_id_2") else pairs
@@ -1532,8 +1484,9 @@ object Similarity {
   /** The standing banded MinHash index over a reference corpus — the
     * artifact a rolling build computes ONCE (and in production persists)
     * so every delta batch or stream probes it without re-tokenizing
-    * history. One row per (band, bkey) per rep: the band key plus the
-    * rep's sorted token-hash set, set size and member ids, so a probe
+    * history. One row per (band, bkey) per rep: the band key (see
+    * [[bandKeys]] for its contract) plus the rep's sorted token-hash
+    * set, set size and member ids, so a probe
     * join needs no second lookup into the corpus. Consumed by
     * [[graft.engine.stream.Streams.streamingNearDupIncremental]] (the
     * serve face); [[minhashNearDupIncremental]] builds the same shape
@@ -1541,27 +1494,13 @@ object Similarity {
   def minhashBandedIndex(reference: DataFrame, idCol: String, textCol: String,
       k: Int = graft.engine.functions.MinHashSignature.NumPerms,
       bands: Int = 2, rowsPerBand: Int = 8): DataFrame = {
-    require(bands * rowsPerBand == k,
-      s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal k ($k)")
     val spark = reference.sparkSession
-    GraftFunctions.register(spark)
-    val P31 = 2147483647L
-    reference.select(col(idCol).as("doc_id"),
-        call_function("token_set_hashes62", col(textCol)).as("hsh"))
-      .groupBy(col("hsh"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("members"),
-           min(col("doc_id")).as("rep"))
+    tokenSetGroups(reference, idCol, textCol)
       .select(col("rep"), col("members"), col("hsh"),
         size(col("hsh")).as("sz"),
         GraftFunctions.minhashSig(spark, col("hsh"), k).as("sig"))
       .select(col("rep"), col("members"), col("hsh"), col("sz"),
-        explode(array((0 until bands).map { bnd =>
-          val cs = (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
-            .map(i => element_at(col("sig"), i + 1))
-          val bkey = cs.foldLeft(lit(0L): Column)((acc, m) =>
-            pmod(acc * 131L + pmod(m, lit(P31)), lit(P31)))
-          struct(lit(bnd).as("band"), bkey.as("bkey"))
-        }: _*)).as("bb"))
+        bandKeys(col("sig"), k, bands, rowsPerBand))
       .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"),
               col("rep"), col("sz"), col("hsh"), col("members"))
   }
@@ -1625,35 +1564,14 @@ object Similarity {
       k: Int = graft.engine.functions.MinHashSignature.NumPerms,
       bands: Int = 2, rowsPerBand: Int = 8,
       saltCap: Option[Int] = None): DataFrame = {
-    require(bands * rowsPerBand == k,
-      s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal k ($k)")
     val spark = reference.sparkSession
-    GraftFunctions.register(spark)
-    val P31 = 2147483647L
-    def side(df: DataFrame): DataFrame =
-      df.select(col(idCol).as("doc_id"),
-          call_function("token_set_hashes62", col(textCol)).as("hsh"))
-        .groupBy(col("hsh"))
-        .agg(sort_array(collect_list(col("doc_id"))).as("members"),
-             min(col("doc_id")).as("rep"))
-        .select(col("rep"), col("members"), col("hsh"))
     def bandedOf(groups: DataFrame): DataFrame =
       groups.select(col("rep"), size(col("hsh")).as("sz"),
           GraftFunctions.minhashSig(spark, col("hsh"), k).as("sig"))
-        .select(col("rep"), col("sz"), explode(array((0 until bands).map { bnd =>
-            val cs = (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
-              .map(i => element_at(col("sig"), i + 1))
-            val bkey = cs.foldLeft(lit(0L): Column)((acc, m) =>
-              pmod(acc * 131L + pmod(m, lit(P31)), lit(P31)))
-            struct(lit(bnd).as("band"), bkey.as("bkey"))
-          }: _*)).as("bb"))
+        .select(col("rep"), col("sz"), bandKeys(col("sig"), k, bands, rowsPerBand))
         .select(col("rep"), col("sz"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    val refGroups = side(reference)
-    val newGroups = side(delta)
-    // same jaccard size bound as minhashNearDup, pruned inside the join
-    val sizeBound =
-      least(col("x.sz"), col("y.sz")).cast("double") >=
-        greatest(col("x.sz"), col("y.sz")) * lit(threshold - 0.001)
+    val refGroups = tokenSetGroups(reference, idCol, textCol)
+    val newGroups = tokenSetGroups(delta, idCol, textCol)
     // optional hot-bucket salt — the TWO-SIDED skew fix (the self-join
     // triangle salt doesn't apply here): a reference band bucket past
     // `cap` members splits into g = ⌈n/cap⌉ salt groups (rep mod g),
@@ -1681,16 +1599,15 @@ object Similarity {
           .withColumn("salt", explode(sequence(lit(0), coalesce(col("g"), lit(1)) - 1)))
         refS.as("x").join(newS.as("y"), Seq("band", "bkey", "salt"))
     })
-      .filter(sizeBound)
+      .filter(sizeBound(col("x.sz"), col("y.sz"), threshold))
       .select(col("x.rep").as("rep_ref"), col("y.rep").as("rep_new"))
       .distinct()
     val sa = refGroups.select(col("rep").as("rep_ref"),
       col("hsh").as("sa"), col("members").as("ma"))
     val sb = newGroups.select(col("rep").as("rep_new"),
       col("hsh").as("sb"), col("members").as("mb"))
-    val inter = GraftFunctions.sortedIntersectSize(spark, col("sa"), col("sb")).cast("double")
     val pairs = cand.join(sa, "rep_ref").join(sb, "rep_new")
-      .withColumn("jaccard", round(inter / (size(col("sa")) + size(col("sb")) - inter), 4))
+      .withColumn("jaccard", setJaccard(col("sa"), col("sb")))
       .filter(col("jaccard") >= threshold)
       .select(explode(col("ma")).as("doc_id_ref"), col("mb"), col("jaccard"))
       .select(col("doc_id_ref"), explode(col("mb")).as("doc_id_new"), col("jaccard"))

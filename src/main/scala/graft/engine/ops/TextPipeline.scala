@@ -2345,19 +2345,11 @@ object TextPipeline {
            col("shingles").as("sb"): _*))
     }
     val joinCols = blockCols ++ bandCol.map(_ => "blk")
-    val inter = call_function("sorted_intersect_size",
-      col("sa"), col("sb")).cast("double")
-    // Size-ratio prune BEFORE the merge walk (the same bound the minhash
-    // verify uses): |A∩B| ≤ min ⇒ jaccard ≤ min/max, so min < t·max can
-    // never reach the threshold — two int compares kill the pair before
-    // it pays the O(|A|+|B|) intersect. The 0.001 slack covers pairs
-    // whose ROUNDED jaccard crosses from just below; output is provably
-    // unchanged (the oracle carries no prune and still hash-matches).
-    // On the all-pairs audit tier (q_dedup_eval's truth side) this is
-    // the difference between walking every pair and walking the few
-    // with compatible sizes.
-    val sizeBound = least(size(col("sa")), size(col("sb"))).cast("double") >=
-      greatest(size(col("sa")), size(col("sb"))) * lit(threshold - 0.001)
+    // Size-ratio prune BEFORE the merge walk (the one the minhash verify
+    // uses, [[Similarity.sizeBound]]). On the all-pairs audit tier
+    // (q_dedup_eval's truth side) this is the difference between
+    // walking every pair and walking the few with compatible sizes.
+    val sizeBound = Similarity.sizeBound(size(col("sa")), size(col("sb")), threshold)
     // optional hot-block TILING (r17): a block key holding a huge
     // population turns this equi-join into ONE straggler task computing
     // |block|² merge walks — on the all-pairs audit tier (`all_blk = 1`,
@@ -2418,7 +2410,7 @@ object TextPipeline {
           .filter(sizeBound)
     }
     val out = joined
-      .withColumn("jaccard", round(inter / (size(col("sa")) + size(col("sb")) - inter), 4))
+      .withColumn("jaccard", Similarity.setJaccard(col("sa"), col("sb")))
       .filter(col("jaccard") >= threshold)
       .select("doc_id_1", "doc_id_2", "jaccard")
     // ordered=false skips the presentation sort — set-shaped consumers
@@ -3918,11 +3910,8 @@ object TextPipeline {
       g.select(explode(col("members")).as("doc_id"), col("hsh")))
     val sa = docs.select(col("doc_id").as("doc_id_1"), col("hsh").as("sa"))
     val sb = docs.select(col("doc_id").as("doc_id_2"), col("hsh").as("sb"))
-    val inter = graft.engine.functions.GraftFunctions
-      .sortedIntersectSize(spark, col("sa"), col("sb")).cast("double")
     cand.join(sa, "doc_id_1").join(sb, "doc_id_2")
-      .withColumn("jaccard",
-        round(inter / (size(col("sa")) + size(col("sb")) - inter), 4))
+      .withColumn("jaccard", Similarity.setJaccard(col("sa"), col("sb")))
       .select(col("doc_id_1"), col("doc_id_2"), col("jaccard"),
         (col("jaccard") >= threshold).as("confirmed"))
       .orderBy("doc_id_1", "doc_id_2")
@@ -4157,7 +4146,7 @@ object TextPipeline {
       else // native fused pass (value-identical to the interpreted
            // transform∘pos_grams∘poly_hash62 chain, pinned in FunctionsSpec)
         call_function("gram_set_hashes62", col(textCol), lit(shingleK))).as("hsh"))
-    val grps = base.groupBy("hsh").agg(min("doc_id").as("rep"))
+    val grps = Similarity.hashSetGroups(base).select(col("rep"), col("hsh"))
     val toks = grps.select(col("rep"), explode(col("hsh")).as("h"))
     val dfTab = toks.groupBy("h").agg(count(lit(1)).as("df"))
     val ordered = toks.join(broadcast(dfTab), "h")
@@ -4174,22 +4163,15 @@ object TextPipeline {
     // is output-neutral, same slack argument as ngramJaccard)
     val pref = ordered.select(col("rep"), col("n"),
       explode(slice(col("oh"), lit(1), col("p"))).as("h"))
-    val lenCompat = least(col("x.n"), col("y.n")).cast("double") >=
-      greatest(col("x.n"), col("y.n")) * lit(threshold - 0.001)
     val cand = pref.as("x").join(pref.as("y"), Seq("h"))
-      .filter(col("x.rep") < col("y.rep") && lenCompat)
+      .filter(col("x.rep") < col("y.rep") &&
+        Similarity.sizeBound(col("x.n"), col("y.n"), threshold))
       .select(col("x.rep").as("r1"), col("y.rep").as("r2")).distinct()
-    val sets = grps.select(col("rep"), col("hsh"))
-    val inter = call_function("sorted_intersect_size",
-      col("sa"), col("sb")).cast("double")
-    val sizeBound = least(size(col("sa")), size(col("sb"))).cast("double") >=
-      greatest(size(col("sa")), size(col("sb"))) * lit(threshold - 0.001)
     cand
-      .join(sets.select(col("rep").as("r1"), col("hsh").as("sa")), "r1")
-      .join(sets.select(col("rep").as("r2"), col("hsh").as("sb")), "r2")
-      .filter(sizeBound)
-      .withColumn("jaccard",
-        round(inter / (size(col("sa")) + size(col("sb")) - inter), 4))
+      .join(grps.select(col("rep").as("r1"), col("hsh").as("sa")), "r1")
+      .join(grps.select(col("rep").as("r2"), col("hsh").as("sb")), "r2")
+      .filter(Similarity.sizeBound(size(col("sa")), size(col("sb")), threshold))
+      .withColumn("jaccard", Similarity.setJaccard(col("sa"), col("sb")))
       .filter(col("jaccard") >= threshold)
       .select(col("r1").as("doc_id_1"), col("r2").as("doc_id_2"), col("jaccard"))
       .orderBy("doc_id_1", "doc_id_2")
@@ -4219,7 +4201,7 @@ object TextPipeline {
     val threshold = tNum.toDouble / tDen
     def sets(df: DataFrame) = df.select(col(idCol).as("doc_id"),
       call_function("gram_set_hashes62", col(textCol), lit(shingleK)).as("hsh"))
-    val refGrps = sets(corpus).groupBy("hsh").agg(min("doc_id").as("rep"))
+    val refGrps = Similarity.hashSetGroups(sets(corpus)).select(col("rep"), col("hsh"))
     val refToks = refGrps.select(col("rep"), explode(col("hsh")).as("h"))
     val dfTab = refToks.groupBy("h").agg(count(lit(1)).as("df"))
     def orderedPref(toks: DataFrame, keyCol: String): DataFrame =
@@ -4235,18 +4217,14 @@ object TextPipeline {
     val newSets = sets(batch)
     val newPref = orderedPref(
       newSets.select(col("doc_id"), explode(col("hsh")).as("h")), "doc_id")
-    val lenOk = least(col("x.n"), col("y.n")).cast("double") >=
-      greatest(col("x.n"), col("y.n")) * lit(threshold - 0.001)
     val cand = newPref.as("x").join(refPref.as("y"), Seq("h"))
-      .filter(lenOk)
+      .filter(Similarity.sizeBound(col("x.n"), col("y.n"), threshold))
       .select(col("x.doc_id").as("doc_id_new"), col("y.rep").as("doc_id_ref"))
       .distinct()
-    val inter = call_function("sorted_intersect_size", col("sa"), col("sb")).cast("double")
     cand
       .join(newSets.select(col("doc_id").as("doc_id_new"), col("hsh").as("sa")), "doc_id_new")
       .join(refGrps.select(col("rep").as("doc_id_ref"), col("hsh").as("sb")), "doc_id_ref")
-      .withColumn("jaccard",
-        round(inter / (size(col("sa")) + size(col("sb")) - inter), 4))
+      .withColumn("jaccard", Similarity.setJaccard(col("sa"), col("sb")))
       .filter(col("jaccard") >= threshold)
       .select("doc_id_new", "doc_id_ref", "jaccard")
       .orderBy("doc_id_new", "doc_id_ref")
@@ -4932,12 +4910,11 @@ object TextPipeline {
     // entities are the product)
     "q_fuzzy_clusters" -> ((s, d) => {
       val cust = Tables.customer(s, d)
-      // pairs materialize ONCE (the CC edge union otherwise re-executes
-      // the deletion-variant join on both union branches); the graph
-      // fits the fused union-find task at every oracle scale
+      // dedupClusters caches these caller-supplied pairs for its gate
+      // count and its CC pass and releases them after; the graph fits
+      // the fused union-find task at every oracle scale
       val pairs = fuzzyMatch(cust, "c_custkey", "c_name", Seq("c_nationkey"), 1)
         .select(col("id_1").as("doc_id_1"), col("id_2").as("doc_id_2"))
-        .localCheckpoint()
       dedupClusters(cust, "c_custkey", "c_name", 0.9,
         precomputedPairs = Some(pairs)).orderBy("id")
     }),

@@ -471,14 +471,10 @@ object Streams {
   }
 
   /** The shared banding projection: watermarked docs → one row per
-    * (band, band-key) with the full k-long MinHash signature —
-    * identical arithmetic to the batch path
-    * ([[graft.engine.ops.Similarity.minhashNearDup]]: same signature
-    * family, same fold key, same (k, bands, rowsPerBand)
-    * parameterization with the same 2×8 defaults), so batch and
+    * (band, band-key) with the full k-long MinHash signature, built from
+    * the batch kernel ([[graft.engine.ops.Similarity.bandKeys]] over
+    * [[graft.engine.functions.GraftFunctions.minhashSig]]), so batch and
     * stream agree on what "near-dup" means at every parameter point.
-    * Consumed by [[streamingNearDupLsh]] (pair detection) and
-    * [[streamingNearDupSurvivors]] (keep-first filtering).
     *
     * Slot cap: the input is coalesced to at most the session's task
     * slots (`defaultParallelism`) before anything else runs. A
@@ -491,35 +487,73 @@ object Streams {
     * slots has 25 partitions per steady trigger and ~66 in a restart's
     * backlog; capped, both run as one wave. The coalesce is narrow (no
     * shuffle added), a no-op when the source has no more partitions than
-    * slots, and changes no output: both state functions sort each group
-    * by doc_id before comparing. */
+    * slots, and changes no output: the bucket step sorts each group by
+    * doc_id before comparing. */
   private def bandedSigs(docs: DataFrame, textCol: String, watermark: String,
                          k: Int, bands: Int, rowsPerBand: Int)
       : Dataset[(Int, Long, Long, Seq[Long], java.sql.Timestamp)] = {
-    require(bands * rowsPerBand == k,
-      s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal k ($k)")
-    graft.engine.functions.GraftFunctions.register(docs.sparkSession)
-    import docs.sparkSession.implicits._
-    val P31 = 2147483647L
-    val sigCol =
-      if (k == graft.engine.functions.MinHashSignature.NumPerms)
-        call_function("minhash_sig", call_function("token_set_hashes62", col(textCol)))
-      else
-        call_function("minhash_sig", call_function("token_set_hashes62", col(textCol)), lit(k))
-    docs.coalesce(docs.sparkSession.sparkContext.defaultParallelism)
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val sig = graft.engine.functions.GraftFunctions.minhashSig(spark,
+      call_function("token_set_hashes62", col(textCol)), k)
+    docs.coalesce(spark.sparkContext.defaultParallelism)
       .withWatermark("ts", watermark)
-      .withColumn("sig", sigCol)
+      .withColumn("sig", sig)
       .select(col("doc_id"), col("ts"), col("sig"),
-        explode(array((0 until bands).map { bnd =>
-          val cs = (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
-            .map(i => element_at(col("sig"), i + 1))
-          val bkey = cs.foldLeft(lit(0L): Column)((acc, m) =>
-            pmod(acc * 131L + pmod(m, lit(P31)), lit(P31)))
-          struct(lit(bnd).as("band"), bkey.as("bkey"))
-        }: _*)).as("bb"))
+        graft.engine.ops.Similarity.bandKeys(col("sig"), k, bands, rowsPerBand))
       .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"),
               col("doc_id"), col("sig"), col("ts"))
       .as[(Int, Long, Long, Seq[Long], java.sql.Timestamp)]
+  }
+
+  /** Estimated Jaccard of two MinHash signatures: the fraction of
+    * agreeing components. */
+  private def estJaccard(a: Seq[Long], b: Seq[Long]): Double =
+    a.iterator.zip(b.iterator).count { case (x, y) => x == y }.toDouble / a.length
+
+  /** The per-(band, band-key) bucket-state step both stateful LSH
+    * operators run over [[bandedSigs]]: decode the bucket's
+    * [[LshBucketState]], take the batch's arrivals in doc_id order (so a
+    * batch holding both ends of a pair handles it exactly once), keep
+    * the RUNNING max event time, call `onArrival(id, sig, ts, stored)`
+    * for each arrival not yet stored — `stored` is the member map
+    * before it — and emit what it returns, store the arrival while the
+    * bucket holds fewer than `bucketCap` members, encode, and set the
+    * event-time timeout `horizonMs` past the newest member (kept ahead
+    * of the current watermark, as a timeout must be). A timed-out
+    * bucket is dropped. */
+  private def lshBucketStep[O: org.apache.spark.sql.Encoder](
+      banded: Dataset[(Int, Long, Long, Seq[Long], java.sql.Timestamp)],
+      horizonMs: Long, bucketCap: Int)(
+      onArrival: (Long, Seq[Long], java.sql.Timestamp, Map[Long, Seq[Long]]) => IterableOnce[O])
+      : Dataset[O] = {
+    import banded.sparkSession.implicits._
+    banded
+      .groupByKey { case (band, bkey, _, _, _) => (band, bkey) }
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        (_: (Int, Long), rows: Iterator[(Int, Long, Long, Seq[Long], java.sql.Timestamp)],
+         state: GroupState[LshStateEnvelope]) => {
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else {
+            val st = state.getOption.map(LshStateCodec.decode)
+              .getOrElse(LshBucketState(0L, Map.empty))
+            var members = st.members
+            var maxTs = st.maxTs // running max across batches, not batch-local
+            val out = List.newBuilder[O]
+            rows.toSeq.sortBy(_._3).foreach { case (_, _, id, sig, t) =>
+              maxTs = math.max(maxTs, t.getTime)
+              if (!members.contains(id)) {
+                out ++= onArrival(id, sig, t, members)
+                // hot-bucket guard: compare-but-don't-store once full
+                if (members.size < bucketCap) members = members.updated(id, sig)
+              }
+            }
+            state.update(LshStateCodec.encode(LshBucketState(maxTs, members)))
+            state.setTimeoutTimestamp(
+              math.max(maxTs + horizonMs, state.getCurrentWatermarkMs() + 1000L))
+            out.result().iterator
+          }
+        })
   }
 
   /** s_stream_neardup_lsh: cross-batch MinHash-LSH near-duplicate
@@ -568,43 +602,16 @@ object Streams {
                           k: Int = graft.engine.functions.MinHashSignature.NumPerms,
                           bands: Int = 2, rowsPerBand: Int = 8): Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
-    bandedSigs(docs, textCol, watermark, k, bands, rowsPerBand)
-      .groupByKey { case (band, bkey, _, _, _) => (band, bkey) }
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: (Int, Long), rows: Iterator[(Int, Long, Long, Seq[Long], java.sql.Timestamp)],
-         state: GroupState[LshStateEnvelope]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val st = state.getOption.map(LshStateCodec.decode)
-              .getOrElse(LshBucketState(0L, Map.empty))
-            var members = st.members
-            var maxTs = st.maxTs // running max across batches, not batch-local
-            val out = List.newBuilder[NearDupHit]
-            // deterministic within-batch order: compare in doc_id order so
-            // a batch containing both ends of a pair emits it exactly once
-            rows.toSeq.sortBy(_._3).foreach { case (_, _, id, sig, t) =>
-              maxTs = math.max(maxTs, t.getTime)
-              if (!members.contains(id)) {
-                members.foreach { case (mid, msig) =>
-                  val est = sig.iterator.zip(msig.iterator).count { case (a, b) => a == b }
-                    .toDouble / sig.length
-                  if (est >= minEstJaccard)
-                    out += NearDupHit(math.min(mid, id), math.max(mid, id),
-                      math.round(est * 10000.0) / 10000.0)
-                }
-                // hot-bucket guard: compare-but-don't-store once full
-                if (members.size < bucketCap) members = members.updated(id, sig)
-              }
-            }
-            state.update(LshStateCodec.encode(LshBucketState(maxTs, members)))
-            // evict the bucket once the watermark passes its newest-ever
-            // member by the horizon (must stay ahead of the current
-            // watermark for the timeout to be legal)
-            state.setTimeoutTimestamp(
-              math.max(maxTs + horizonMs, state.getCurrentWatermarkMs() + 1000L))
-            out.result().iterator
-          }
-        })
+    lshBucketStep(bandedSigs(docs, textCol, watermark, k, bands, rowsPerBand),
+        horizonMs, bucketCap) { (id, sig, _, stored) =>
+      stored.iterator.flatMap { case (mid, msig) =>
+        val est = estJaccard(sig, msig)
+        if (est >= minEstJaccard)
+          Some(NearDupHit(math.min(mid, id), math.max(mid, id),
+            math.round(est * 10000.0) / 10000.0))
+        else None
+      }
+    }
   }
 
   /** A per-band keep/suppress verdict emitted by the survivor
@@ -668,40 +675,15 @@ object Streams {
     // sound here by construction — see the WATERMARK-CHECK NOTE above
     docs.sparkSession.conf.set(
       "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    val verdicts = bandedSigs(docs, textCol, watermark, k, bands, rowsPerBand)
-      .groupByKey { case (band, bkey, _, _, _) => (band, bkey) }
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (_: (Int, Long), rows: Iterator[(Int, Long, Long, Seq[Long], java.sql.Timestamp)],
-         state: GroupState[LshStateEnvelope]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val st = state.getOption.map(LshStateCodec.decode)
-              .getOrElse(LshBucketState(0L, Map.empty))
-            var members = st.members
-            var maxTs = st.maxTs
-            val out = List.newBuilder[BandVerdict]
-            // arrival order within a batch = doc_id order (the pair-
-            // detection discipline), so a batch holding an original and
-            // its copy keeps the original and suppresses the copy
-            rows.toSeq.sortBy(_._3).foreach { case (_, _, id, sig, t) =>
-              maxTs = math.max(maxTs, t.getTime)
-              if (!members.contains(id)) {
-                val matched = members.exists { case (_, msig) =>
-                  sig.iterator.zip(msig.iterator).count { case (a, b) => a == b }
-                    .toDouble / sig.length >= minEstJaccard
-                }
-                out += BandVerdict(id, t, matched)
-                // store even when suppressed: a removed doc must keep
-                // suppressing later copies of itself (batch chain rule)
-                if (members.size < bucketCap) members = members.updated(id, sig)
-              }
-            }
-            state.update(LshStateCodec.encode(LshBucketState(maxTs, members)))
-            state.setTimeoutTimestamp(
-              math.max(maxTs + horizonMs, state.getCurrentWatermarkMs() + 1000L))
-            out.result().iterator
-          }
-        })
+    // arrival order within a batch = doc_id order, so a batch holding an
+    // original and its copy keeps the original and suppresses the copy;
+    // a suppressed arrival is still stored, so a removed doc keeps
+    // suppressing later copies of itself (batch chain rule)
+    val verdicts = lshBucketStep(bandedSigs(docs, textCol, watermark, k, bands, rowsPerBand),
+        horizonMs, bucketCap) { (id, sig, t, stored) =>
+      Iterator.single(BandVerdict(id, t,
+        stored.exists { case (_, msig) => estJaccard(sig, msig) >= minEstJaccard }))
+    }
     verdicts.toDF()
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), combineWindow), col("doc_id"))
@@ -734,34 +716,17 @@ object Streams {
       index: DataFrame, threshold: Double,
       k: Int = graft.engine.functions.MinHashSignature.NumPerms,
       bands: Int = 2, rowsPerBand: Int = 8): DataFrame = {
-    require(bands * rowsPerBand == k,
-      s"bands ($bands) x rowsPerBand ($rowsPerBand) must equal k ($k)")
     val spark = docs.sparkSession
     graft.engine.functions.GraftFunctions.register(spark)
-    val P31 = 2147483647L
-    val hshCol = call_function("token_set_hashes62", col(textCol))
-    val sigCol =
-      if (k == graft.engine.functions.MinHashSignature.NumPerms)
-        call_function("minhash_sig", col("hsh_new"))
-      else call_function("minhash_sig", col("hsh_new"), lit(k))
     val probes = docs
-      .withColumn("hsh_new", hshCol)
-      .withColumn("sig", sigCol)
+      .withColumn("hsh_new", call_function("token_set_hashes62", col(textCol)))
+      .withColumn("sig", graft.engine.functions.GraftFunctions.minhashSig(spark, col("hsh_new"), k))
       .select(col("doc_id"), col("hsh_new"),
-        explode(array((0 until bands).map { bnd =>
-          val cs = (bnd * rowsPerBand until (bnd + 1) * rowsPerBand)
-            .map(i => element_at(col("sig"), i + 1))
-          val bkey = cs.foldLeft(lit(0L): Column)((acc, m) =>
-            pmod(acc * 131L + pmod(m, lit(P31)), lit(P31)))
-          struct(lit(bnd).as("band"), bkey.as("bkey"))
-        }: _*)).as("bb"))
+        graft.engine.ops.Similarity.bandKeys(col("sig"), k, bands, rowsPerBand))
       .select(col("bb.band").as("band"), col("bb.bkey").as("bkey"),
               col("doc_id"), col("hsh_new"))
-    val inter = graft.engine.functions.GraftFunctions
-      .sortedIntersectSize(spark, col("hsh"), col("hsh_new")).cast("double")
     probes.join(index, Seq("band", "bkey"))
-      .withColumn("jaccard",
-        round(inter / (size(col("hsh")) + size(col("hsh_new")) - inter), 4))
+      .withColumn("jaccard", graft.engine.ops.Similarity.setJaccard(col("hsh"), col("hsh_new")))
       .filter(col("jaccard") >= threshold)
       .select(explode(col("members")).as("doc_id_ref"),
               col("doc_id").as("doc_id_new"), col("jaccard"))

@@ -113,10 +113,27 @@ class MinHashParamSpec extends SparkSuite {
     assert(d == e && d.nonEmpty)
   }
 
+  // every banded entry point rejects a mismatched design at construction;
+  // past the signature element_at reads null (ANSI off), so an unguarded
+  // entry point would silently band a different slice of the signature
   test("bands x rowsPerBand must equal k") {
-    intercept[IllegalArgumentException] {
-      Similarity.minhashNearDup(plantedPairs(2, 19, 18), "doc_id", "text",
-        0.5, k = 16, bands = 3, rowsPerBand = 8)
+    val docs = plantedPairs(2, 19, 18)
+    val entryPoints = Seq[(String, () => Any)](
+      "minhashNearDup" -> (() => Similarity.minhashNearDup(docs, "doc_id", "text",
+        0.5, k = 16, bands = 3, rowsPerBand = 8)),
+      "minhashEstimate" -> (() => Similarity.minhashEstimate(docs, "doc_id", "text",
+        0.5, k = 16, bands = 3, rowsPerBand = 8)),
+      "minhashBandedIndex" -> (() => Similarity.minhashBandedIndex(docs, "doc_id", "text",
+        k = 16, bands = 3, rowsPerBand = 8)),
+      "minhashNearDupIncremental" -> (() => Similarity.minhashNearDupIncremental(
+        docs.filter(col("doc_id") < 2), docs.filter(col("doc_id") >= 2), "doc_id", "text",
+        0.5, k = 16, bands = 3, rowsPerBand = 8)),
+      "streamingNearDupLsh" -> (() => graft.engine.stream.Streams.streamingNearDupLsh(
+        docs.withColumn("ts", current_timestamp()), "text",
+        k = 16, bands = 3, rowsPerBand = 8)))
+    entryPoints.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("must equal k"), s"$name: ${e.getMessage}")
     }
   }
 

@@ -1821,6 +1821,26 @@ class TextSimilaritySpec extends SparkSuite {
     assert(direct.map(_.toString).toSeq == gated.map(_.toString).toSeq)
   }
 
+  // the sampled audit's truth join reads pre-hashed sets, so its salted
+  // all-pairs branch caches nothing: no cached RDD and no cache entry may
+  // outlive the call
+  test("dedupEvalSampled leaves no cached RDD or cache entry behind") {
+    // a no-op filter no other test applies: a frame an earlier test left
+    // cached cannot match these plans
+    val docs = graft.engine.io.Tables.documents(spark, sfDir).filter(col("doc_id") =!= -13L)
+    val sc = spark.sparkContext
+    def entries = org.apache.spark.sql.graft.CacheEntries.count(spark)
+    // new ids, not the count: the context cleaner may free an earlier
+    // test's RDDs while this call runs
+    val rdds0 = sc.getPersistentRDDs.keySet
+    val entries0 = entries
+    val rows = Similarity.dedupEvalSampled(docs, "doc_id", "text", 0.9, 25).collect()
+    assert(rows.length == 1 && rows.head.getLong(0) > 0L, rows.toSeq.toString)
+    val added = sc.getPersistentRDDs.keySet -- rdds0
+    assert(added.isEmpty, s"${added.size} cached RDDs stayed registered")
+    assert(entries == entries0, s"${entries - entries0} cache entries stayed behind")
+  }
+
   test("q_dedup_eval_sweep: recall climbs toward the banding design point; verified pipeline has no FPs") {
     val rows = run("q_dedup_eval_sweep")
       .select("threshold_pct", "n_truth", "n_fp", "recall_bp")
@@ -2242,10 +2262,13 @@ class TextSimilaritySpec extends SparkSuite {
 
   // r18: the shared identical-token-set collapse (Artifacts.minhashGroups) feeds
   // minhashNearDup / minhashEstimate / the eval truth pass via preGroups.
-  // Pin every seam byte-equal to the doc-level recompute it replaces — in
+  // Pin every seam byte-equal to the doc-level computation — in
   // particular the rep-level truth pass, whose member re-expansion (cross
   // pairs carry the rep pair's jaccard, within-group pairs are exact dups
-  // at 1.0) is a real restructure, not just a cached subtree.
+  // at 1.0) is a real restructure, not just a cached subtree. The
+  // engine keeps only the rep-level pass, so the doc-level scored table
+  // is built here: exact all-pairs jaccard over the documents themselves,
+  // full-outer-joined to the LSH pairs.
   test("preGroups seams: rep-level eval truth, near-dup and estimator ≡ doc-level") {
     val docs = Seq(
       (1L, "alpha beta gamma delta"),
@@ -2256,23 +2279,27 @@ class TextSimilaritySpec extends SparkSuite {
       (5L, "zeta epsilon theta eta"),        // same set as 4 → 2-member group
       (6L, "totally unrelated words here")
     ).toDF("doc_id", "text")
-    graft.engine.functions.GraftFunctions.register(spark)
-    val groups = docs
-      .select(col("doc_id"),
-        call_function("token_set_hashes62", col("text")).as("hsh"))
-      .groupBy("hsh")
-      .agg(sort_array(collect_list(col("doc_id"))).as("members"),
-           min(col("doc_id")).as("rep"))
-      .select("rep", "members", "hsh")
+    val groups = Similarity.tokenSetGroups(docs, "doc_id", "text")
+    def docLevel(d: org.apache.spark.sql.DataFrame, tMin: Double) = {
+      val truth = TextPipeline.ngramJaccard(d.withColumn("all_blk", lit(1)),
+          "doc_id", "text", Seq("all_blk"), tMin, ordered = false)
+        .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("tj"))
+      val found = Similarity.minhashNearDup(d, "doc_id", "text", tMin, ordered = false)
+        .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("fj"))
+      truth.join(found, Seq("doc_id_1", "doc_id_2"), "full_outer").select("tj", "fj")
+    }
     // the scored (tj, fj) table drops pair ids, so compare the multiset
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.groupBy("tj", "fj").count().collect()
         .map(r => (Option(r.get(0)), Option(r.get(1)), r.getLong(2))).toSet
-    val base = Similarity.scoredEvalTable(docs, "doc_id", "text", 0.2)
-    val rep = Similarity.scoredEvalTable(docs, "doc_id", "text", 0.2,
-      preGroups = Some(groups))
-    assert(canon(rep) == canon(base),
+    val reference = canon(docLevel(docs, 0.2))
+    // {1,2,7} within-group, 3 against each of them (J = 0.8), and {4,5}
+    assert(reference.toSeq.map(_._3).sum == 7L, reference.toString)
+    assert(canon(Similarity.scoredEvalTable(docs, "doc_id", "text", 0.2)) == reference,
       "rep-level truth expansion must reproduce the doc-level scored table")
+    assert(canon(Similarity.scoredEvalTable(docs, "doc_id", "text", 0.2,
+      preGroups = Some(groups))) == reference,
+      "caller-supplied groups must reproduce the doc-level scored table")
     val nd0 = Similarity.minhashNearDup(docs, "doc_id", "text", 0.2).collect().toSeq
     val nd1 = Similarity.minhashNearDup(docs, "doc_id", "text", 0.2,
       preGroups = Some(groups)).collect().toSeq
@@ -2281,21 +2308,14 @@ class TextSimilaritySpec extends SparkSuite {
     // so its leg — and a second scored-table leg — run on the sf corpus,
     // where the planted near-dups guarantee band collisions
     val corpus = graft.engine.io.Tables.documents(spark, sfDir)
-    val cGroups = corpus
-      .select(col("doc_id"),
-        call_function("token_set_hashes62", col("text")).as("hsh"))
-      .groupBy("hsh")
-      .agg(sort_array(collect_list(col("doc_id"))).as("members"),
-           min(col("doc_id")).as("rep"))
-      .select("rep", "members", "hsh")
+    val cGroups = Similarity.tokenSetGroups(corpus, "doc_id", "text")
     val me0 = Similarity.minhashEstimate(corpus, "doc_id", "text", 0.9).collect().toSeq
     val me1 = Similarity.minhashEstimate(corpus, "doc_id", "text", 0.9,
       preGroups = Some(cGroups)).collect().toSeq
     assert(me0.nonEmpty && me1 == me0)
-    val cBase = Similarity.scoredEvalTable(corpus, "doc_id", "text", 0.8)
     val cRep = Similarity.scoredEvalTable(corpus, "doc_id", "text", 0.8,
       preGroups = Some(cGroups))
-    assert(canon(cRep) == canon(cBase),
+    assert(canon(cRep) == canon(docLevel(corpus, 0.8)),
       "rep-level truth expansion must reproduce the doc-level scored table on the sf corpus")
   }
 }
