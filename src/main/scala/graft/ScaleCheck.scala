@@ -223,9 +223,7 @@ object ScaleCheck {
         val pairs = graft.engine.ops.TextPipeline
           .fuzzyMatch(cust, "c_custkey", "c_name", Seq("c_nationkey"), 1)
           .select(col("id_1").as("doc_id_1"), col("id_2").as("doc_id_2"))
-          .localCheckpoint()
-        graft.engine.ops.TextPipeline.dedupClusters(cust, "c_custkey", "c_name",
-          0.9, precomputedPairs = Some(pairs))
+        graft.engine.ops.TextPipeline.dedupClusters(cust, "c_custkey", pairs)
       } finally prior.fold(s.conf.unset(key))(v => s.conf.set(key, v))
     }
 

@@ -99,16 +99,14 @@ private[ops] object Artifacts {
     * q_dedup_survivors, q_dedup_clusters, q_dedup_degree and the graph
     * audits consume it. The pair list is tiny (≪ corpus). */
   val pairsFull: Artifact[DataFrame] = declareFrame("pairs_full") { (s, d) =>
-    Similarity.minhashNearDup(Tables.documents(s, d), "doc_id", "text", 0.9,
-      ordered = false, preGroups = Some(minhashGroups(s, d)))
+    Similarity.minhashNearDup(minhashGroups(s, d), 0.9, ordered = false)
   }
 
   /** The CC cluster table over [[pairsFull]]: three queries (clusters /
     * canonical / weights) consume the identical fixpoint, so the
     * iterative loop runs once per session. */
   val clusters: Artifact[DataFrame] = declareFrame("clusters") { (s, d) =>
-    TextPipeline.dedupClusters(Tables.documents(s, d), "doc_id", "text", 0.9,
-      precomputedPairs = Some(pairsFull(s, d)))
+    TextPipeline.dedupClusters(Tables.documents(s, d), "doc_id", pairsFull(s, d))
   }
 
   /** The line-curated REFLOWED corpus slice — the RefinedWeb-order head
@@ -130,7 +128,8 @@ private[ops] object Artifacts {
     * detection after boilerplate-line removal is why production
     * pipelines run the stages in this order. */
   val pairsGe10: Artifact[DataFrame] = declareFrame("pairs_ge10") { (s, d) =>
-    Similarity.minhashNearDup(reflGe10(s, d), "doc_id", "text", 0.9, ordered = false)
+    Similarity.minhashNearDup(Similarity.tokenSetGroups(reflGe10(s, d), "doc_id", "text"), 0.9,
+      ordered = false)
   }
 
   /** The twin decomposition (member, csz, cedges) of [[pairsFull]]:
@@ -149,10 +148,9 @@ private[ops] object Artifacts {
     * old×old slice of [[pairsFull]] (see [[TextPipeline.ccOldSide]]). */
   val priorClusters: Artifact[DataFrame] = declareFrame("prior_clusters") { (s, d) =>
     TextPipeline.dedupClusters(
-      Tables.documents(s, d).filter(TextPipeline.ccOldSide(col("doc_id"))),
-      "doc_id", "text", 0.9,
-      precomputedPairs = Some(pairsFull(s, d).filter(
-        TextPipeline.ccOldSide(col("doc_id_1")) && TextPipeline.ccOldSide(col("doc_id_2")))))
+      Tables.documents(s, d).filter(TextPipeline.ccOldSide(col("doc_id"))), "doc_id",
+      pairsFull(s, d).filter(
+        TextPipeline.ccOldSide(col("doc_id_1")) && TextPipeline.ccOldSide(col("doc_id_2"))))
   }
 
   /** The audited re-verify queue — in production the PERSISTED output the
@@ -160,10 +158,12 @@ private[ops] object Artifacts {
     * `q_missing_links_verify` reads it, `q_missing_links_repair` re-runs
     * CC over it, and neither is billed the other's verify pass. */
   val verifiedLinks: Artifact[DataFrame] = declareFrame("verified_links") { (s, d) =>
-    TextPipeline.missingLinksVerify(Tables.documents(s, d), "doc_id", "text", 0.9,
-      precomputedPairs = Some(pairsFull(s, d)),
-      preTwins = Some(twins(s, d)),
-      preGroups = Some(minhashGroups(s, d)))
+    // each doc's hash set from the CACHED collapse: exactly the
+    // token_set_hashes62 projection by construction, without the corpus
+    // re-tokenize each of the verify's two join sides would pay
+    TextPipeline.missingLinksVerify(
+      minhashGroups(s, d).select(explode(col("members")).as("doc_id"), col("hsh")),
+      twins(s, d), 0.9)
   }
 
   /** [[Similarity.scoredEvalTable]] at the audit ladder's minimum:
@@ -171,8 +171,7 @@ private[ops] object Artifacts {
     * re-gate ONE materialization ([[Lineage.truncate]]) of the quadratic
     * truth pass. */
   val evalScored: Artifact[DataFrame] = declareFrame("eval_scored") { (s, d) =>
-    Lineage.truncate(Similarity.scoredEvalTable(Tables.documents(s, d), "doc_id", "text", 0.8,
-      preGroups = Some(minhashGroups(s, d))))
+    Lineage.truncate(Similarity.scoredEvalTable(minhashGroups(s, d), 0.8))
   }
 
   /** [[Similarity.kmeansTrain]](embeddings, 3) final-round statistics —
@@ -191,21 +190,17 @@ private[ops] object Artifacts {
     Similarity.pqTrain(Tables.embeddings(s, d), "vec_id", "embedding")
   }
 
-  /** The corpus (doc_id, token) stream under the house tokenization rule
-    * (`toks` + empty-token filter) — the posting-list input of every
-    * BM25-family retrieval query (`q_bm25_topk`, `q_bm25_proximity`,
-    * `q_query_expansion`, `q_hybrid_rerank`, `q_rank_fusion`); in
-    * production, the materialized inverted-index input. */
+  /** [[TextPipeline.docTokens]] of the corpus — the posting-list input
+    * of every BM25-family retrieval query (`q_bm25_topk`,
+    * `q_bm25_proximity`, `q_query_expansion`, `q_hybrid_rerank`,
+    * `q_rank_fusion`). */
   val corpusTokens: Artifact[DataFrame] = declareFrame("corpus_tokens") { (s, d) =>
-    Tables.documents(s, d)
-      .select(col("doc_id"), explode(TextPipeline.toks(col("text"))).as("token"))
-      .filter(length(col("token")) > 0)
+    TextPipeline.docTokens(Tables.documents(s, d), "doc_id", "text")
   }
 
-  /** The (doc_id, dl) length table over [[corpusTokens]] — the heaviest
-    * shuffle in the BM25 scorer after the posting join itself. */
+  /** [[TextPipeline.docLengths]] over [[corpusTokens]]. */
   val corpusDl: Artifact[DataFrame] = declareFrame("corpus_dl") { (s, d) =>
-    corpusTokens(s, d).groupBy("doc_id").agg(count(lit(1)).as("dl"))
+    TextPipeline.docLengths(corpusTokens(s, d))
   }
 
   /** [[TextPipeline.bpeChain]] at [[BpeMerges]] — ONE tokenizer train:

@@ -440,26 +440,22 @@ object Similarity {
     * CTEs the dedup oracles replay. Scale shape: identical to
     * [[minhashNearDup]]'s banded chain (this IS that chain, stopping at
     * rep level) — the audit costs one extra k-wide coordinate compare
-    * per verified pair. */
-  def minhashEstimate(documents: DataFrame, idCol: String, textCol: String,
-                      threshold: Double, k: Int = 16,
-                      bands: Int = 2, rowsPerBand: Int = 8,
-                      preGroups: Option[DataFrame] = None): DataFrame = {
-    val spark = documents.sparkSession
-    // preGroups (r18): the memoized [[Artifacts.minhashGroups]] collapse —
-    // the estimator only reads (rep, hsh) of it (members unused)
-    val groups = preGroups.getOrElse(tokenSetGroups(documents, idCol, textCol))
-      .select(col("rep"), col("hsh"))
-    val sigs = groups.select(col("rep"), size(col("hsh")).as("sz"),
+    * per verified pair. `groups` is the [[tokenSetGroups]] collapse; the
+    * estimator reads only its (rep, hsh). */
+  def minhashEstimate(groups: DataFrame, threshold: Double, k: Int = 16,
+                      bands: Int = 2, rowsPerBand: Int = 8): DataFrame = {
+    val spark = groups.sparkSession
+    val reps = groups.select(col("rep"), col("hsh"))
+    val sigs = reps.select(col("rep"), size(col("hsh")).as("sz"),
       GraftFunctions.minhashSig(spark, col("hsh"), k).as("sig"))
     val banded = sigs.select(col("rep"), col("sz"), bandKeys(col("sig"), k, bands, rowsPerBand))
       .select(col("rep"), col("sz"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
     val cand = banded.as("x").join(banded.as("y"), Seq("band", "bkey"))
       .filter(col("x.rep") < col("y.rep") && sizeBound(col("x.sz"), col("y.sz"), threshold))
       .select(col("x.rep").as("rep_1"), col("y.rep").as("rep_2")).distinct()
-    val sa = groups.join(sigs.select(col("rep"), col("sig")), "rep")
+    val sa = reps.join(sigs.select(col("rep"), col("sig")), "rep")
       .select(col("rep").as("rep_1"), col("hsh").as("ha"), col("sig").as("siga"))
-    val sb = groups.join(sigs.select(col("rep"), col("sig")), "rep")
+    val sb = reps.join(sigs.select(col("rep"), col("sig")), "rep")
       .select(col("rep").as("rep_2"), col("hsh").as("hb"), col("sig").as("sigb"))
     val inter = GraftFunctions.sortedIntersectSize(spark, col("ha"), col("hb"))
     val matches = (0 until k).map(i =>
@@ -534,16 +530,17 @@ object Similarity {
     * One gate, so the scored table is read once and stays lazy. */
   def dedupEval(documents: DataFrame, idCol: String, textCol: String,
                 threshold: Double): DataFrame =
-    dedupEvalAt(scoredEvalTable(documents, idCol, textCol, threshold), threshold)
+    dedupEvalAt(scoredEvalTable(tokenSetGroups(documents, idCol, textCol), threshold), threshold)
 
   /** The [[dedupEval]] confusion counted at a LADDER of thresholds from
     * one pair computation — the curve an operator reads to SET the dedup
     * threshold instead of auditing a single point: both the exact
     * all-pairs truth and the LSH candidate set are scored ONCE at the
     * ladder's minimum (banding is threshold-independent; the size-bound
-    * prune at min(t)−0.001 is provably inert for every rung), the scored
-    * full-outer pair table is truncated ([[Lineage.truncate]]), and each
-    * rung re-gates it with pure column predicates ([[dedupEvalAt]]).
+    * prune at min(t)−0.001 is provably inert for every rung) into the
+    * [[scoredEvalTable]] the caller passes as `scored`, and each rung
+    * re-gates it with pure column predicates ([[dedupEvalAt]]); every
+    * rung reads it, so the caller truncates it ([[Lineage.truncate]]).
     * Recall falling away below the banding design point is exactly the
     * S-curve the parameterization chose — this query makes that trade
     * measurable.
@@ -551,12 +548,8 @@ object Similarity {
     * Scale: one quadratic truth pass (the declared audit tier) + one
     * near-dup run; the per-rung aggregates run over the materialized
     * pair table, never re-scoring. */
-  def dedupEvalSweep(documents: DataFrame, idCol: String, textCol: String,
-                     thresholds: Seq[Double],
-                     precomputedScores: Option[DataFrame] = None): DataFrame = {
+  def dedupEvalSweep(scored: DataFrame, thresholds: Seq[Double]): DataFrame = {
     require(thresholds.nonEmpty)
-    val scored = precomputedScores.getOrElse(
-      Lineage.truncate(scoredEvalTable(documents, idCol, textCol, thresholds.min)))
     thresholds.sorted.map { t =>
       dedupEvalAt(scored, t)
         .select(lit(math.round(t * 100)).cast("long").as("threshold_pct"), col("*"))
@@ -572,31 +565,26 @@ object Similarity {
     * for every higher gate).
     *
     * The truth pass runs at REP level over the identical-token-set
-    * collapse ([[tokenSetGroups]], or the caller's memoized copy in
-    * `preGroups`): jaccard is a pure function of the token SET, so each
-    * distinct-set pair is verified once and [[expandRepPairs]] expands
-    * the members back (cross pairs carry the rep pair's jaccard,
-    * within-group pairs are exact duplicates at 1.0 ≥ tMin): ~38% fewer
-    * merge-walk probes at sf0.1, more on a template-heavy corpus. The sets
-    * reach the truth join pre-hashed, so its salted branch caches
-    * nothing. Spec-pinned equal to a doc-level all-pairs reference in
+    * collapse `groups` ([[tokenSetGroups]]): jaccard is a pure function
+    * of the token SET, so each distinct-set pair is verified once and
+    * [[expandRepPairs]] expands the members back (cross pairs carry the
+    * rep pair's jaccard, within-group pairs are exact duplicates at
+    * 1.0 ≥ tMin): ~38% fewer merge-walk probes at sf0.1, more on a
+    * template-heavy corpus. The sets reach the truth join already
+    * hashed ([[TextPipeline.hashSetJaccard]]), so its salted branch
+    * caches nothing. Spec-pinned equal to a doc-level all-pairs reference in
     * TextSimilaritySpec; the found side shares the same groups. */
-  private[ops] def scoredEvalTable(documents: DataFrame, idCol: String,
-                                   textCol: String, tMin: Double,
-                                   preGroups: Option[DataFrame] = None): DataFrame = {
-    val groups = preGroups.getOrElse(tokenSetGroups(documents, idCol, textCol))
+  private[ops] def scoredEvalTable(groups: DataFrame, tMin: Double): DataFrame = {
     // saltCap (r17): the single-block truth join otherwise runs the
     // whole quadratic verify in ONE task (~19 s at sf0.1 for eval_scored)
-    val repPairs = TextPipeline.ngramJaccard(
-        groups.select(col("rep").as("rid"), col("hsh")).withColumn("all_blk", lit(1)),
-        "rid", "hsh", Seq("all_blk"), tMin,
-        saltCap = evalSaltCap, preHashed = true, ordered = false)
+    val repPairs = TextPipeline.hashSetJaccard(
+        groups.select(col("rep").as("doc_id"), lit(1).as("all_blk"), col("hsh").as("shingles")),
+        Seq("all_blk"), tMin, bandCol = None, saltCap = evalSaltCap, ordered = false)
       .join(groups.select(col("rep").as("doc_id_1"), col("members").as("ma")), "doc_id_1")
       .join(groups.select(col("rep").as("doc_id_2"), col("members").as("mb")), "doc_id_2")
     val truth = expandRepPairs(repPairs, groups)
       .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("tj"))
-    val found = minhashNearDup(documents, idCol, textCol, tMin, ordered = false,
-        preGroups = Some(groups))
+    val found = minhashNearDup(groups, tMin, ordered = false)
       .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("fj"))
     truth.join(found, Seq("doc_id_1", "doc_id_2"), "full_outer")
       .select("tj", "fj")
@@ -700,19 +688,16 @@ object Similarity {
     * the spaces can diverge, map ids first (or left-join and route
     * embedding-less candidates to an error sink). */
   def hybridRerank(documents: DataFrame, docIdCol: String, textCol: String,
+                   tokens: DataFrame, dl: DataFrame,
                    vectors: DataFrame, vecIdCol: String, vecCol: String,
-                   queryId: Long, nCand: Int, k: Int,
-                   preTokens: Option[DataFrame] = None,
-                   preDl: Option[DataFrame] = None): DataFrame = {
+                   queryId: Long, nCand: Int, k: Int): DataFrame = {
     // keyword query = the query doc's first 16 tokens, not its full
     // text: a retrieval query is short by nature, and a corpus-sized
     // term set would defeat the BM25 leg's query-term pruning
     val qdoc = documents.filter(col(docIdCol) === queryId)
       .select(col(docIdCol).as("query_id"),
         concat_ws(" ", slice(split(col(textCol), " "), 1, 16)).as("qtext"))
-    val bmIds = TextPipeline.bm25TopK(documents, docIdCol, textCol,
-        qdoc, "query_id", "qtext", nCand + 1,
-        preTokens = preTokens, preDl = preDl)
+    val bmIds = TextPipeline.bm25TopK(tokens, dl, qdoc, "query_id", "qtext", nCand + 1)
       .filter(col("doc_id") =!= queryId)
       .select(col("doc_id").as("cand_id"), lit(true).as("in_bm25"))
     val annIds = annLsh(vectors, vecIdCol, vecCol, queryId, nCand)
@@ -939,18 +924,15 @@ object Similarity {
     * construction), and the fusion is a full outer join of two
     * ≤ nCand-row frames. Nothing touches the corpus beyond the legs. */
   def rankFusion(documents: DataFrame, docIdCol: String, textCol: String,
+                 tokens: DataFrame, dl: DataFrame,
                  vectors: DataFrame, vecIdCol: String, vecCol: String,
-                 queryId: Long, nCand: Int, k: Int,
-                 preTokens: Option[DataFrame] = None,
-                 preDl: Option[DataFrame] = None): DataFrame = {
+                 queryId: Long, nCand: Int, k: Int): DataFrame = {
     val qdoc = documents.filter(col(docIdCol) === queryId)
       .select(col(docIdCol).as("query_id"),
         concat_ws(" ", slice(split(col(textCol), " "), 1, 16)).as("qtext"))
     val wBm = org.apache.spark.sql.expressions.Window
       .partitionBy(GraftFunctions.constWindowKey(col("cand_id"))).orderBy(col("rk"))
-    val bm = TextPipeline.bm25TopK(documents, docIdCol, textCol,
-        qdoc, "query_id", "qtext", nCand + 1,
-        preTokens = preTokens, preDl = preDl)
+    val bm = TextPipeline.bm25TopK(tokens, dl, qdoc, "query_id", "qtext", nCand + 1)
       .filter(col("doc_id") =!= queryId)
       .select(col("doc_id").as("cand_id"), col("rk"))
       .withColumn("bm_rank", row_number().over(wBm).cast("long"))
@@ -1024,7 +1006,7 @@ object Similarity {
 
   /** The trained PQ sub-codebooks folded from [[Artifacts.pqStats]] — the
     * ≤128-row (subspace, code, centroid) model every PQ consumer shares
-    * (value-identical to `trainedPqCodebook(embeddings)`: both fold
+    * (value-identical to [[pqCodebook]] over the embeddings: both fold
     * the same [[pqTrain]] statistics). The fold itself is model-sized;
     * memoizing the STATS is what removes the repeated corpus training
     * passes. */
@@ -1310,10 +1292,16 @@ object Similarity {
     * tokens or documents, invisibly to an oracle replaying the same
     * hash. Callers that read only `rep`/`hsh` leave `members` to
     * column pruning. */
-  private[engine] def tokenSetGroups(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+  private[engine] def tokenSetGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    hashSetGroups(tokenSets(df, idCol, textCol))
+
+  /** Every document's `(doc_id, hsh)` token-hash set, ungrouped — the
+    * input of [[tokenSetGroups]], and the exact-verify sets of
+    * [[TextPipeline.missingLinksVerify]] for a caller without groups. */
+  private[engine] def tokenSets(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     GraftFunctions.register(df.sparkSession)
-    hashSetGroups(df.select(col(idCol).as("doc_id"),
-      call_function("token_set_hashes62", col(textCol)).as("hsh")))
+    df.select(col(idCol).as("doc_id"),
+      call_function("token_set_hashes62", col(textCol)).as("hsh"))
   }
 
   /** [[tokenSetGroups]] over caller-hashed `(doc_id, hsh)` sets (the
@@ -1403,22 +1391,17 @@ object Similarity {
     * (~60× fewer candidate pairs on the fixture corpus), then expand
     * verified rep pairs — and the jaccard-1.0 within-group pairs — back
     * to doc pairs. Output is EXACTLY the pair set naive doc-level banding
-    * produces, because bucket collisions and jaccard depend only on sets. */
-  def minhashNearDup(documents: DataFrame, idCol: String, textCol: String,
-                     threshold: Double, ordered: Boolean = true,
+    * produces, because bucket collisions and jaccard depend only on sets.
+    *
+    * `groups` is that collapse, [[tokenSetGroups]] of the corpus. It is
+    * consumed by five downstream subplans; an unmaterialized one
+    * recomputes cheaply on long-array keys (measured cheaper than an
+    * InMemoryRelation round-trip, which also breaks codegen fusion). */
+  def minhashNearDup(groups: DataFrame, threshold: Double, ordered: Boolean = true,
                      saltCap: Option[Int] = None,
                      k: Int = graft.engine.functions.MinHashSignature.NumPerms,
-                     bands: Int = 2, rowsPerBand: Int = 8,
-                     preGroups: Option[DataFrame] = None): DataFrame = {
-    val spark = documents.sparkSession
-    // The rep-level table is consumed by five downstream subplans; when
-    // NOT caller-supplied the recompute is cheap on long-array keys
-    // (measured cheaper than an InMemoryRelation round-trip, which also
-    // breaks codegen fusion). `preGroups` (r18) is the cross-QUERY seam:
-    // the memoized [[Artifacts.minhashGroups]] collapse feeds every
-    // same-corpus LSH consumer (k16, k32, salted, the estimator, the
-    // eval found-side).
-    val groups = preGroups.getOrElse(tokenSetGroups(documents, idCol, textCol))
+                     bands: Int = 2, rowsPerBand: Int = 8): DataFrame = {
+    val spark = groups.sparkSession
     // k-wide signature as ONE native fused pass per rep (no explode, no
     // second shuffle — the signature is a scalar projection; see
     // MinHashSignature). Bit-identical to the explode + k-min-agg
@@ -1936,28 +1919,16 @@ object Similarity {
     * on (subspace, code) over the code rows + a (vec_id)-keyed partial+
     * final sum + TakeOrdered — the corpus floats never load and the code
     * table never shuffles with payload. */
-  def annPq(vectors: DataFrame, idCol: String, vecCol: String,
-            queryId: Long, k: Int,
-            preCb: Option[DataFrame] = None): DataFrame = {
+  def annPq(vectors: DataFrame, idCol: String, vecCol: String, cb: DataFrame,
+            queryId: Long, k: Int): DataFrame = {
     val e = canonVec(vectors, idCol, vecCol)
-    // ONE codebook threads through encode and LUT (the quantizeCodes
-    // shared-stats discipline): trained on the full corpus incl. the
-    // query. preCb (r18): the memoized [[sharedPqCodebook]] — the
-    // identical single-round model, trained once per session instead of
-    // inline per query (codes are written once, searched many times).
-    val cb = preCb.getOrElse(trainedPqCodebook(vectors, idCol, vecCol))
+    // ONE codebook (a [[pqCodebook]]) threads through encode and LUT
+    // (the quantizeCodes shared-stats discipline). It feeds both, so an
+    // unmaterialized one trains once per consumer: codes are written
+    // once and searched many times, so the bindings pass the memoized
+    // [[sharedPqCodebook]].
     adcTopK(e, e.filter(col("vec_id") =!= queryId), cb, queryId, k)
   }
-
-  /** [[pqCodebook]] materialized once (`localCheckpoint`, ≤128 rows —
-    * the MODEL, not data): the codebook subtree feeds BOTH the encode
-    * join and the query LUT inside [[annPq]]/[[annIvfPq]], and without
-    * the checkpoint the full-corpus training pipeline executes once per
-    * consumer — the plan-level opposite of the "codes written once,
-    * searched many times" claim. */
-  private def trainedPqCodebook(vectors: DataFrame, idCol: String,
-                                vecCol: String): DataFrame =
-    pqCodebook(vectors, idCol, vecCol).localCheckpoint()
 
   /** The shared ADC scoring tail: the query's integer lookup table
     * against `cb`, the `corpus` side encoded and summed — the
@@ -1987,11 +1958,9 @@ object Similarity {
     * exact integer arithmetic under the hash oracle end-to-end.
     * ADC(v) is per-vector, so pruning then scoring ≡ scoring then
     * pruning — the oracle replays it as an adc ⋈ candidate semi-join. */
-  def annIvfPq(vectors: DataFrame, idCol: String, vecCol: String,
-               queryId: Long, k: Int,
-               preCb: Option[DataFrame] = None): DataFrame = {
+  def annIvfPq(vectors: DataFrame, idCol: String, vecCol: String, cb: DataFrame,
+               queryId: Long, k: Int): DataFrame = {
     val e = canonVec(vectors, idCol, vecCol)
-    val cb = preCb.getOrElse(trainedPqCodebook(vectors, idCol, vecCol))
     val indexed = withLiteralCell(e).select(col("vec_id"), col("embedding"), col("cell"))
     val qcells = e.filter(col("vec_id") === queryId)
       .select(posexplode(literalDots.as("d")).as(Seq("j", "qdot")))
@@ -2011,11 +1980,10 @@ object Similarity {
     * rounded fold-cosine). The 100 TB read: the expensive exact scorer
     * touches `nCand` rows instead of the corpus, and the candidates
     * (tiny) broadcast under one embedding scan. */
-  def annPqRerank(vectors: DataFrame, idCol: String, vecCol: String,
-                  queryId: Long, nCand: Int, k: Int,
-                  preCb: Option[DataFrame] = None): DataFrame = {
+  def annPqRerank(vectors: DataFrame, idCol: String, vecCol: String, cb: DataFrame,
+                  queryId: Long, nCand: Int, k: Int): DataFrame = {
     val e = canonVec(vectors, idCol, vecCol)
-    exactRerankTail(e, annPq(vectors, idCol, vecCol, queryId, nCand, preCb),
+    exactRerankTail(e, annPq(vectors, idCol, vecCol, cb, queryId, nCand),
       queryId, k)
   }
 
@@ -2047,11 +2015,10 @@ object Similarity {
     * at 100 TB each stage touches an order of magnitude less data than
     * the one before (partition-pruned cells → 4-byte codes → nCand
     * float rows). */
-  def annIvfPqRerank(vectors: DataFrame, idCol: String, vecCol: String,
-                     queryId: Long, nCand: Int, k: Int,
-                     preCb: Option[DataFrame] = None): DataFrame = {
+  def annIvfPqRerank(vectors: DataFrame, idCol: String, vecCol: String, cb: DataFrame,
+                     queryId: Long, nCand: Int, k: Int): DataFrame = {
     val e = canonVec(vectors, idCol, vecCol)
-    exactRerankTail(e, annIvfPq(vectors, idCol, vecCol, queryId, nCand, preCb),
+    exactRerankTail(e, annIvfPq(vectors, idCol, vecCol, cb, queryId, nCand),
       queryId, k)
   }
 
@@ -2106,7 +2073,7 @@ object Similarity {
       .groupBy("vec_id").agg(max("sc").as("m"))
       .select(col("vec_id"), (-col("m.negc")).as("cell"), col("m.emb").as("embedding"))
 
-  /** [[annIvfPq]] with BOTH codebooks caller-supplied — the serve-path
+  /** [[annIvfPq]] with the coarse codebook caller-supplied too — the serve-path
     * form: the coarse IVF codebook (trained via [[ivfCodebook]] or the
     * literal [[codebookDf]]) prunes to NProbe probed cells via the
     * broadcast-argmax assignment, and the supplied PQ codebook scores
@@ -2247,18 +2214,15 @@ object Similarity {
       ncmEval(Tables.embeddings(s, d), "vec_id", "embedding", "label")),
     "q_rank_fusion" -> ((s, d) =>
       rankFusion(Tables.documents(s, d), "doc_id", "text",
-        Tables.embeddings(s, d), "vec_id", "embedding", 0, 20, 10,
-        preTokens = Some(Artifacts.corpusTokens(s, d)),
-        preDl = Some(Artifacts.corpusDl(s, d)))),
+        Artifacts.corpusTokens(s, d), Artifacts.corpusDl(s, d),
+        Tables.embeddings(s, d), "vec_id", "embedding", 0, 20, 10)),
     // SemDeDup closed to clusters: the cell-blocked cosine pair graph
-    // through the SAME label-prop CC the text dedup uses (textCol is
-    // dead weight with precomputed pairs — only the id universe reads)
+    // through the SAME label-prop CC the text dedup uses
     "q_semantic_clusters" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val pairs = semanticDedup(emb, "vec_id", "embedding", 0.35)
         .select(col("vec_id_1").as("doc_id_1"), col("vec_id_2").as("doc_id_2"))
-      TextPipeline.dedupClusters(emb, "vec_id", "embedding", 0.35,
-        precomputedPairs = Some(pairs)).orderBy("id")
+      TextPipeline.dedupClusters(emb, "vec_id", pairs).orderBy("id")
     }),
     "q_lsh_band_stats" -> ((s, d) =>
       minhashBandStats(Tables.documents(s, d), "doc_id", "text")),
@@ -2302,8 +2266,7 @@ object Similarity {
     // estimator-quality audit: signature-agreement Jaccard vs exact,
     // per verified pair — what k=16 granularity (625 bp) buys HERE
     "q_minhash_estimate" -> ((s, d) =>
-      minhashEstimate(Tables.documents(s, d), "doc_id", "text", 0.9,
-        preGroups = Some(Artifacts.minhashGroups(s, d)))),
+      minhashEstimate(Artifacts.minhashGroups(s, d), 0.9)),
     // LSH banding-miss audit vs the exact all-pairs ground truth
     // both audits re-gate the ONE memoized scored pair table; outputs
     // are spec-pinned equal to the standalone dedupEval composition
@@ -2313,9 +2276,7 @@ object Similarity {
     "q_dedup_eval_sampled" -> ((s, d) =>
       dedupEvalSampled(Tables.documents(s, d), "doc_id", "text", 0.9, 25)),
     "q_dedup_eval_sweep" -> ((s, d) =>
-      dedupEvalSweep(Tables.documents(s, d), "doc_id", "text",
-        Seq(0.8, 0.85, 0.9, 0.95),
-        precomputedScores = Some(Artifacts.evalScored(s, d)))),
+      dedupEvalSweep(Artifacts.evalScored(s, d), Seq(0.8, 0.85, 0.9, 0.95))),
     // the high-recall parameter point under the SAME hash oracle: k=32
     // (prefix-stable family extension) in 4 bands × 8 rows lifts the
     // S-curve knee (P(candidate) at J=0.9 goes 0.68 → 0.89) at 2× the
@@ -2323,9 +2284,8 @@ object Similarity {
     // not just spec-pinned (the oracle generates its 32 sig components
     // from the same constants the codegen bakes in)
     "q_dedup_minhash_k32" -> ((s, d) =>
-      minhashNearDup(Tables.documents(s, d), "doc_id", "text", 0.9,
-        k = 32, bands = 4, rowsPerBand = 8,
-        preGroups = Some(Artifacts.minhashGroups(s, d)))),
+      minhashNearDup(Artifacts.minhashGroups(s, d), 0.9,
+        k = 32, bands = 4, rowsPerBand = 8)),
     // delta-vs-index dedup: which "new" docs (id ≥ 250) near-dup the
     // standing reference corpus (id < 250) — the rolling-build shape
     "q_dedup_incremental" -> ((s, d) => {
@@ -2365,8 +2325,7 @@ object Similarity {
     // cell — the production configuration, not a stress cap (the
     // property test pins cap=2 for exhaustive branch coverage).
     "q_dedup_minhash_salted" -> ((s, d) =>
-      minhashNearDup(Tables.documents(s, d), "doc_id", "text", 0.9, saltCap = Some(1024),
-        preGroups = Some(Artifacts.minhashGroups(s, d)))),
+      minhashNearDup(Artifacts.minhashGroups(s, d), 0.9, saltCap = Some(1024))),
     "q_dedup_simhash" -> ((s, d) => simhashNearDup(Tables.documents(s, d), "doc_id", "text", 3)),
     "q_dedup_embedding" -> ((s, d) =>
       embeddingNearDup(withPlantedNearDups(Tables.embeddings(s, d)), "vec_id", "embedding", 0.99)),
@@ -2401,19 +2360,18 @@ object Similarity {
     // (sharedPqCodebook — value-identical to the inline train each
     // query re-ran; the r8 shared-artifact discipline, the same fold
     // q_pq_encode and q_ann_ivfpq_trained already consume)
-    "q_ann_pq" -> ((s, d) => annPq(Tables.embeddings(s, d), "vec_id", "embedding", 0, 10,
-      preCb = Some(sharedPqCodebook(s, d)))),
+    "q_ann_pq" -> ((s, d) =>
+      annPq(Tables.embeddings(s, d), "vec_id", "embedding", sharedPqCodebook(s, d), 0, 10)),
     "q_ann_pq_rerank" -> ((s, d) =>
-      annPqRerank(Tables.embeddings(s, d), "vec_id", "embedding", 0, 50, 10,
-        preCb = Some(sharedPqCodebook(s, d)))),
+      annPqRerank(Tables.embeddings(s, d), "vec_id", "embedding", sharedPqCodebook(s, d),
+        0, 50, 10)),
     "q_ann_ivfpq" -> ((s, d) =>
-      annIvfPq(Tables.embeddings(s, d), "vec_id", "embedding", 0, 10,
-        preCb = Some(sharedPqCodebook(s, d)))),
+      annIvfPq(Tables.embeddings(s, d), "vec_id", "embedding", sharedPqCodebook(s, d), 0, 10)),
     "q_mmr_diverse" -> ((s, d) =>
       mmrSelect(Tables.embeddings(s, d), "vec_id", "embedding", 0, 20, 5)),
     "q_ann_ivfpq_rerank" -> ((s, d) =>
-      annIvfPqRerank(Tables.embeddings(s, d), "vec_id", "embedding", 0, 30, 10,
-        preCb = Some(sharedPqCodebook(s, d)))),
+      annIvfPqRerank(Tables.embeddings(s, d), "vec_id", "embedding", sharedPqCodebook(s, d),
+        0, 30, 10)),
     // the fully-trained stack: kmeans coarse codebook (2 Lloyd rounds —
     // the oracle's CTE namespace caps it) + trained PQ sub-codebooks
     // serving probe → ADC → exact rerank; the PQ sub-codebooks fold the
@@ -2452,9 +2410,8 @@ object Similarity {
     // in_bm25 column was constant-false (r9 all-constant-column audit)
     "q_hybrid_rerank" -> ((s, d) =>
       hybridRerank(Tables.documents(s, d), "doc_id", "text",
-        Tables.embeddings(s, d), "vec_id", "embedding", 0, 20, 25,
-        preTokens = Some(Artifacts.corpusTokens(s, d)),
-        preDl = Some(Artifacts.corpusDl(s, d)))),
+        Artifacts.corpusTokens(s, d), Artifacts.corpusDl(s, d),
+        Tables.embeddings(s, d), "vec_id", "embedding", 0, 20, 25)),
   )
 
   /** The synthetic embeddings are near-orthogonal (max pair cosine ~0.5 at

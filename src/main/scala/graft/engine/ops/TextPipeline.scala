@@ -113,13 +113,8 @@ object TextPipeline {
     * training pipeline actually runs — pair detection is the mechanism,
     * corpus shrinkage is the product. One anti-join against the pair
     * list's greater-id side; no all-pairs stage anywhere. */
-  def dedupCorpus(documents: DataFrame, idCol: String, textCol: String,
-                  threshold: Double, pairs: Option[DataFrame] = None): DataFrame = {
-    val removed = pairs
-      .getOrElse(Similarity.minhashNearDup(documents, idCol, textCol, threshold, ordered = false))
-      .select(col("doc_id_2").as(idCol))
-    documents.join(removed.distinct(), Seq(idCol), "left_anti")
-  }
+  def dedupCorpus(documents: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    documents.join(pairs.select(col("doc_id_2").as(idCol)).distinct(), Seq(idCol), "left_anti")
 
   /** Near-dup CLUSTERS via iterative min-label propagation (connected
     * components over the verified pair graph) — the transitive closure
@@ -140,24 +135,21 @@ object TextPipeline {
     * a context checkpoint dir set, every round is a reliable
     * checkpoint, so a lost executor mid-fixpoint recomputes one round.
     *
-    * Nothing the call caches outlives it: the pair frame it persists
-    * for the gate count is unpersisted once the labels are
-    * materialized, so a repeat call on the same pairs recomputes
-    * instead of reading the first call's blocks. */
-  def dedupClusters(documents: DataFrame, idCol: String, textCol: String,
-                    threshold: Double, maxIters: Int = 20,
-                    precomputedPairs: Option[DataFrame] = None): DataFrame = {
+    * `pairs` is the verified `(doc_id_1, doc_id_2)` graph over
+    * `documents`' ids (e.g. [[Similarity.minhashNearDup]]). Nothing the
+    * call caches outlives it: the pair frame it persists for the gate
+    * count is unpersisted once the labels are materialized, so a repeat
+    * call on the same pairs recomputes instead of reading the first
+    * call's blocks. */
+  def dedupClusters(documents: DataFrame, idCol: String, pairs: DataFrame,
+                    maxIters: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    // pairs computed here are consumed twice (the gate count and the
-    // chosen path): materialize them once, released at the end
-    val rawPairs = precomputedPairs.getOrElse(Lineage.truncate(
-      Similarity.minhashNearDup(documents, idCol, textCol, threshold, ordered = false)))
-    val pairs = rawPairs.select(col("doc_id_1").as("a"), col("doc_id_2").as("b"))
-    // Caller-SUPPLIED pair frames are cached for the same two
-    // consumptions: an unmaterialized subtree (e.g. semanticClusters'
-    // cell-blocked cosine verify) would otherwise execute twice.
-    val cachePairs = precomputedPairs.isDefined && maxIters >= 20
-    if (cachePairs) pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = pairs.select(col("doc_id_1").as("a"), col("doc_id_2").as("b"))
+    // the gated call reads the edges twice (the gate count and the
+    // chosen path): cached for both, or an unmaterialized subtree (e.g.
+    // semanticClusters' cell-blocked cosine verify) executes twice
+    val gated = maxIters >= 20
+    if (gated) edges.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // ADAPTIVE PATH SELECTION (r13): the iteration's input is the
       // dup-graph edge list — graph-sized, ≪ corpus. When it fits one
@@ -188,13 +180,10 @@ object TextPipeline {
       // high-diameter graph could admit a graph whose loop would
       // truncate where the fused path converges; raise maxIters with it
       // (the loop self-reports truncation under spark.graft.debug).
-      if (maxIters >= 20 && 2 * pairs.count() <= fusedMaxEdges(documents.sparkSession))
-        fusedUnionFind(documents, idCol, pairs)
-      else labelPropagation(documents, idCol, pairs, maxIters)
-    } finally {
-      if (cachePairs) pairs.unpersist()
-      if (precomputedPairs.isEmpty) Lineage.release(rawPairs)
-    }
+      if (gated && 2 * edges.count() <= fusedMaxEdges(documents.sparkSession))
+        fusedUnionFind(documents, idCol, edges)
+      else labelPropagation(documents, idCol, edges, maxIters)
+    } finally if (gated) edges.unpersist()
   }
 
   /** The one size gate of the iterative graph operators
@@ -370,18 +359,15 @@ object TextPipeline {
     * ties break on smaller id). Integer so the argmax replays exactly
     * in the DuckDB oracle.
     *
+    * `clusters` is the [[dedupClusters]] `(id, cluster)` table.
+    *
     * Scale: one id-keyed join to attach priorities, one partial+final
     * struct-max per cluster, one cluster-keyed join back — every stage
     * keys on id or cluster (the partitioning the cluster op already
     * produced); the canonical table is cluster-count-sized (≈ corpus
     * with singletons), so it joins by key, never broadcasts. */
-  def dedupCanonical(documents: DataFrame, idCol: String, textCol: String,
-                     threshold: Double, priority: Column,
-                     precomputedPairs: Option[DataFrame] = None,
-                     precomputedClusters: Option[DataFrame] = None): DataFrame = {
-    val clusters = precomputedClusters.getOrElse(
-      dedupClusters(documents, idCol, textCol, threshold,
-        precomputedPairs = precomputedPairs))
+  def dedupCanonical(documents: DataFrame, idCol: String, clusters: DataFrame,
+                     priority: Column): DataFrame = {
     val pri = clusters.join(
       documents.select(col(idCol).as("id"), priority.cast("long").as("prio")), "id")
     val canon = pri.groupBy("cluster")
@@ -403,16 +389,10 @@ object TextPipeline {
     * both policies are legitimate, this operator makes the second one
     * available (and auditable: Σ weight = |corpus|, spec-pinned).
     *
-    * Scale: ONE partial+final aggregate over the cluster table —
-    * strictly cheaper than the survivors anti-join. */
-  def dedupWeights(documents: DataFrame, idCol: String, textCol: String,
-                   threshold: Double,
-                   precomputedPairs: Option[DataFrame] = None,
-                   precomputedClusters: Option[DataFrame] = None): DataFrame =
-    precomputedClusters.getOrElse(
-        dedupClusters(documents, idCol, textCol, threshold,
-          precomputedPairs = precomputedPairs))
-      .groupBy("cluster")
+    * Scale: ONE partial+final aggregate over the [[dedupClusters]]
+    * table — strictly cheaper than the survivors anti-join. */
+  def dedupWeights(clusters: DataFrame): DataFrame =
+    clusters.groupBy("cluster")
       .agg(min("id").as("doc_id"), count(lit(1)).as("weight"))
       .select("doc_id", "cluster", "weight")
       .orderBy("doc_id")
@@ -436,14 +416,10 @@ object TextPipeline {
     * is at most one row per cluster after the member join's
     * cluster-keyed shuffle), then ONE partial+final aggregate per
     * cluster. Singletons carry no member rows and drop out — the
-    * output is non-singleton-cluster-sized. */
+    * output is non-singleton-cluster-sized. `clusters` is the
+    * [[dedupClusters]] table over `documents`. */
   def dedupClusterAudit(documents: DataFrame, idCol: String, textCol: String,
-                        threshold: Double,
-                        precomputedPairs: Option[DataFrame] = None,
-                        precomputedClusters: Option[DataFrame] = None): DataFrame = {
-    val clusters = precomputedClusters.getOrElse(
-      dedupClusters(documents, idCol, textCol, threshold,
-        precomputedPairs = precomputedPairs))
+                        clusters: DataFrame): DataFrame = {
     val sets = documents.select(col(idCol).as("id"),
       array_distinct(toks(col(textCol))).as("sh"))
     // members only: the representative's self-jaccard is 1 by identity
@@ -477,7 +453,7 @@ object TextPipeline {
     * label itself — prior labels ARE min ids, so reps are nodes),
     * translate each delta edge endpoint to its quotient node (old id →
     * its prior label, new id → itself), and run the SHARED CC fixpoint
-    * ([[dedupClusters]] with precomputed pairs) over that quotient
+    * ([[dedupClusters]]) over that quotient
     * graph only. Contraction preserves connectivity, and because prior
     * labels are component-min ids, the quotient fixpoint's min-label
     * answer IS the union corpus' min-label answer — a new doc bridging
@@ -532,8 +508,7 @@ object TextPipeline {
       .distinct()
     // quotient-sized, consumed by BOTH output arms below — materialized
     // once, so neither arm re-runs the quotient fixpoint subtree
-    val qLabels = Lineage.truncate(dedupClusters(qNodes, "id", "id", 1.0, maxIters,
-        precomputedPairs = Some(qEdges))
+    val qLabels = Lineage.truncate(dedupClusters(qNodes, "id", qEdges, maxIters)
       .select(col("id").as("qid"), col("cluster").as("qcluster")))
     Lineage.release(qEdges)
     // map back through the quotient: old rows ride their prior label
@@ -1609,15 +1584,14 @@ object TextPipeline {
     // materialize the (doc_id, mass, pkey) projection ONCE: it feeds the
     // intra-block cumsum, the block totals AND the grand total, and
     // without a checkpoint Spark re-executes the whole upstream scoring
-    // DAG per consumer (the annPq codebook lesson). 3 longs/doc — the
-    // narrowest frame in the pipeline.
-    val m = scores.crossJoin(broadcast(mn)).select(
+    // DAG per consumer. 3 longs/doc — the narrowest frame in the
+    // pipeline. Truncated, NOT persisted (r18 measured flat at 11 jobs
+    // either way, and PlanShapeSpec pins the truncated plan: the scoring
+    // DAG must not re-print per window consumer).
+    val m = Lineage.truncate(scores.crossJoin(broadcast(mn)).select(
       col(idCol).as("doc_id"),
       (col(scoreCol) - col("mn") + lit(1L)).as("mass"),
-      expr(s"${idCol} div ${pkeyWidth}").as("pkey"))
-      .localCheckpoint() // checkpoint, NOT persist (r18 measured flat at
-      // 11 jobs either way, and PlanShapeSpec pins the truncated plan:
-      // the scoring DAG must not re-print per window consumer)
+      expr(s"${idCol} div ${pkeyWidth}").as("pkey")))
     val intra = m.withColumn("intra",
       sum("mass").over(Window.partitionBy("pkey").orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
@@ -2306,7 +2280,6 @@ object TextPipeline {
                    blockCols: Seq[String], threshold: Double,
                    bandCol: Option[(String, Int)] = None,
                    saltCap: Option[Int] = None,
-                   preHashed: Boolean = false,
                    ordered: Boolean = true): DataFrame = {
     require(bandCol.isEmpty || saltCap.isEmpty,
       "ngramJaccard: saltCap is implemented for the plain block join only")
@@ -2322,14 +2295,25 @@ object TextPipeline {
     // under MinHash-LSH — but the constant per candidate is ~an order
     // smaller, which is what the 100 TB fan-out pays per pair.
     graft.engine.functions.GraftFunctions.register(documents.sparkSession)
-    // preHashed (r18): textCol ALREADY holds the sorted distinct 62-bit
-    // token-hash array (e.g. the memoized Artifacts.minhashGroups collapse) —
-    // skip the tokenize pass; everything downstream is hash-array-typed
-    // either way
     val base = documents.select(
       col(idCol).as("doc_id") +: (blockCols ++ bandCol.map(_._1)).map(col) :+
-        (if (preHashed) col(textCol)
-         else call_function("token_set_hashes62", col(textCol))).as("shingles"): _*)
+        call_function("token_set_hashes62", col(textCol)).as("shingles"): _*)
+    // persist under saltCap: the tiled join's group count and both join
+    // sides otherwise each re-run the scan→tokenize→hash pipeline
+    hashSetJaccard(
+      if (saltCap.isDefined) base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else base,
+      blockCols, threshold, bandCol, saltCap, ordered)
+  }
+
+  /** [[ngramJaccard]] over already-hashed sets: `base` carries `doc_id`,
+    * the block (and band) columns and `shingles`, a sorted distinct
+    * 62-bit token-hash array. [[Similarity.scoredEvalTable]]'s truth
+    * pass hands it the identical-token-set collapse. */
+  private[ops] def hashSetJaccard(base: DataFrame, blockCols: Seq[String], threshold: Double,
+                                  bandCol: Option[(String, Int)], saltCap: Option[Int],
+                                  ordered: Boolean): DataFrame = {
+    graft.engine.functions.GraftFunctions.register(base.sparkSession)
     val (a, b) = bandCol match {
       case None =>
         (base.select(col("doc_id").as("doc_id_1") +: blockCols.map(col) :+
@@ -2376,16 +2360,8 @@ object TextPipeline {
         a.join(b, joinCols)
           .filter(col("doc_id_1") < col("doc_id_2") && sizeBound)
       case Some(cap) =>
-        // persist: the group count and both join sides otherwise each
-        // re-run the scan→tokenize→hash pipeline. Skipped when the
-        // caller supplied pre-hashed sets (r18 + the r17 ADVICE leak):
-        // those come from an already-persisted session memo, so the
-        // three consumers re-read that cache through a cheap projection
-        // instead of stacking a second never-unpersisted corpus cache.
-        val t = if (preHashed) base
-          else base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cnts = t.groupBy(blockCols.map(col): _*).agg(count(lit(1)).as("cnt"))
-        val grouped = t.join(broadcast(cnts), blockCols)
+        val cnts = base.groupBy(blockCols.map(col): _*).agg(count(lit(1)).as("cnt"))
+        val grouped = base.join(broadcast(cnts), blockCols)
           .withColumn("ns",
             greatest(floor((col("cnt") + (cap - 1)) / lit(cap.toDouble)), lit(1L))
               .cast("int"))
@@ -2595,49 +2571,33 @@ object TextPipeline {
     * non-query terms never shuffle); doc lengths are one doc-keyed agg
     * reused across queries; the scalar totals broadcast. Top-k is a
     * per-query window over the scored candidates — candidates, not the
-    * corpus. */
-  def bm25TopK(documents: DataFrame, idCol: String, textCol: String,
+    * corpus. `tokens` and `dl` are the corpus [[docTokens]] and
+    * [[docLengths]]. */
+  def bm25TopK(tokens: DataFrame, dl: DataFrame,
                queries: DataFrame, qIdCol: String, qTextCol: String,
-               k: Int,
-               preTokens: Option[DataFrame] = None,
-               preDl: Option[DataFrame] = None,
-               preTotals: Option[DataFrame] = None): DataFrame = {
+               k: Int): DataFrame = {
     val qterms = queries
       .select(col(qIdCol).as("query_id"), explode(toks(col(qTextCol))).as("token"))
       .filter(length(col("token")) > 0)
       .distinct()
-    bm25ScoreTerms(documents, idCol, textCol, qterms, k,
-      preTokens = preTokens, preDl = preDl, preTotals = preTotals)
+    val totals = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl"))
+    bm25RankPairs(bm25ScoredPairs(tokens, dl, totals, qterms), k, ordered = true)
   }
 
-  /** The BM25 scoring core behind [[bm25TopK]] and [[queryExpansion]]:
-    * takes an already-materialized DISTINCT `(query_id, token)` term
-    * table instead of query text, so a caller can score a term set it
-    * BUILT (e.g. originals ∪ feedback expansions) under the identical
-    * arithmetic. Split, not changed: [[bm25TopK]] composes exactly the
-    * old body, and the oracle hash pins that. */
-  private def bm25ScoreTerms(documents: DataFrame, idCol: String, textCol: String,
-                             qterms: DataFrame, k: Int,
-                             preTokens: Option[DataFrame] = None,
-                             preDl: Option[DataFrame] = None,
-                             preTotals: Option[DataFrame] = None,
-                             ordered: Boolean = true): DataFrame = {
-    // preTokens: an already-materialized (doc_id, token) stream — the
-    // PRF loop passes one checkpointed tokenization shared by both
-    // retrieval stages and the expansion miner (3 corpus re-tokenizes
-    // otherwise; the dsirSample materialize-once lesson)
-    val tokens = preTokens.getOrElse(documents
+  /** The corpus `(doc_id, token)` stream under the house tokenization
+    * rule (`toks` + empty-token filter) — the posting-list input of
+    * every BM25-family operator; in production, the materialized
+    * inverted-index input. */
+  def docTokens(documents: DataFrame, idCol: String, textCol: String): DataFrame =
+    documents
       .select(col(idCol).as("doc_id"), explode(toks(col(textCol))).as("token"))
-      .filter(length(col("token")) > 0))
-    // preDl: the (doc_id, dl) length table — a full token-stream groupBy,
-    // the heaviest shuffle in the scorer after the posting join itself.
-    // The PRF loop calls this scorer TWICE over one corpus; hoisting dl
-    // beside the shared tokenization halves that cost (r8 verdict #3).
-    val dl = preDl.getOrElse(tokens.groupBy("doc_id").agg(count(lit(1)).as("dl")))
-    val totals = preTotals.getOrElse(
-      dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl")))
-    bm25RankPairs(bm25ScoredPairs(tokens, dl, totals, qterms), k, ordered)
-  }
+      .filter(length(col("token")) > 0)
+
+  /** The `(doc_id, dl)` length table over a [[docTokens]] stream — a
+    * full token-stream groupBy, the heaviest shuffle in the BM25 scorer
+    * after the posting join itself. */
+  def docLengths(tokens: DataFrame): DataFrame =
+    tokens.groupBy("doc_id").agg(count(lit(1)).as("dl"))
 
   /** Per-(query, doc, term) BM25 partial scores — the ADDITIVE half of
     * the scorer. BM25 is a sum of independent per-term contributions
@@ -2684,18 +2644,13 @@ object TextPipeline {
     * set — proximity costs one more narrow gram pass over the corpus,
     * not a positional index. */
   def bm25Proximity(documents: DataFrame, idCol: String, textCol: String,
+                    tokens: DataFrame, dl: DataFrame,
                     queries: DataFrame, qIdCol: String, qTextCol: String,
-                    k: Int, phraseBonus: Long = 500000L,
-                    preTokens: Option[DataFrame] = None,
-                    preDl: Option[DataFrame] = None): DataFrame = {
+                    k: Int, phraseBonus: Long = 500000L): DataFrame = {
     graft.engine.functions.GraftFunctions.register(documents.sparkSession)
     val qterms = queries
       .select(col(qIdCol).as("query_id"), explode(toks(col(qTextCol))).as("token"))
       .filter(length(col("token")) > 0).distinct()
-    val tokens = preTokens.getOrElse(documents
-      .select(col(idCol).as("doc_id"), explode(toks(col(textCol))).as("token"))
-      .filter(length(col("token")) > 0))
-    val dl = preDl.getOrElse(tokens.groupBy("doc_id").agg(count(lit(1)).as("dl")))
     val totals = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl"))
     val base = bm25ScoredPairs(tokens, dl, totals, qterms)
       .groupBy("query_id", "doc_id")
@@ -2741,7 +2696,7 @@ object TextPipeline {
     * q_tfidf integer idf rule, so a term frequent in the feedback docs
     * but rare corpus-wide expands the query, and a stopword doesn't);
     * (3) re-retrieve with originals ∪ expansions under the IDENTICAL
-    * BM25 arithmetic ([[bm25ScoreTerms]] — shared core, zero drift).
+    * BM25 arithmetic ([[bm25ScoredPairs]] — shared core, zero drift).
     * Recovers relevant docs that share no literal term with the query
     * (vocabulary-mismatch recall, the thing plain keyword search can't
     * do without embeddings).
@@ -2754,25 +2709,14 @@ object TextPipeline {
     * expansion cut is a per-query window over that bounded set. Stage 3
     * is stage 1 with a slightly wider term list. Nothing re-shuffles
     * the corpus outside the two posting joins. */
-  def queryExpansion(documents: DataFrame, idCol: String, textCol: String,
+  def queryExpansion(tokens: DataFrame, dl: DataFrame,
                      queries: DataFrame, qIdCol: String, qTextCol: String,
-                     nFeedback: Int, mExpand: Int, k: Int,
-                     preTokens: Option[DataFrame] = None,
-                     preDl: Option[DataFrame] = None): DataFrame = {
-    // ONE tokenization pass feeds both retrieval stages, the feedback
-    // tf and the corpus df — 2 narrow columns per token, the hottest
-    // shared frame in the loop. A caller-supplied pre-materialized
-    // stream (the Artifacts.corpusTokens artifact) skips both the pass and
-    // its eager checkpoint.
-    val tokens = preTokens.getOrElse(documents
-      .select(col(idCol).as("doc_id"), explode(toks(col(textCol))).as("token"))
-      .filter(length(col("token")) > 0)
-      .localCheckpoint())
-    // ONE doc-length aggregate serves both BM25 passes (it is doc-keyed
-    // — one row per doc, tiny — but BUILDING it is a full token-stream
-    // shuffle, so computing it twice was the loop's top waste)
-    val dl = preDl.getOrElse(
-      tokens.groupBy("doc_id").agg(count(lit(1)).as("dl")).localCheckpoint())
+                     nFeedback: Int, mExpand: Int, k: Int): DataFrame = {
+    // ONE token stream ([[docTokens]]) feeds both retrieval stages, the
+    // feedback tf and the corpus df, and ONE length table
+    // ([[docLengths]]) both BM25 passes: the hottest shared frames in
+    // the loop, so a caller passes them materialized (the bindings pass
+    // the corpus_tokens / corpus_dl artifacts)
     val qterms = queries
       .select(col(qIdCol).as("query_id"), explode(toks(col(qTextCol))).as("token"))
       .filter(length(col("token")) > 0)
@@ -3199,10 +3143,10 @@ object TextPipeline {
     * head / middle / tail TERCILE of its stratum's (language's) LM
     * fluency distribution — the published CCNet recipe's quality
     * partition, whose head+middle slice is the conventional keep set.
-    * Scores come from [[lmScoreBackoff]] against an offline table
-    * (default: trained on the even-id half, the [[curationPipeline]]
-    * sampling discipline); docs without trigrams have no score and
-    * drop (the lmScore discipline).
+    * Scores come from [[lmScoreBackoff]] against an offline table `lm`
+    * ([[lmTableBackoff]], e.g. trained on the even-id half — the
+    * [[curationPipeline]] sampling discipline); docs without trigrams
+    * have no score and drop (the lmScore discipline).
     *
     * Exact-rank thresholds WITHOUT a global sort: lm_score is a
     * bounded-range integer, so per stratum the score HISTOGRAM is
@@ -3215,11 +3159,8 @@ object TextPipeline {
     * that survives a single 100 TB 'en' stratum, where an ntile window
     * would be a one-reducer cliff. */
   def perplexityBuckets(documents: DataFrame, idCol: String, textCol: String,
-                        strataCol: String,
-                        lm: Option[DataFrame] = None): DataFrame = {
-    val table = lm.getOrElse(
-      lmTableBackoff(documents.filter(col(idCol) % 2 === 0), idCol, textCol))
-    val scored = lmScoreBackoff(documents, idCol, textCol, table, ordered = false)
+                        strataCol: String, lm: DataFrame): DataFrame = {
+    val scored = lmScoreBackoff(documents, idCol, textCol, lm, ordered = false)
       .select("doc_id", "lm_score")
     // materialize the scored frame once (r17): it feeds BOTH the
     // tercile-threshold aggregate and the final bucket join — without
@@ -3257,11 +3198,8 @@ object TextPipeline {
     * train-offline split). Same arithmetic as [[perplexityBuckets]]'s
     * internal cuts by construction. */
   def perplexityThresholds(documents: DataFrame, idCol: String, textCol: String,
-                           strataCol: String,
-                           lm: Option[DataFrame] = None): DataFrame = {
-    val table = lm.getOrElse(
-      lmTableBackoff(documents.filter(col(idCol) % 2 === 0), idCol, textCol))
-    val scored = lmScoreBackoff(documents, idCol, textCol, table, ordered = false)
+                           strataCol: String, lm: DataFrame): DataFrame = {
+    val scored = lmScoreBackoff(documents, idCol, textCol, lm, ordered = false)
       .select("doc_id", "lm_score")
     val wl = documents.select(col(idCol).as("doc_id"), col(strataCol).as("stratum"))
       .join(scored, Seq("doc_id"))
@@ -3359,17 +3297,12 @@ object TextPipeline {
     * split rule as [[assignSplits]], so the audit judges exactly the
     * splits the router would produce. One narrow projection + filter
     * over the pair graph — free on top of the dedup pipeline. */
-  def splitLeakage(documents: DataFrame, idCol: String, textCol: String,
-                   threshold: Double,
-                   precomputedPairs: Option[DataFrame] = None): DataFrame = {
-    val pairs = precomputedPairs.getOrElse(
-      Similarity.minhashNearDup(documents, idCol, textCol, threshold, ordered = false))
+  def splitLeakage(pairs: DataFrame): DataFrame =
     pairs.select(col("doc_id_1"), col("doc_id_2"), col("jaccard"),
         splitOf(col("doc_id_1")).as("split_1"),
         splitOf(col("doc_id_2")).as("split_2"))
       .filter(col("split_1") =!= col("split_2"))
       .orderBy("doc_id_1", "doc_id_2")
-  }
 
   /** Near-dup graph degree histogram: how many documents have k verified
     * near-duplicate partners — the corpus-health statistic that decides
@@ -3450,9 +3383,10 @@ object TextPipeline {
     * near-cliques, and the uniform 10⁶ start IS the exact fixpoint of
     * any regular component, so typical corpora converge in a handful
     * of rounds — only irregular template stars pay the 60-round tail,
-    * and they pay it on the quotient. */
-  def pairGraphPagerankConverged(pairs: DataFrame, maxIters: Int = 120,
-      preTwins: Option[(DataFrame, DataFrame, DataFrame)] = None): DataFrame = {
+    * and they pay it on the quotient. `twins` is the
+    * [[twinDecomposition]] of the pair graph. */
+  def pairGraphPagerankConverged(twins: (DataFrame, DataFrame, DataFrame),
+      maxIters: Int = 120): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     // The iteration runs on the TWIN QUOTIENT (the pairGraphTriangles
     // collapse): nodes with equal closed neighborhoods are swapped by a
@@ -3471,7 +3405,7 @@ object TextPipeline {
     // 25.6 s to 0.85 s; measured here 22.9 s → ~1 s at sf0.1. The
     // class's internal (csize−1)-clique contribution rides the SAME
     // join as a quotient self-edge.
-    val (member, csz, cedges) = preTwins.getOrElse(twinDecomposition(pairs))
+    val (member, csz, cedges) = twins
     val csym = cedges.unionAll(cedges.select(col("y").as("x"), col("x").as("y")))
     val nbrSz = csym.join(csz.withColumnRenamed("cls", "y"), "y")
       .groupBy("x").agg(sum("csize").as("nbr_sz"))
@@ -3489,8 +3423,8 @@ object TextPipeline {
       // round stays ONE join + ONE aggregate (csize=1 ⇒ weight 0, row
       // kept so isolated classes still emit their base-rate row). The
       // divisor is floored at 1: a deg-0 class cannot arise from
-      // twinDecomposition (every graph node has a neighbor), but a
-      // caller-supplied preTwins containing one would otherwise turn
+      // twinDecomposition (every graph node has a neighbor), but twin
+      // tables built some other way and containing one would turn
       // 0·(score·85 DIV 0) into NULL and poison the sum — with the
       // floor, weight 0 × anything = 0 and the base-rate row survives
       .unionAll(cls.select(col("cls").as("x"), col("cls").as("y"),
@@ -3516,8 +3450,8 @@ object TextPipeline {
       // graph and compares maps, and the oracle pins the values either
       // way. No driver collect on either path.
       val scores =
-        if (e.count() <= fusedMaxEdges(pairs.sparkSession)) { // also materializes the persisted list
-          import pairs.sparkSession.implicits._
+        if (e.count() <= fusedMaxEdges(e.sparkSession)) { // also materializes the persisted list
+          import e.sparkSession.implicits._
           val cap = maxIters
           // materialized while the persisted edge list is live: the
           // finally-block unpersist below runs before the CALLER's first
@@ -3658,7 +3592,7 @@ object TextPipeline {
     * (every table feeds 3–4 consumers, and re-execution would redo the
     * collect_set neighborhood aggregation — measured 3× the cost).
     *
-    * `nbhd` and `cedges` are EAGER localCheckpoints, deliberately: the
+    * `nbhd` and `cedges` are EAGER [[Lineage.truncate]]s, deliberately: the
     * checkpoints truncate LINEAGE, and here the lineage is what kills —
     * every consumer splices `cedges` 4–5× (csym = 2×, wedge self-join =
     * 4×) and each cedges copy contains member twice, each member nbhd
@@ -3672,30 +3606,28 @@ object TextPipeline {
     * for free, csz's first consumer pays one tiny agg over the nbhd
     * blocks) — which cuts the construction from 4 eager scheduler-floor
     * actions to 2. */
-  private[ops] def twinDecomposition(pairs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+  private[engine] def twinDecomposition(pairs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel
     val und = pairs.select(col("doc_id_1").as("u"), col("doc_id_2").as("v"))
       .filter(col("u") =!= col("v"))
     val sym = und.unionAll(und.select(col("v").as("u"), col("u").as("v"))).distinct()
-    val nbhd = sym.groupBy("u")
+    val nbhd = Lineage.truncate(sym.groupBy("u")
       .agg(array_sort(collect_set(col("v"))).as("nb"))
-      .select(col("u"), array_sort(array_union(col("nb"), array(col("u")))).as("cnb"))
-      .localCheckpoint()
+      .select(col("u"), array_sort(array_union(col("nb"), array(col("u")))).as("cnb")))
     val classes = nbhd.groupBy("cnb")
       .agg(min("u").as("cls"), count(lit(1)).as("csize"))
     val member = nbhd.join(classes, "cnb").select(col("u"), col("cls"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val csz = classes.select(col("cls"), col("csize"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val cedges = sym
+    val cedges = Lineage.truncate(sym
       .join(member.withColumnRenamed("u", "uu").withColumnRenamed("cls", "ca"),
         col("u") === col("uu"))
       .join(member.withColumnRenamed("u", "vv").withColumnRenamed("cls", "cb"),
         col("v") === col("vv"))
       .filter(col("ca") =!= col("cb"))
       .select(least(col("ca"), col("cb")).as("x"), greatest(col("ca"), col("cb")).as("y"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     (member, csz, cedges)
   }
 
@@ -3728,10 +3660,10 @@ object TextPipeline {
     * Output is n rows either way; property-tested equal to the naive
     * enumeration on random graphs, and the DuckDB oracle still
     * enumerates naively (fixture scale), so the closed form is
-    * value-verified end to end. */
-  def pairGraphTriangles(pairs: DataFrame,
-      preTwins: Option[(DataFrame, DataFrame, DataFrame)] = None): DataFrame = {
-    val (member, csz, cedges) = preTwins.getOrElse(twinDecomposition(pairs))
+    * value-verified end to end. `twins` is the [[twinDecomposition]] of
+    * the pair graph. */
+  def pairGraphTriangles(twins: (DataFrame, DataFrame, DataFrame)): DataFrame = {
+    val (member, csz, cedges) = twins
     // size-annotate the quotient edges ONCE (r18): the neighbor
     // aggregate and all three corners of the triangle enumeration need
     // class sizes, and annotating the edge list up front replaces the
@@ -3795,10 +3727,10 @@ object TextPipeline {
     *
     * Scale shape: wedges enumerate on the QUOTIENT graph only (the
     * twin collapse shrinks it to ~#families); the closing-edge
-    * anti-join is class-keyed; nothing touches documents. */
-  def missingLinks(pairs: DataFrame, minCommon: Int = 2,
-      preTwins: Option[(DataFrame, DataFrame, DataFrame)] = None): DataFrame = {
-    val (_, csz, cedges) = preTwins.getOrElse(twinDecomposition(pairs))
+    * anti-join is class-keyed; nothing touches documents. `twins` is the
+    * [[twinDecomposition]] of the pair graph. */
+  def missingLinks(twins: (DataFrame, DataFrame, DataFrame), minCommon: Int = 2): DataFrame = {
+    val (_, csz, cedges) = twins
     val csym = cedges.unionAll(cedges.select(col("y").as("x"), col("x").as("y")))
     // open wedges x–m–z (x < z), closing edge absent
     val wedges = csym.as("e1")
@@ -3837,22 +3769,19 @@ object TextPipeline {
     * re-verify scheduler budgets by `verify_pairs`, expansion is
     * class-size × class-size per queued entry (fixture: 6.4k
     * verifications off a 4.4k-entry queue), never corpus-shaped; token
-    * sets come from one corpus projection joined candidate-side, and
-    * the verify is the native zero-allocation merge walk. */
-  def missingLinksVerify(documents: DataFrame, idCol: String, textCol: String,
+    * sets are joined candidate-side, and the verify is the native
+    * zero-allocation merge walk.
+    *
+    * `sets` holds every document's `(doc_id, hsh)` token-hash set
+    * ([[Similarity.tokenSets]], or the members of the
+    * [[Similarity.tokenSetGroups]] collapse exploded), `twins` the
+    * [[twinDecomposition]] of the pair graph. */
+  def missingLinksVerify(sets: DataFrame, twins: (DataFrame, DataFrame, DataFrame),
       threshold: Double, minCommon: Int = 2,
-      precomputedPairs: Option[DataFrame] = None,
-      preTwins: Option[(DataFrame, DataFrame, DataFrame)] = None,
-      excludePairs: Option[DataFrame] = None,
-      preGroups: Option[DataFrame] = None): DataFrame = {
-    val spark = documents.sparkSession
-    graft.engine.functions.GraftFunctions.register(spark)
-    val pairs = precomputedPairs.getOrElse(
-      Similarity.minhashNearDup(documents, idCol, textCol, threshold, ordered = false))
-    val twins = preTwins.getOrElse(twinDecomposition(pairs))
-    val (member, _, _) = twins
-    val queue = missingLinks(pairs, minCommon, Some(twins))
-    val (_, csz, _) = twins
+      excludePairs: Option[DataFrame] = None): DataFrame = {
+    graft.engine.functions.GraftFunctions.register(sets.sparkSession)
+    val (member, csz, _) = twins
+    val queue = missingLinks(twins, minCommon)
     // PRE-EXPANSION family prune over the refuted ledger (r14, the
     // ADVICE finding that refuted pairs re-paid the member expansion
     // every batch): map the DISTINCT refuted doc pairs through the
@@ -3898,18 +3827,8 @@ object TextPipeline {
     val cand = excludePairs.fold(expanded)(x =>
       expanded.join(x.select(col("doc_id_1"), col("doc_id_2")),
         Seq("doc_id_1", "doc_id_2"), "left_anti"))
-    // token sets for the exact verify: with preGroups (the memoized
-    // identical-token-set collapse, r18) each doc's hash set comes from
-    // exploding the group members over the CACHED (members, hsh) table
-    // — exactly the projection below by construction (the groups ARE
-    // groupBy(token_set_hashes62) over this corpus), minus the corpus
-    // re-tokenize that each of the two join sides used to pay
-    val docs = preGroups.fold(
-      documents.select(col(idCol).as("doc_id"),
-        call_function("token_set_hashes62", col(textCol)).as("hsh")))(g =>
-      g.select(explode(col("members")).as("doc_id"), col("hsh")))
-    val sa = docs.select(col("doc_id").as("doc_id_1"), col("hsh").as("sa"))
-    val sb = docs.select(col("doc_id").as("doc_id_2"), col("hsh").as("sb"))
+    val sa = sets.select(col("doc_id").as("doc_id_1"), col("hsh").as("sa"))
+    val sb = sets.select(col("doc_id").as("doc_id_2"), col("hsh").as("sb"))
     cand.join(sa, "doc_id_1").join(sb, "doc_id_2")
       .withColumn("jaccard", Similarity.setJaccard(col("sa"), col("sb")))
       .select(col("doc_id_1"), col("doc_id_2"), col("jaccard"),
@@ -3921,27 +3840,17 @@ object TextPipeline {
     * [[missingLinksVerify]]'s confirmed edges join the pair graph and
     * the shared CC fixpoint re-runs over the widened edge list — a
     * banding-missed bridge between two families now collapses them
-    * into one cluster, which greedy banding alone could never do. */
-  def missingLinksRepair(documents: DataFrame, idCol: String, textCol: String,
-      threshold: Double, minCommon: Int = 2,
-      precomputedPairs: Option[DataFrame] = None,
-      preTwins: Option[(DataFrame, DataFrame, DataFrame)] = None,
-      preVerified: Option[DataFrame] = None): DataFrame = {
-    val pairs = precomputedPairs.getOrElse(
-      Similarity.minhashNearDup(documents, idCol, textCol, threshold, ordered = false))
-    // in production the verify queue's audited output is a PERSISTED
-    // artifact (the re-verify scheduler writes it); the repair consumes
-    // it rather than re-running the exact-verify pass — `preVerified`
-    // is that seam, and the bench binds it to the memoized artifact so
-    // the repair's measured cost is the CC re-run it actually owns
-    val confirmed = preVerified
-      .getOrElse(missingLinksVerify(documents, idCol, textCol, threshold,
-        minCommon, Some(pairs), preTwins))
-      .filter(col("confirmed"))
+    * into one cluster, which greedy banding alone could never do.
+    *
+    * `verified` is the audited queue over `pairs`: in production a
+    * PERSISTED artifact the re-verify scheduler writes, so the repair
+    * owns only the CC re-run. */
+  def missingLinksRepair(documents: DataFrame, idCol: String,
+      pairs: DataFrame, verified: DataFrame): DataFrame = {
+    val confirmed = verified.filter(col("confirmed"))
       .select(col("doc_id_1"), col("doc_id_2"))
-    dedupClusters(documents, idCol, textCol, threshold,
-      precomputedPairs = Some(
-        pairs.select(col("doc_id_1"), col("doc_id_2")).unionAll(confirmed)))
+    dedupClusters(documents, idCol,
+      pairs.select(col("doc_id_1"), col("doc_id_2")).unionAll(confirmed))
   }
 
   /** The naive oriented wedge enumeration — retained as the reference
@@ -4452,7 +4361,7 @@ object TextPipeline {
     *      the aggregate Gopher stats miss;
     *   3. LM-FLUENCY GATE (optional, `lmFloor`): drop docs whose
     *      back-off LM score ([[lmScoreBackoff]] against a table trained
-    *      on a corpus SAMPLE — default the even-id half) falls below
+    *      on a corpus SAMPLE — the even-id half) falls below
     *      the floor — the KenLM-style perplexity filter, run after the
     *      cheap rule gates and before the expensive cross-doc stages
     *      (the production C4/Gopher → KenLM order);
@@ -4463,7 +4372,9 @@ object TextPipeline {
     *   4. DECONTAMINATION: drop docs sharing ≥ 2 distinct 3-token
     *      shingles with any benchmark doc;
     *   5. NEAR-DUP DEDUP: drop every doc near-duplicating a smaller-id
-    *      doc (MinHash-LSH pair graph over the SAME corpus slice);
+    *      doc (`pairs`: the MinHash-LSH pair graph over the SAME corpus
+    *      slice — pairs over a superset would remove docs whose
+    *      duplicate lies outside the slice);
     *   6. SPLIT MANIFEST: deterministic 80/10/10 assignment, reported
     *      per (split, dims) with doc/token counts.
     *
@@ -4477,11 +4388,9 @@ object TextPipeline {
     * (train on a sample, score everything). */
   def curationPipeline(corpus: DataFrame, idCol: String, textCol: String,
                        benchmark: DataFrame, dims: Seq[String],
-                       threshold: Double = 0.9,
-                       pairs: Option[DataFrame] = None,
+                       pairs: DataFrame,
                        repCaps: Option[(Long, Long)] = None,
                        lmFloor: Option[Long] = None,
-                       lm: Option[DataFrame] = None,
                        classifier: Option[DataFrame] = None): DataFrame = {
     // API contract: the benchmark frame exposes the SAME idCol/textCol
     // names as the corpus (the decon stage addresses both sides by them)
@@ -4510,11 +4419,8 @@ object TextPipeline {
       // THREE times (one per back-off level), so the whole train subtree
       // — three gram counts + two joins — spliced 3× into the plan;
       // cached it is Zipf-bounded (model-sized) and read once per level.
-      // A caller-supplied table (the offline-artifact path) is already
-      // materialized and is not re-cached here.
-      val table = lm.getOrElse(
-        lmTableBackoff(corpus.filter(col(idCol) % 2 === 0), idCol, textCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val table = lmTableBackoff(corpus.filter(col(idCol) % 2 === 0), idCol, textCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       lmScoreBackoff(corpus, idCol, textCol, table, ordered = false)
         .filter(col("lm_score") >= floorV).select("doc_id")
     }
@@ -4529,13 +4435,7 @@ object TextPipeline {
     val contaminated = contamination(corpus, idCol, textCol,
         benchmark, idCol, textCol)
       .select("doc_id").distinct()
-    // like dedupCorpus/dedupClusters, accept the verified pair graph as
-    // an input: a real pipeline computes it once and fans it out, and
-    // the graph here must cover exactly THIS corpus slice (pairs over a
-    // superset would remove docs whose duplicate lies outside the slice)
-    val removed = pairs
-      .getOrElse(Similarity.minhashNearDup(corpus, idCol, textCol, threshold, ordered = false))
-      .select(col("doc_id_2").as("doc_id")).distinct()
+    val removed = pairs.select(col("doc_id_2").as("doc_id")).distinct()
     val base = corpus
       .filter(repKeepExpr.foldLeft(gopherKeep)(_ && _))
       .select(col(idCol).as("doc_id") +:
@@ -4633,12 +4533,10 @@ object TextPipeline {
     // cross-split near-dup leakage over the SAME shared pair graph +
     // the q_split bucket rule — fully oracled
     "q_split_leakage" -> ((s, d) =>
-      splitLeakage(Tables.documents(s, d), "doc_id", "text", 0.9,
-        precomputedPairs = Some(Artifacts.pairsFull(s, d)))),
+      splitLeakage(Artifacts.pairsFull(s, d))),
     // fully oracled: anti-join over the shared pair CTEs replayed in DuckDB
     "q_dedup_survivors" -> ((s, d) =>
-      dedupCorpus(Tables.documents(s, d), "doc_id", "text", 0.9,
-        pairs = Some(Artifacts.pairsFull(s, d)))
+      dedupCorpus(Tables.documents(s, d), "doc_id", Artifacts.pairsFull(s, d))
         .select("doc_id", "lang", "n_chars").orderBy("doc_id")),
     "q_sample_stratified" -> ((s, d) =>
       stratifiedSample(Tables.documents(s, d), "doc_id", "lang",
@@ -4675,17 +4573,13 @@ object TextPipeline {
     // then document length, then smallest id — the integer packing
     // keeps the argmax exact in both engines
     "q_dedup_canonical" -> ((s, d) =>
-      dedupCanonical(Tables.documents(s, d), "doc_id", "text", 0.9,
-        expr("(CASE WHEN source IN ('src0', 'src1') THEN 2 ELSE 1 END) * 1000000 + n_chars"),
-        precomputedClusters = Some(Artifacts.clusters(s, d)))),
-    "q_dedup_weights" -> ((s, d) =>
-      dedupWeights(Tables.documents(s, d), "doc_id", "text", 0.9,
-        precomputedClusters = Some(Artifacts.clusters(s, d)))),
+      dedupCanonical(Tables.documents(s, d), "doc_id", Artifacts.clusters(s, d),
+        expr("(CASE WHEN source IN ('src0', 'src1') THEN 2 ELSE 1 END) * 1000000 + n_chars"))),
+    "q_dedup_weights" -> ((s, d) => dedupWeights(Artifacts.clusters(s, d))),
     // transitive-chain audit over the SAME memoized cluster fixpoint
     // the survivors/canonical/weights family consumes
     "q_dedup_cluster_audit" -> ((s, d) =>
-      dedupClusterAudit(Tables.documents(s, d), "doc_id", "text", 0.9,
-        precomputedClusters = Some(Artifacts.clusters(s, d)))),
+      dedupClusterAudit(Tables.documents(s, d), "doc_id", "text", Artifacts.clusters(s, d))),
     "q_span_pairs" -> ((s, d) => spanPairs(Tables.documents(s, d), "doc_id", "text")),
     "q_sample_fixed" -> ((s, d) =>
       fixedSample(Tables.documents(s, d), "doc_id", 100, Seq("lang", "source"))),
@@ -4795,28 +4689,23 @@ object TextPipeline {
     // three fixed keyword queries over the corpus vocabulary; k=10
     "q_bm25_topk" -> ((s, d) => {
       import s.implicits._
-      bm25TopK(Tables.documents(s, d), "doc_id", "text",
-        bm25FixtureQueries.toDF("query_id", "qtext"), "query_id", "qtext", 10,
-        preTokens = Some(Artifacts.corpusTokens(s, d)),
-        preDl = Some(Artifacts.corpusDl(s, d)))
+      bm25TopK(Artifacts.corpusTokens(s, d), Artifacts.corpusDl(s, d),
+        bm25FixtureQueries.toDF("query_id", "qtext"), "query_id", "qtext", 10)
     }),
     // the phrase-boosted ranking over the same fixture queries
     "q_bm25_proximity" -> ((s, d) => {
       import s.implicits._
       bm25Proximity(Tables.documents(s, d), "doc_id", "text",
-        bm25FixtureQueries.toDF("query_id", "qtext"), "query_id", "qtext", 10,
-        preTokens = Some(Artifacts.corpusTokens(s, d)),
-        preDl = Some(Artifacts.corpusDl(s, d)))
+        Artifacts.corpusTokens(s, d), Artifacts.corpusDl(s, d),
+        bm25FixtureQueries.toDF("query_id", "qtext"), "query_id", "qtext", 10)
     }),
     // PRF loop over the same fixture queries: 5 feedback docs, 3
     // expansion terms per query, final top-10
     "q_query_expansion" -> ((s, d) => {
       import s.implicits._
-      queryExpansion(Tables.documents(s, d), "doc_id", "text",
+      queryExpansion(Artifacts.corpusTokens(s, d), Artifacts.corpusDl(s, d),
         bm25FixtureQueries.toDF("query_id", "qtext"), "query_id", "qtext",
-        nFeedback = 5, mExpand = 3, k = 10,
-        preTokens = Some(Artifacts.corpusTokens(s, d)),
-        preDl = Some(Artifacts.corpusDl(s, d)))
+        nFeedback = 5, mExpand = 3, k = 10)
     }),
     "q_bpe_step" -> ((s, d) => bpeStep(Tables.documents(s, d), "doc_id", "text")),
     // learn and apply are two faces of ONE memoized merge chain (r17)
@@ -4841,15 +4730,15 @@ object TextPipeline {
         Artifacts.lmTableBackoff(s, d))),
     "q_dedup_degree" -> ((s, d) => dedupDegreeHistogram(Artifacts.pairsFull(s, d))),
     "q_graph_pagerank" -> ((s, d) =>
-      pairGraphPagerankConverged(Artifacts.pairsFull(s, d), preTwins = Some(Artifacts.twins(s, d)))),
+      pairGraphPagerankConverged(Artifacts.twins(s, d))),
     // triangles per node over the same memoized pair graph: template
     // families (cliquish) vs drift chains (triangle-free)
     "q_graph_triangles" -> ((s, d) =>
-      pairGraphTriangles(Artifacts.pairsFull(s, d), preTwins = Some(Artifacts.twins(s, d)))),
+      pairGraphTriangles(Artifacts.twins(s, d))),
     // the transitivity re-verify queue: family pairs with common
     // neighbors but no edge — where banding most plausibly missed
     "q_missing_links" -> ((s, d) =>
-      missingLinks(Artifacts.pairsFull(s, d), preTwins = Some(Artifacts.twins(s, d)))),
+      missingLinks(Artifacts.twins(s, d))),
     // the queue's CONSUMER (r10 verdict #3): exact-Jaccard verification
     // of every queued family pair's doc pairs — confirmed rows are
     // banding-missed true pairs
@@ -4859,10 +4748,8 @@ object TextPipeline {
     // the verify output arrives as the persisted artifact it is in
     // production, so this measures the repair's own CC re-run
     "q_missing_links_repair" -> ((s, d) =>
-      missingLinksRepair(Tables.documents(s, d), "doc_id", "text", 0.9,
-        precomputedPairs = Some(Artifacts.pairsFull(s, d)),
-        preTwins = Some(Artifacts.twins(s, d)),
-        preVerified = Some(Artifacts.verifiedLinks(s, d))).orderBy("id")),
+      missingLinksRepair(Tables.documents(s, d), "doc_id", Artifacts.pairsFull(s, d),
+        Artifacts.verifiedLinks(s, d)).orderBy("id")),
     // corpus-version diff: v1 lacks every 13th doc (added later), v2
     // lacks every 7th (removed) and rewrites every 11th (changed) —
     // all four statuses fire on real rows
@@ -4910,13 +4797,12 @@ object TextPipeline {
     // entities are the product)
     "q_fuzzy_clusters" -> ((s, d) => {
       val cust = Tables.customer(s, d)
-      // dedupClusters caches these caller-supplied pairs for its gate
-      // count and its CC pass and releases them after; the graph fits
-      // the fused union-find task at every oracle scale
+      // dedupClusters caches these pairs for its gate count and its CC
+      // pass and releases them after; the graph fits the fused
+      // union-find task at every oracle scale
       val pairs = fuzzyMatch(cust, "c_custkey", "c_name", Seq("c_nationkey"), 1)
         .select(col("id_1").as("doc_id_1"), col("id_2").as("doc_id_2"))
-      dedupClusters(cust, "c_custkey", "c_name", 0.9,
-        precomputedPairs = Some(pairs)).orderBy("id")
+      dedupClusters(cust, "c_custkey", pairs).orderBy("id")
     }),
     // same corpus/benchmark split as q_contamination: docs < 10 are the
     // held-out eval set, the rest is the trainable corpus
@@ -4938,8 +4824,7 @@ object TextPipeline {
       // all consume the persisted frame.
       val corpus = Artifacts.reflGe10(s, d)
       curationPipeline(corpus, "doc_id", "text",
-        docs.filter(col("doc_id") < 10), Seq("lang"),
-        pairs = Some(Artifacts.pairsGe10(s, d)),
+        docs.filter(col("doc_id") < 10), Seq("lang"), Artifacts.pairsGe10(s, d),
         repCaps = Some((1000L, 500L)), lmFloor = Some(32000L))
     }),
     "q_winnow" -> ((s, d) =>
@@ -4948,7 +4833,7 @@ object TextPipeline {
       winnowPairs(Tables.documents(s, d), "doc_id", "text")),
     "q_ppl_buckets" -> ((s, d) =>
       perplexityBuckets(Tables.documents(s, d), "doc_id", "text", "lang",
-        lm = Some(Artifacts.lmTableBackoff(s, d)))),
+        Artifacts.lmTableBackoff(s, d))),
     // vocabSize 16 < the fixture's 31-token vocabulary: the rare tail
     // is genuinely out-of-vocabulary, so the OOV branch carries real
     // rows (at the 256 default every token was in-vocab and n_oov was 0

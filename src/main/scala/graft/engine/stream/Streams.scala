@@ -1672,7 +1672,7 @@ object Streams {
         case _ =>
           // cold start: the whole table is the insert set
           graft.engine.ops.TextPipeline
-            .dedupClusters(b, idCol, textCol, threshold)
+            .dedupClusters(b, idCol, nearDupPairs(b, idCol, textCol, threshold))
       })
       upsertSink.foreach(sink => sink(changed, v))
       standingF.append(changed, v)
@@ -1692,11 +1692,16 @@ object Streams {
       .minhashNearDupIncremental(corpus, b, idCol, textCol, threshold, ordered = false)
       .select(least(col("doc_id_ref"), col("doc_id_new")).as("doc_id_1"),
               greatest(col("doc_id_ref"), col("doc_id_new")).as("doc_id_2"))
-    val newNew = graft.engine.ops.Similarity
-      .minhashNearDup(b, idCol, textCol, threshold, ordered = false)
-      .select(col("doc_id_1"), col("doc_id_2"))
-    newOld.unionAll(newNew)
+    newOld.unionAll(nearDupPairs(b, idCol, textCol, threshold))
   }
+
+  /** Within-batch banding: the `(doc_id_1, doc_id_2)` near-dup pairs of
+    * `b` alone. */
+  private def nearDupPairs(b: DataFrame, idCol: String, textCol: String,
+                           threshold: Double): DataFrame =
+    graft.engine.ops.Similarity.minhashNearDup(
+        graft.engine.ops.Similarity.tokenSetGroups(b, idCol, textCol), threshold, ordered = false)
+      .select(col("doc_id_1"), col("doc_id_2"))
 
   /** Drives [[ClusterMaintenance]] from a document stream; the
     * checkpointed batchId rides along as the upsert version (monotone
@@ -1855,8 +1860,8 @@ object Streams {
     * list, so each micro-batch can run the batch operators verbatim
     * (the one-implementation rule): banded probe → wedge queue over the
     * twin-collapsed standing graph → exact verify of only the queued
-    * families (`TextPipeline.missingLinksVerify` with the standing
-    * edges as `precomputedPairs`) → confirmed banding-missed TRUE pairs
+    * families (`TextPipeline.missingLinksVerify` over the standing
+    * edges' twin decomposition) → confirmed banding-missed TRUE pairs
     * union into the edge list and ride the SAME `ccIncremental` delta
     * as the batch's own probe edges.
     *
@@ -1932,9 +1937,7 @@ object Streams {
       // (the pre-r14 shape recomputed the banded probe for ccIncremental)
       val batchEdges0 = (corpusF.get match {
         case Some(ref) => probeEdges(ref, b, idCol, textCol, threshold)
-        case None => graft.engine.ops.Similarity
-          .minhashNearDup(b, idCol, textCol, threshold, ordered = false)
-          .select(col("doc_id_1"), col("doc_id_2"))
+        case None => nearDupPairs(b, idCol, textCol, threshold)
       }).distinct()
       val batchEdgesCp = ckpt(batchEdges0)
       val corpusNext = corpusF.append(b)
@@ -1953,9 +1956,10 @@ object Streams {
       // pair of a family in one pass) and anti-joins the residue before
       // the exact verify, so nothing is ever audited twice and a
       // settled family never re-pays its expansion
-      val verified = ckpt(graft.engine.ops.TextPipeline
-        .missingLinksVerify(corpusNext, idCol, textCol, threshold, minCommon,
-          precomputedPairs = Some(graphEdges), excludePairs = refutedF.get))
+      val verified = ckpt(graft.engine.ops.TextPipeline.missingLinksVerify(
+        graft.engine.ops.Similarity.tokenSets(corpusNext, idCol, textCol),
+        graft.engine.ops.TextPipeline.twinDecomposition(graphEdges),
+        threshold, minCommon, excludePairs = refutedF.get))
       // each store's delta gets its OWN checkpoint (r15, the Lineage.release
       // ownership contract): `verified` used to back the audit, refuted
       // AND confirmed-edge parts through one shared RDD, so no store
@@ -1994,8 +1998,7 @@ object Streams {
             .ccIncremental(prior, deltaForCc, b.select(col(idCol).as("id")))
             .filter(col("changed")).select("id", "cluster")
         case None =>
-          graft.engine.ops.TextPipeline.dedupClusters(corpusNext, idCol, textCol,
-            threshold, precomputedPairs = Some(edgesNext))
+          graft.engine.ops.TextPipeline.dedupClusters(corpusNext, idCol, edgesNext)
       })
       standingF.append(changed, v)
       // per-batch temps: every consumer above materialized eagerly, so

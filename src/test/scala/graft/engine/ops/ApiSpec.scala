@@ -26,7 +26,7 @@ class ApiSpec extends SparkSuite {
       (200L, "epsilon delta gamma beta alpha"), // same token set, shuffled
       (300L, "totally different words here now")
     ).toDF("pk", "content")
-    val pairs = Similarity.minhashNearDup(df, "pk", "content", 0.9)
+    val pairs = Similarity.minhashNearDup(Similarity.tokenSetGroups(df, "pk", "content"), 0.9)
       .as[(Long, Long, Double)].collect().toSeq
     assert(pairs == Seq((100L, 200L, 1.0)), s"got $pairs")
   }
@@ -70,11 +70,12 @@ class ApiSpec extends SparkSuite {
       .as[(Long, Double)].collect().toSeq
     assert(ann.nonEmpty && ann.head == (1L, 1.0), s"got $ann")
 
-    val pairs = Similarity.minhashNearDup(corpus, "cid", "body", 0.9, ordered = false)
+    val pairs = Similarity.minhashNearDup(Similarity.tokenSetGroups(corpus, "cid", "body"), 0.9,
+      ordered = false)
     // the benchmark side shares the corpus column names (API contract)
     val manifest = TextPipeline.curationPipeline(corpus, "cid", "body",
       bench.select(col("bid").as("cid"), col("btxt").as("body")),
-      Seq.empty, pairs = Some(pairs))
+      Seq.empty, pairs)
     assert(manifest.columns.contains("split"))
   }
 
@@ -198,8 +199,9 @@ class ApiSpec extends SparkSuite {
     val trained = Similarity.pqTrain(vecs, "point", "features")
     assert(trained.groupBy("subspace", "dim").agg(sum("n").as("t"))
       .filter(col("t") =!= 32L).count() == 0L)
-    assert(Similarity.annPq(vecs, "point", "features", 0L, 5).count() == 5L)
-    assert(Similarity.annIvfPq(vecs, "point", "features", 0L, 3).count() > 0L)
+    val cb = Similarity.pqCodebook(vecs, "point", "features")
+    assert(Similarity.annPq(vecs, "point", "features", cb, 0L, 5).count() == 5L)
+    assert(Similarity.annIvfPq(vecs, "point", "features", cb, 0L, 3).count() > 0L)
     assert(Similarity.kmeansTrain(vecs, "point", "features", 2).count() > 0L)
     assert(Similarity.mmrSelect(vecs, "point", "features", 0L, 8, 3).count() == 3L)
     // tokenize + packGlobal + back-off LM on renamed text frames
@@ -214,7 +216,8 @@ class ApiSpec extends SparkSuite {
     // doc 1 has only 2 non-empty tokens → no trigrams → drops (the
     // lmScore discipline); doc 2 scores
     assert(TextPipeline.lmScoreBackoff(docs, "k", "body", lm).count() == 1L)
-    assert(TextPipeline.splitLeakage(docs, "k", "body", 0.9).count() == 0L)
+    assert(TextPipeline.splitLeakage(Similarity.minhashNearDup(
+      Similarity.tokenSetGroups(docs, "k", "body"), 0.9, ordered = false)).count() == 0L)
   }
 
   test("mixtureWeights on renamed columns: ppm sums to ~1e6") {
@@ -238,17 +241,20 @@ class ApiSpec extends SparkSuite {
     assert(TextPipeline.winnowIndex(docs, "k", "body")
       .columns.toSeq == Seq("fp", "doc_id_ref", "fps_ref"))
     // perplexity terciles on (k, tongue, body): every scored doc tagged
-    val pb = TextPipeline.perplexityBuckets(docs, "k", "body", "tongue")
+    val lm = TextPipeline.lmTableBackoff(docs.filter(col("k") % 2 === 0), "k", "body")
+    val pb = TextPipeline.perplexityBuckets(docs, "k", "body", "tongue", lm)
     assert(pb.columns.toSeq == Seq("doc_id", "tongue", "lm_score", "ppl_bucket"))
     assert(pb.filter(col("ppl_bucket").isin("head", "middle", "tail")).count() == pb.count())
-    assert(TextPipeline.perplexityThresholds(docs, "k", "body", "tongue")
+    assert(TextPipeline.perplexityThresholds(docs, "k", "body", "tongue", lm)
       .columns.toSeq == Seq("tongue", "t_head", "t_mid"))
     // vocab coverage: in-vocab-only doc scores 0 bp
     val vc = TextPipeline.vocabCoverage(docs, "k", "body", vocabSize = 64)
       .as[(Long, Long, Long, Long)].collect().map(r => r._1 -> r._4).toMap
     assert(vc.values.forall(bp => bp >= 0 && bp <= 10000), s"got $vc")
     // canonical selection on renamed columns with a length-based policy
-    val canon = TextPipeline.dedupCanonical(docs, "k", "body", 0.9, length(col("body")))
+    val clusters = TextPipeline.dedupClusters(docs, "k", Similarity.minhashNearDup(
+      Similarity.tokenSetGroups(docs, "k", "body"), 0.9, ordered = false))
+    val canon = TextPipeline.dedupCanonical(docs, "k", clusters, length(col("body")))
     assert(canon.columns.toSeq == Seq("doc_id", "cluster", "canonical_id", "is_canonical"))
     assert(canon.filter(col("is_canonical")).count() ==
       canon.select("cluster").distinct().count())

@@ -61,9 +61,9 @@ class MinHashParamSpec extends SparkSuite {
   private def recallAt(n: Int, m: Int, s: Int,
                        k: Int, bands: Int, rows: Int): Double = {
     val j = s.toDouble / (2 * m - s)
-    val pairs = Similarity.minhashNearDup(plantedPairs(n, m, s), "doc_id", "text",
-        threshold = j - 0.0001, ordered = false, k = k,
-        bands = bands, rowsPerBand = rows)
+    val pairs = Similarity.minhashNearDup(
+        Similarity.tokenSetGroups(plantedPairs(n, m, s), "doc_id", "text"),
+        threshold = j - 0.0001, ordered = false, k = k, bands = bands, rowsPerBand = rows)
       .select("doc_id_1", "doc_id_2").as[(Long, Long)].collect()
     // precision is exact by construction: only planted pairs can verify
     assert(pairs.forall { case (a, b) => b == a + 1 && a % 2 == 0 },
@@ -105,9 +105,10 @@ class MinHashParamSpec extends SparkSuite {
 
   test("defaults are the hardwired behavior: explicit (16, 2, 8) equals the default call") {
     val docs = graft.engine.io.Tables.documents(spark, sfDir)
-    val d = Similarity.minhashNearDup(docs, "doc_id", "text", 0.9, ordered = false)
+    val groups = Similarity.tokenSetGroups(docs, "doc_id", "text")
+    val d = Similarity.minhashNearDup(groups, 0.9, ordered = false)
       .select("doc_id_1", "doc_id_2").as[(Long, Long)].collect().toSet
-    val e = Similarity.minhashNearDup(docs, "doc_id", "text", 0.9, ordered = false,
+    val e = Similarity.minhashNearDup(groups, 0.9, ordered = false,
         k = 16, bands = 2, rowsPerBand = 8)
       .select("doc_id_1", "doc_id_2").as[(Long, Long)].collect().toSet
     assert(d == e && d.nonEmpty)
@@ -118,10 +119,11 @@ class MinHashParamSpec extends SparkSuite {
   // entry point would silently band a different slice of the signature
   test("bands x rowsPerBand must equal k") {
     val docs = plantedPairs(2, 19, 18)
+    val groups = Similarity.tokenSetGroups(docs, "doc_id", "text")
     val entryPoints = Seq[(String, () => Any)](
-      "minhashNearDup" -> (() => Similarity.minhashNearDup(docs, "doc_id", "text",
+      "minhashNearDup" -> (() => Similarity.minhashNearDup(groups,
         0.5, k = 16, bands = 3, rowsPerBand = 8)),
-      "minhashEstimate" -> (() => Similarity.minhashEstimate(docs, "doc_id", "text",
+      "minhashEstimate" -> (() => Similarity.minhashEstimate(groups,
         0.5, k = 16, bands = 3, rowsPerBand = 8)),
       "minhashBandedIndex" -> (() => Similarity.minhashBandedIndex(docs, "doc_id", "text",
         k = 16, bands = 3, rowsPerBand = 8)),

@@ -38,7 +38,8 @@ class PipelineSpec extends SparkSuite {
     val contaminated = TextPipeline.contamination(corpus, "doc_id", "text",
         bench, "doc_id", "text")
       .select("doc_id").as[Long].collect().toSet
-    val removed = Similarity.minhashNearDup(corpus, "doc_id", "text", 0.9, ordered = false)
+    val removed = Similarity.minhashNearDup(
+        Similarity.tokenSetGroups(corpus, "doc_id", "text"), 0.9, ordered = false)
       .select("doc_id_2").as[Long].collect().toSet
     val expectedIds = (keep & repKeep & lmKeep) -- contaminated -- removed
     // the manifest's doc total must equal the surviving id set exactly
@@ -101,7 +102,8 @@ class PipelineSpec extends SparkSuite {
     assert(nLang <= nGated)
 
     // 3. near-dup removal at cluster granularity: keep each cluster's rep
-    val clusters = TextPipeline.dedupClusters(inLang, "doc_id", "text", 0.9)
+    val clusters = TextPipeline.dedupClusters(inLang, "doc_id", Similarity.minhashNearDup(
+      Similarity.tokenSetGroups(inLang, "doc_id", "text"), 0.9, ordered = false))
     val reps = clusters.filter(col("id") === col("cluster"))
       .select(col("id").as("doc_id"))
     val deduped = inLang.join(reps, "doc_id")
@@ -152,14 +154,17 @@ class PipelineSpec extends SparkSuite {
     // minimal pipeline (no rep/LM gates) so the expected id set is
     // recomputable: (gopher-keep ∩ clf-keep) − contaminated − removed
     val manifest = TextPipeline.curationPipeline(corpus, "doc_id", "text",
-      bench, Seq("lang"), classifier = Some(model))
+      bench, Seq("lang"), Similarity.minhashNearDup(
+        Similarity.tokenSetGroups(corpus, "doc_id", "text"), 0.9, ordered = false),
+      classifier = Some(model))
     val keep = TextPipeline.gopherRules(corpus, "doc_id", "text")
       .filter(col("keep")).select("doc_id").as[Long].collect().toSet
     val clfKeep = TextPipeline.qualityClassifierScore(corpus, "doc_id", "text", model, ordered = false)
       .filter(col("pred_keep")).select("doc_id").as[Long].collect().toSet
     val contaminated = TextPipeline.contamination(corpus, "doc_id", "text",
         bench, "doc_id", "text").select("doc_id").as[Long].collect().toSet
-    val removed = Similarity.minhashNearDup(corpus, "doc_id", "text", 0.9, ordered = false)
+    val removed = Similarity.minhashNearDup(
+        Similarity.tokenSetGroups(corpus, "doc_id", "text"), 0.9, ordered = false)
       .select("doc_id_2").as[Long].collect().toSet
     val expected = (keep & clfKeep) -- contaminated -- removed
     val nDocs = manifest.agg(sum("n_docs")).head().getLong(0)
@@ -247,8 +252,9 @@ class PipelineSpec extends SparkSuite {
     val s2 = s1.join(
       TextPipeline.exactDedup(s1, "doc_id", "text").select("doc_id"),
       Seq("doc_id"), "left_semi")
-    val basePairs = Similarity
-      .minhashNearDup(Tables.documents(spark, sfDir), "doc_id", "text", 0.9, ordered = false)
+    val basePairs = Similarity.minhashNearDup(
+      Similarity.tokenSetGroups(Tables.documents(spark, sfDir), "doc_id", "text"), 0.9,
+      ordered = false)
     // r17 (ADVICE): tier 3 removes only along pairs whose min-id
     // REPRESENTATIVE survived tiers 1-2 — the base graph restricted to
     // survivors equals re-running band+verify on the survivor corpus

@@ -299,9 +299,9 @@ class PropertySpec extends SparkSuite {
       val pairs = edges.toDF("doc_id_1", "doc_id_2")
       val docs = edges.flatMap(e => Seq(e._1, e._2)).distinct
         .map(id => (id, s"tok$id")).toDF("doc_id", "text")
-      def cc() = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9,
-        precomputedPairs = Some(pairs)).as[(Long, Long)].collect().toMap
-      def pr() = TextPipeline.pairGraphPagerankConverged(pairs)
+      def cc() = TextPipeline.dedupClusters(docs, "doc_id", pairs)
+        .as[(Long, Long)].collect().toMap
+      def pr() = TextPipeline.pairGraphPagerankConverged(TextPipeline.twinDecomposition(pairs))
         .as[(Long, Long)].collect().toMap
       val ccFused = cc(); val prFused = pr()
       spark.conf.set("spark.graft.localMaxEdges", "0")
@@ -396,7 +396,7 @@ class PropertySpec extends SparkSuite {
   test("pairGraphTriangles: twin-collapse closed form equals naive enumeration (8 iters)") {
     check("triangles", 8)(Prop.forAll(randomEdges) { edges =>
       val pairs = edges.toDF("doc_id_1", "doc_id_2")
-      val fast = TextPipeline.pairGraphTriangles(pairs)
+      val fast = TextPipeline.pairGraphTriangles(TextPipeline.twinDecomposition(pairs))
         .as[(Long, Long)].collect().toSet
       val slow = TextPipeline.pairGraphTrianglesNaive(pairs)
         .as[(Long, Long)].collect().toSet

@@ -150,7 +150,9 @@ class TextSimilaritySpec extends SparkSuite {
       (3L, "dog bird bird bird"))               // no cat
       .toDF("doc_id", "text")
     val qs = Seq((7L, "cat")).toDF("query_id", "qtext")
-    val got = TextPipeline.bm25TopK(docs, "doc_id", "text", qs, "query_id", "qtext", 10)
+    val tokens = TextPipeline.docTokens(docs, "doc_id", "text")
+    val got = TextPipeline.bm25TopK(tokens, TextPipeline.docLengths(tokens),
+        qs, "query_id", "qtext", 10)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     // only docs containing a query term are candidates; the short doc's
     // single occurrence outranks the long doc's two (b=0.75 length
@@ -296,8 +298,8 @@ class TextSimilaritySpec extends SparkSuite {
     // the fused gate so the distributed loop itself runs
     val chain = Seq((1L, "x"), (2L, "x"), (3L, "x")).toDF("doc_id", "text")
     val chainPairs = Seq((1L, 2L, 1.0), (2L, 3L, 1.0)).toDF("doc_id_1", "doc_id_2", "jaccard")
-    val lpc = forcedDistributed(TextPipeline.dedupClusters(chain, "doc_id", "text", 0.9,
-      precomputedPairs = Some(chainPairs))).as[(Long, Long)].collect().sorted.toSeq
+    val lpc = forcedDistributed(TextPipeline.dedupClusters(chain, "doc_id", chainPairs))
+      .as[(Long, Long)].collect().sorted.toSeq
     assert(lpc == Seq((1L, 1L), (2L, 1L), (3L, 1L)), s"lp=$lpc")
   }
 
@@ -375,7 +377,8 @@ class TextSimilaritySpec extends SparkSuite {
 
   test("perplexityBuckets: tercile verdicts match a per-stratum sort-based recomputation") {
     val docs = graft.engine.io.Tables.documents(spark, sfDir)
-    val got = TextPipeline.perplexityBuckets(docs, "doc_id", "text", "lang")
+    val got = TextPipeline.perplexityBuckets(docs, "doc_id", "text", "lang",
+        TextPipeline.lmTableBackoff(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text"))
       .as[(Long, String, Long, String)].collect()
     assert(got.nonEmpty)
     got.groupBy(_._2).foreach { case (lang, rows) =>
@@ -465,9 +468,10 @@ class TextSimilaritySpec extends SparkSuite {
     val docs = graft.engine.io.Tables.documents(spark, sfDir)
     // cap=2 is deliberately brutal: every bucket of ≥3 members splits,
     // exercising cross-cell, diagonal-cell, and s=1 branches at once
-    val base = Similarity.minhashNearDup(docs, "doc_id", "text", 0.9)
+    val groups = Similarity.tokenSetGroups(docs, "doc_id", "text")
+    val base = Similarity.minhashNearDup(groups, 0.9)
       .as[(Long, Long, Double)].collect().toSet
-    val salted = Similarity.minhashNearDup(docs, "doc_id", "text", 0.9, saltCap = Some(2))
+    val salted = Similarity.minhashNearDup(groups, 0.9, saltCap = Some(2))
       .as[(Long, Long, Double)].collect().toSet
     assert(salted == base,
       s"salt changed the pair set: +${salted -- base} -${base -- salted}")
@@ -493,7 +497,7 @@ class TextSimilaritySpec extends SparkSuite {
     assert(iSalted == iBase && iBase.nonEmpty,
       s"incremental salt changed the pair set: +${iSalted -- iBase} -${iBase -- iSalted}")
     // the fallback is strictly opt-in: the default plan carries no salt stage
-    val p = Similarity.minhashNearDup(docs, "doc_id", "text", 0.9)
+    val p = Similarity.minhashNearDup(groups, 0.9)
       .queryExecution.executedPlan.toString
     assert(!p.contains("salt_lo"), "salt stage must not appear unless enabled")
   }
@@ -510,7 +514,8 @@ class TextSimilaritySpec extends SparkSuite {
   test("annPq ranks a planted near-copy of the query first under integer ADC") {
     val planted = Similarity.withPlantedNearDups(
       graft.engine.io.Tables.embeddings(spark, sfDir))
-    val top = Similarity.annPq(planted, "vec_id", "embedding", 0L, 5)
+    val top = Similarity.annPq(planted, "vec_id", "embedding",
+        Similarity.pqCodebook(planted, "vec_id", "embedding"), 0L, 5)
       .as[(Long, Long)].collect().toSeq
     assert(top.head._1 == 1000000L,
       s"the near-identical copy of vec 0 must minimize the ADC distance: $top")
@@ -538,9 +543,10 @@ class TextSimilaritySpec extends SparkSuite {
 
   test("annIvfPq: cell pruning never changes a survivor's ADC distance; hits live in probed cells") {
     val emb = graft.engine.io.Tables.embeddings(spark, sfDir)
-    val full = Similarity.annPq(emb, "vec_id", "embedding", 0L, 1000000)
+    val cb = Similarity.pqCodebook(emb, "vec_id", "embedding")
+    val full = Similarity.annPq(emb, "vec_id", "embedding", cb, 0L, 1000000)
       .as[(Long, Long)].collect().toMap
-    val ivfpq = Similarity.annIvfPq(emb, "vec_id", "embedding", 0L, 10)
+    val ivfpq = Similarity.annIvfPq(emb, "vec_id", "embedding", cb, 0L, 10)
       .as[(Long, Long)].collect().toSeq
     assert(ivfpq.nonEmpty)
     // ADC is per-vector: the probe prunes candidates, never rescores them
@@ -873,8 +879,8 @@ class TextSimilaritySpec extends SparkSuite {
       (4L, "lone doc far from everything")
     ).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_id_1", "doc_id_2")
-    val got = TextPipeline.dedupClusterAudit(docs, "doc_id", "text", 0.8,
-        precomputedPairs = Some(pairs))
+    val got = TextPipeline.dedupClusterAudit(docs, "doc_id", "text",
+        TextPipeline.dedupClusters(docs, "doc_id", pairs))
       .as[(Long, Long, Long, Long)].collect().toSeq
     // min = ⌊5e6/15⌋ = 333333; mean = ⌊(818181 + 333333)/2⌋ = 575757;
     // the singleton never emits
@@ -1215,7 +1221,8 @@ class TextSimilaritySpec extends SparkSuite {
       (12L, "p q r s t u v w x z"),                // 12 vs 10: 9/11 = 0.82 < 0.9 → separate
       (20L, "solo doc nothing else")
     ).toDF("doc_id", "text")
-    val clusters = graft.engine.ops.TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9)
+    val clusters = TextPipeline.dedupClusters(docs, "doc_id", Similarity.minhashNearDup(
+        Similarity.tokenSetGroups(docs, "doc_id", "text"), 0.9, ordered = false))
       .as[(Long, Long)].collect().toMap
     assert(clusters(1L) == 1L && clusters(2L) == 1L)
     assert(clusters(10L) == 10L && clusters(11L) == 10L)
@@ -1237,14 +1244,20 @@ class TextSimilaritySpec extends SparkSuite {
 
   test("a context checkpoint dir makes the CC and PageRank rounds reliable checkpoints; results unchanged") {
     val docs = graft.engine.io.Tables.documents(spark, sfDir)
-    val pairs = graft.engine.ops.Similarity
-      .minhashNearDup(docs, "doc_id", "text", 0.9, ordered = false)
+    val pairs = Similarity
+      .minhashNearDup(Similarity.tokenSetGroups(docs, "doc_id", "text"), 0.9, ordered = false)
       .select("doc_id_1", "doc_id_2").localCheckpoint()
-    def cc() = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9)
+    def cc() = TextPipeline.dedupClusters(docs, "doc_id", pairs)
       .as[(Long, Long)].collect().toMap
-    def pr() = TextPipeline.pairGraphPagerankConverged(pairs)
+    def pr() = TextPipeline.pairGraphPagerankConverged(TextPipeline.twinDecomposition(pairs))
       .as[(Long, Long)].collect().toMap
+    // the twin decomposition's two eager truncations follow the same policy
+    def tri() = TextPipeline.pairGraphTriangles(TextPipeline.twinDecomposition(pairs))
+      .as[(Long, Long)].collect().toMap
+    def ml() = TextPipeline.missingLinks(TextPipeline.twinDecomposition(pairs))
+      .as[(Long, Long, Long, Long)].collect().toSeq
     val (localCc, localPr) = forcedDistributed((cc(), pr()))
+    val (localTri, localMl) = (tri(), ml())
     val ckpt = new java.io.File(tmpDir("ckpt"))
     val sc = spark.sparkContext
     try {
@@ -1252,6 +1265,8 @@ class TextSimilaritySpec extends SparkSuite {
       val (reliableCc, reliablePr) = forcedDistributed((cc(), pr()))
       assert(reliableCc == localCc, "reliable-checkpoint CC must be bit-identical to local mode")
       assert(reliablePr == localPr, "reliable-checkpoint PageRank must be bit-identical to local mode")
+      assert(tri() == localTri, "reliable-checkpoint triangles must be bit-identical to local mode")
+      assert(ml() == localMl, "reliable-checkpoint missing links must be bit-identical to local mode")
       val written = org.apache.commons.io.FileUtils.listFiles(ckpt, null, true)
         .toArray(Array.empty[java.io.File]).count(_.getName.startsWith("part-"))
       assert(written > 0, s"no checkpoint files under $ckpt")
@@ -1918,9 +1933,11 @@ class TextSimilaritySpec extends SparkSuite {
       (5L, "aa bb")          // pure query-term doc
     ).toDF("doc_id", "text")
     val qs = Seq((1L, "aa bb")).toDF("query_id", "qtext")
-    val plain = TextPipeline.bm25TopK(corpus, "doc_id", "text", qs, "query_id", "qtext", 5)
+    val tokens = TextPipeline.docTokens(corpus, "doc_id", "text")
+    val dl = TextPipeline.docLengths(tokens)
+    val plain = TextPipeline.bm25TopK(tokens, dl, qs, "query_id", "qtext", 5)
       .select("doc_id").as[Long].collect().toSet
-    val expanded = TextPipeline.queryExpansion(corpus, "doc_id", "text",
+    val expanded = TextPipeline.queryExpansion(tokens, dl,
         qs, "query_id", "qtext", nFeedback = 3, mExpand = 2, k = 5)
       .select("doc_id").as[Long].collect().toSet
     assert(!plain.contains(3L), "doc 3 shares no literal query term")
@@ -1973,11 +1990,12 @@ class TextSimilaritySpec extends SparkSuite {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L),
       (10L, 11L), (10L, 12L), (11L, 12L), (20L, 21L))
       .toDF("doc_id_1", "doc_id_2")
-    val converged = TextPipeline.pairGraphPagerankConverged(pairs)
+    val converged = TextPipeline.pairGraphPagerankConverged(TextPipeline.twinDecomposition(pairs))
       .as[(Long, Long)].collect().toMap
     // ANY budget at or past the convergence round returns bit-identical
     // scores — the fixpoint is the fixpoint
-    val bigger = TextPipeline.pairGraphPagerankConverged(pairs, maxIters = 200)
+    val bigger = TextPipeline.pairGraphPagerankConverged(TextPipeline.twinDecomposition(pairs),
+        maxIters = 200)
       .as[(Long, Long)].collect().toMap
     assert(converged == bigger)
     // and it IS a fixpoint of the fixed-round form: one more round of
@@ -1996,7 +2014,8 @@ class TextSimilaritySpec extends SparkSuite {
     // the distributed path by zeroing the threshold and compare
     spark.conf.set("spark.graft.localMaxEdges", "0")
     try {
-      val distributed = TextPipeline.pairGraphPagerankConverged(pairs)
+      val distributed = TextPipeline
+        .pairGraphPagerankConverged(TextPipeline.twinDecomposition(pairs))
         .as[(Long, Long)].collect().toMap
       assert(distributed == converged,
         "adaptive path selection must not change a single score")
@@ -2024,12 +2043,11 @@ class TextSimilaritySpec extends SparkSuite {
     val pairs = Seq((1L, 2L, 0.9524), (2L, 3L, 0.9524),
       (10L, 11L, 0.9231), (11L, 12L, 0.5))
       .toDF("doc_id_1", "doc_id_2", "jaccard")
-    val verified = TextPipeline.missingLinksVerify(docs, "doc_id", "text", 0.9,
-        minCommon = 1, precomputedPairs = Some(pairs))
-      .as[(Long, Long, Double, Boolean)].collect().toSeq
+    val queue = TextPipeline.missingLinksVerify(Similarity.tokenSets(docs, "doc_id", "text"),
+        TextPipeline.twinDecomposition(pairs), 0.9, minCommon = 1)
+    val verified = queue.as[(Long, Long, Double, Boolean)].collect().toSeq
     assert(verified == Seq((1L, 3L, 0.9048, true), (10L, 12L, 0.5, false)))
-    val repaired = TextPipeline.missingLinksRepair(docs, "doc_id", "text", 0.9,
-        minCommon = 1, precomputedPairs = Some(pairs))
+    val repaired = TextPipeline.missingLinksRepair(docs, "doc_id", pairs, queue)
       .as[(Long, Long)].collect().toMap
     // A/B/C now one cluster; the refuted chain keeps its (already-
     // connected) component, singleton-free
@@ -2057,8 +2075,8 @@ class TextSimilaritySpec extends SparkSuite {
       (2L, 4L, 0.9524), (10L, 11L, 0.9231), (11L, 12L, 0.5))
       .toDF("doc_id_1", "doc_id_2", "jaccard")
     def run(ledger: Option[Seq[(Long, Long)]]) =
-      TextPipeline.missingLinksVerify(docs, "doc_id", "text", 0.9,
-          minCommon = 1, precomputedPairs = Some(pairs),
+      TextPipeline.missingLinksVerify(Similarity.tokenSets(docs, "doc_id", "text"),
+          TextPipeline.twinDecomposition(pairs), 0.9, minCommon = 1,
           excludePairs = ledger.map(_.toDF("doc_id_1", "doc_id_2")))
         .as[(Long, Long, Double, Boolean)].collect().toSeq
     assert(run(None) == Seq((1L, 3L, 0.9048, true), (3L, 4L, 0.9048, true),
@@ -2160,12 +2178,12 @@ class TextSimilaritySpec extends SparkSuite {
     // r13 adaptive path selection — both execution strategies must
     // emit the identical (id, min-component-id) table
     val docs = graft.engine.io.Tables.documents(spark, sfDir)
-    val fused = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9)
-      .as[(Long, Long)].collect().toMap
+    def clusters() = TextPipeline.dedupClusters(docs, "doc_id", Similarity.minhashNearDup(
+      Similarity.tokenSetGroups(docs, "doc_id", "text"), 0.9, ordered = false))
+    val fused = clusters().as[(Long, Long)].collect().toMap
     spark.conf.set("spark.graft.localMaxEdges", "0")
     try {
-      val distributed = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9)
-        .as[(Long, Long)].collect().toMap
+      val distributed = clusters().as[(Long, Long)].collect().toMap
       assert(distributed == fused,
         "adaptive CC path selection must not change a single label")
     } finally spark.conf.unset("spark.graft.localMaxEdges")
@@ -2173,7 +2191,7 @@ class TextSimilaritySpec extends SparkSuite {
     assert(fused.groupBy(_._2).values.map(_.size).max > 1)
   }
 
-  // dedupClusters persists a caller's pair frame for its gate count and
+  // dedupClusters persists its pair frame for its gate count and
   // ccIncremental materializes its quotient edges and labels: none of
   // it may outlive the call, or a repeat call reads the first call's
   // blocks instead of recomputing them
@@ -2182,22 +2200,22 @@ class TextSimilaritySpec extends SparkSuite {
     // a no-op filter no other test applies: a frame an earlier test left
     // cached cannot match these plans
     val docs = graft.engine.io.Tables.documents(spark, sfDir).filter(col("doc_id") =!= -11L)
-    val pairs = graft.engine.ops.Similarity
-      .minhashNearDup(docs, "doc_id", "text", 0.9, ordered = false)
+    val groups = Similarity.tokenSetGroups(docs, "doc_id", "text")
+    val pairs = Similarity.minhashNearDup(groups, 0.9, ordered = false)
       .select("doc_id_1", "doc_id_2").localCheckpoint()
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 2
-    val prior = TextPipeline.dedupClusters(
-      docs.filter(col("doc_id") < cut), "doc_id", "text", 0.9,
-      precomputedPairs =
-        Some(pairs.filter(col("doc_id_1") < cut && col("doc_id_2") < cut)))
+    val prior = TextPipeline.dedupClusters(docs.filter(col("doc_id") < cut), "doc_id",
+      pairs.filter(col("doc_id_1") < cut && col("doc_id_2") < cut))
     val delta = pairs.filter(col("doc_id_2") >= cut)
       .select(col("doc_id_1").as("a"), col("doc_id_2").as("b"))
     val newIds = docs.filter(col("doc_id") >= cut).select(col("doc_id").as("id"))
-    def clusters() =
-      TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9, precomputedPairs = Some(pairs))
+    def clusters() = TextPipeline.dedupClusters(docs, "doc_id", pairs)
     val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
       "dedupClusters fused" -> (() => clusters()),
       "dedupClusters distributed" -> (() => forcedDistributed(clusters())),
+      // un-materialized pairs, the stream's cold-start route
+      "dedupClusters lazy pairs" -> (() => TextPipeline.dedupClusters(docs, "doc_id",
+        Similarity.minhashNearDup(groups, 0.9, ordered = false))),
       "ccIncremental" -> (() => TextPipeline.ccIncremental(prior, delta, newIds)))
     calls.foreach { case (name, call) =>
       val entries0 = entries
@@ -2215,8 +2233,8 @@ class TextSimilaritySpec extends SparkSuite {
     val pathPairs = (1L to 40L).map(i => (i, i + 1)).toDF("doc_id_1", "doc_id_2")
     val sc = spark.sparkContext
     val rdds0 = sc.getPersistentRDDs.size
-    val labels = forcedDistributed(TextPipeline.dedupClusters(path, "doc_id", "text", 0.9,
-      precomputedPairs = Some(pathPairs))).as[(Long, Long)].collect()
+    val labels = forcedDistributed(TextPipeline.dedupClusters(path, "doc_id", pathPairs))
+      .as[(Long, Long)].collect()
     assert(labels.length == 41 && labels.forall(_._2 == 1L), labels.toSeq.sorted.toString)
     val grown = sc.getPersistentRDDs.size - rdds0
     assert(grown <= 1, s"$grown persistent RDDs stayed registered")
@@ -2224,22 +2242,19 @@ class TextSimilaritySpec extends SparkSuite {
 
   test("ccIncremental equals from-scratch dedupClusters on the fixture split") {
     val docs = graft.engine.io.Tables.documents(spark, sfDir)
-    val pairs = graft.engine.ops.Similarity
-      .minhashNearDup(docs, "doc_id", "text", 0.9, ordered = false)
+    val pairs = Similarity
+      .minhashNearDup(Similarity.tokenSetGroups(docs, "doc_id", "text"), 0.9, ordered = false)
       .select("doc_id_1", "doc_id_2").localCheckpoint()
     // split mid-corpus so both new-old and new-new edges exist
     val cut = docs.agg(max("doc_id")).head().getLong(0) / 2
-    val prior = TextPipeline.dedupClusters(
-      docs.filter(col("doc_id") < cut), "doc_id", "text", 0.9,
-      precomputedPairs =
-        Some(pairs.filter(col("doc_id_1") < cut && col("doc_id_2") < cut)))
+    val prior = TextPipeline.dedupClusters(docs.filter(col("doc_id") < cut), "doc_id",
+      pairs.filter(col("doc_id_1") < cut && col("doc_id_2") < cut))
     val inc = TextPipeline.ccIncremental(prior,
         pairs.filter(col("doc_id_2") >= cut)
           .select(col("doc_id_1").as("a"), col("doc_id_2").as("b")),
         docs.filter(col("doc_id") >= cut).select(col("doc_id").as("id")))
       .select("id", "cluster").as[(Long, Long)].collect().toMap
-    val scratch = TextPipeline.dedupClusters(docs, "doc_id", "text", 0.9,
-        precomputedPairs = Some(pairs))
+    val scratch = TextPipeline.dedupClusters(docs, "doc_id", pairs)
       .as[(Long, Long)].collect().toMap
     assert(inc == scratch, "incremental must equal the from-scratch fixpoint")
   }
@@ -2260,16 +2275,14 @@ class TextSimilaritySpec extends SparkSuite {
     }
   }
 
-  // r18: the shared identical-token-set collapse (Artifacts.minhashGroups) feeds
-  // minhashNearDup / minhashEstimate / the eval truth pass via preGroups.
-  // Pin every seam byte-equal to the doc-level computation — in
-  // particular the rep-level truth pass, whose member re-expansion (cross
-  // pairs carry the rep pair's jaccard, within-group pairs are exact dups
-  // at 1.0) is a real restructure, not just a cached subtree. The
+  // The eval truth pass runs at rep level over the identical-token-set
+  // collapse: its member re-expansion (cross pairs carry the rep pair's
+  // jaccard, within-group pairs are exact dups at 1.0) is a real
+  // restructure, so pin it equal to the doc-level computation. The
   // engine keeps only the rep-level pass, so the doc-level scored table
-  // is built here: exact all-pairs jaccard over the documents themselves,
-  // full-outer-joined to the LSH pairs.
-  test("preGroups seams: rep-level eval truth, near-dup and estimator ≡ doc-level") {
+  // is built here: exact all-pairs jaccard over the documents
+  // themselves, full-outer-joined to the LSH pairs.
+  test("rep-level eval truth reproduces the doc-level scored table") {
     val docs = Seq(
       (1L, "alpha beta gamma delta"),
       (2L, "beta alpha delta gamma gamma"),  // same token SET as 1 (order/multiplicity differ)
@@ -2284,7 +2297,8 @@ class TextSimilaritySpec extends SparkSuite {
       val truth = TextPipeline.ngramJaccard(d.withColumn("all_blk", lit(1)),
           "doc_id", "text", Seq("all_blk"), tMin, ordered = false)
         .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("tj"))
-      val found = Similarity.minhashNearDup(d, "doc_id", "text", tMin, ordered = false)
+      val found = Similarity.minhashNearDup(Similarity.tokenSetGroups(d, "doc_id", "text"),
+          tMin, ordered = false)
         .select(col("doc_id_1"), col("doc_id_2"), col("jaccard").as("fj"))
       truth.join(found, Seq("doc_id_1", "doc_id_2"), "full_outer").select("tj", "fj")
     }
@@ -2295,26 +2309,16 @@ class TextSimilaritySpec extends SparkSuite {
     val reference = canon(docLevel(docs, 0.2))
     // {1,2,7} within-group, 3 against each of them (J = 0.8), and {4,5}
     assert(reference.toSeq.map(_._3).sum == 7L, reference.toString)
-    assert(canon(Similarity.scoredEvalTable(docs, "doc_id", "text", 0.2)) == reference,
+    assert(canon(Similarity.scoredEvalTable(groups, 0.2)) == reference,
       "rep-level truth expansion must reproduce the doc-level scored table")
-    assert(canon(Similarity.scoredEvalTable(docs, "doc_id", "text", 0.2,
-      preGroups = Some(groups))) == reference,
-      "caller-supplied groups must reproduce the doc-level scored table")
-    val nd0 = Similarity.minhashNearDup(docs, "doc_id", "text", 0.2).collect().toSeq
-    val nd1 = Similarity.minhashNearDup(docs, "doc_id", "text", 0.2,
-      preGroups = Some(groups)).collect().toSeq
-    assert(nd0.nonEmpty && nd1 == nd0)
+    assert(Similarity.minhashNearDup(groups, 0.2).collect().nonEmpty)
     // estimator emits only cross-rep banding pairs (no within-group rows),
     // so its leg — and a second scored-table leg — run on the sf corpus,
     // where the planted near-dups guarantee band collisions
     val corpus = graft.engine.io.Tables.documents(spark, sfDir)
     val cGroups = Similarity.tokenSetGroups(corpus, "doc_id", "text")
-    val me0 = Similarity.minhashEstimate(corpus, "doc_id", "text", 0.9).collect().toSeq
-    val me1 = Similarity.minhashEstimate(corpus, "doc_id", "text", 0.9,
-      preGroups = Some(cGroups)).collect().toSeq
-    assert(me0.nonEmpty && me1 == me0)
-    val cRep = Similarity.scoredEvalTable(corpus, "doc_id", "text", 0.8,
-      preGroups = Some(cGroups))
+    assert(Similarity.minhashEstimate(cGroups, 0.9).collect().nonEmpty)
+    val cRep = Similarity.scoredEvalTable(cGroups, 0.8)
     assert(canon(cRep) == canon(docLevel(corpus, 0.8)),
       "rep-level truth expansion must reproduce the doc-level scored table on the sf corpus")
   }

@@ -16,6 +16,15 @@ class StreamingSpec extends SparkSuite {
 
   private def ts(sec: Long): Timestamp = new Timestamp(sec * 1000L)
 
+  /** The batch near-dup pair graph of a `(doc_id, text)` corpus. */
+  private def nearDupPairs(docs: org.apache.spark.sql.DataFrame, t: Double) =
+    graft.engine.ops.Similarity.minhashNearDup(
+      graft.engine.ops.Similarity.tokenSetGroups(docs, "doc_id", "text"), t, ordered = false)
+
+  /** From-scratch clusters of a `(doc_id, text)` corpus at 0.9. */
+  private def scratchClusters(docs: org.apache.spark.sql.DataFrame) =
+    graft.engine.ops.TextPipeline.dedupClusters(docs, "doc_id", nearDupPairs(docs, 0.9))
+
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
   case class Doc(doc_id: Long, ts: Timestamp, text: String)
   case class LDoc(doc_id: Long, ts: Timestamp, lang: String, text: String)
@@ -545,8 +554,8 @@ class StreamingSpec extends SparkSuite {
     // side (the q_dedup_survivors policy) at the same threshold
     val batchDf = docs.toDF("doc_id", "text")
     val removed = graft.engine.ops.Similarity
-      .minhashNearDup(batchDf, "doc_id", "text", 0.5, ordered = false,
-        bands = 4, rowsPerBand = 4)
+      .minhashNearDup(graft.engine.ops.Similarity.tokenSetGroups(batchDf, "doc_id", "text"), 0.5,
+        ordered = false, bands = 4, rowsPerBand = 4)
       .select("doc_id_2").distinct().as[Long].collect().toSet
     val batchSurvivors = docs.map(_._1).toSet -- removed
     assert(removed.nonEmpty && batchSurvivors.nonEmpty, s"fixture must split: $removed")
@@ -849,8 +858,7 @@ class StreamingSpec extends SparkSuite {
       q.processAllAvailable()
       val ingested = fixture.take(to)
       val got = maint.current.get.as[(Long, Long)].collect().toMap
-      val scratch = graft.engine.ops.TextPipeline
-        .dedupClusters(ingested.toSeq.toDF("doc_id", "text"), "doc_id", "text", 0.9)
+      val scratch = scratchClusters(ingested.toSeq.toDF("doc_id", "text"))
         .as[(Long, Long)].collect().toMap
       assert(got == scratch,
         s"standing table must equal from-scratch clustering after ${to} docs")
@@ -891,8 +899,7 @@ class StreamingSpec extends SparkSuite {
     in.addData(fixture.drop(cut).map { case (id, t) => Doc(id, ts(id), t) }: _*)
     q2.processAllAvailable(); q2.stop()
     val got = m2.current.get.as[(Long, Long)].collect().toMap
-    val scratch = graft.engine.ops.TextPipeline
-      .dedupClusters(fixture.toSeq.toDF("doc_id", "text"), "doc_id", "text", 0.9)
+    val scratch = scratchClusters(fixture.toSeq.toDF("doc_id", "text"))
       .as[(Long, Long)].collect().toMap
     assert(got == scratch,
       "resumed maintenance must continue the from-scratch invariant across the restart")
@@ -920,9 +927,9 @@ class StreamingSpec extends SparkSuite {
     def resolve(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       graft.engine.ops.TextPipeline.latestPerKey(df, "id", "version", "version")
         .select("id", "cluster").as[(Long, Long)].collect().toMap
-    def scratch(n: Int): Map[Long, Long] = graft.engine.ops.TextPipeline
-      .dedupClusters(fixture.take(n).toSeq.toDF("doc_id", "text"), "doc_id", "text", 0.9)
-      .as[(Long, Long)].collect().toMap
+    def scratch(n: Int): Map[Long, Long] =
+      scratchClusters(fixture.take(n).toSeq.toDF("doc_id", "text"))
+        .as[(Long, Long)].collect().toMap
 
     val cut = fixture.length / 2
     in.addData(fixture.take(cut).map { case (id, t) => Doc(id, ts(id), t) }: _*)
@@ -1037,8 +1044,7 @@ class StreamingSpec extends SparkSuite {
     // WIDENED graph: {A,B,C} one family, the drift chain untouched
     val got = m2.current.get.as[(Long, Long)].collect().toMap
     val expect = graft.engine.ops.TextPipeline.dedupClusters(
-      m2.corpusDocs.get, "doc_id", "text", 0.9,
-      precomputedPairs = Some(m2.standingEdges.get))
+      m2.corpusDocs.get, "doc_id", m2.standingEdges.get)
       .as[(Long, Long)].collect().toMap
     assert(got == expect, "resumed standing table must equal from-scratch over the repaired graph")
     assert(got(1L) == got(2L) && got(2L) == got(3L))
@@ -1194,7 +1200,7 @@ class StreamingSpec extends SparkSuite {
       .join(docsTbl.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .localCheckpoint()
     val viaStream = TextPipeline.curationPipeline(corpusFromStream, "doc_id", "text",
-        docsTbl.filter(col("doc_id") < 10), Seq("lang"),
+        docsTbl.filter(col("doc_id") < 10), Seq("lang"), nearDupPairs(corpusFromStream, 0.9),
         repCaps = Some((1000L, 500L)), lmFloor = Some(32000L))
       .as[(String, String, Long, Long)].collect().toSeq
     val allBatch = graft.SparkEntry.queries("q_curation_pipeline")(spark, sfDir)
@@ -1336,9 +1342,9 @@ class StreamingSpec extends SparkSuite {
     val lm = graft.engine.ops.TextPipeline.lmTableBackoff(
       corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text")
     val thr = graft.engine.ops.TextPipeline.perplexityThresholds(
-      corpus, "doc_id", "text", "lang", lm = Some(lm))
+      corpus, "doc_id", "text", "lang", lm)
     val batch = graft.engine.ops.TextPipeline.perplexityBuckets(
-        corpus, "doc_id", "text", "lang", lm = Some(lm))
+        corpus, "doc_id", "text", "lang", lm)
       .as[(Long, String, Long, String)].collect().toSet
     val rows = corpus.as[(Long, String, String)].collect()
     val in = MemoryStream[LDoc](spark)
@@ -1462,8 +1468,9 @@ class StreamingSpec extends SparkSuite {
       (2L, "cat cat dog dog dog dog dog dog"),
       (3L, "dog bird bird bird")).toDF("doc_id", "text")
     val qs = Seq((7L, "cat dog")).toDF("query_id", "qtext")
-    val batch = graft.engine.ops.TextPipeline
-      .bm25TopK(corpus, "doc_id", "text", qs, "query_id", "qtext", 10)
+    val bm = graft.engine.ops.TextPipeline
+    val tokens = bm.docTokens(corpus, "doc_id", "text")
+    val batch = bm.bm25TopK(tokens, bm.docLengths(tokens), qs, "query_id", "qtext", 10)
       .select("doc_id", "score").as[(Long, Long)].collect().toMap
     // offline training: query-term dfs + corpus constants
     val toks = corpus.select(col("doc_id"),
